@@ -1,12 +1,21 @@
 """The extraction kernel (SURVEY.md §2.2 E17): ONE vectorized Arrow stage.
 
-``df.mapInArrow(kernel, EXTRACTED_KERNEL_SCHEMA)`` — iterator-of-batches
-form so per-task setup (broadcast rule decode, module import) happens once
-per task, then every batch crosses the JVM↔Python boundary as a single Arrow
-RecordBatch (BASELINE.json:15: "vectorized pandas/Arrow UDFs with zero
-per-row Python" — zero per-row *boundary crossings*; the per-document parse
-loop inside the batch is the irreducible row-oriented part of extraction,
-SURVEY.md §1.2).
+Every Python stage of the engine is ``df.mapInArrow(arrow_kernel(...),
+schema)`` in its iterator-of-batches form, so per-task setup (broadcast
+rule decode, module import) happens once per task, then every batch
+crosses the JVM↔Python boundary as a single Arrow RecordBatch
+(BASELINE.json:15: "vectorized pandas/Arrow UDFs with zero per-row Python"
+— zero per-row *boundary crossings*; the per-document parse loop inside
+the batch is the irreducible row-oriented part of extraction, SURVEY.md
+§1.2). ``arrow_kernel`` is that loop, written once: it hands each document
+to a per-doc function returning the document's output rows, and derives
+the batch's Arrow schema from the declared Spark schema
+(sources/schemas.py). Four kernels are calls to it:
+
+* ``run_kernel`` — the text arm (``text_rows``);
+* ``run_dual_kernel`` — text plus markdown from one parse (``dual_rows``);
+* ``run_doc_assets_kernel`` / ``run_doc_tables_kernel`` — document
+  catalogs over the rows that pass the JVM document pre-filter.
 
 The per-url digest used by the byte-identity pytest gate is computed here in
 Python (hashlib) AND re-derivable JVM-side via F.sha2 (E18) — the test suite
@@ -16,416 +25,206 @@ checks both agree.
 from __future__ import annotations
 
 import time
-from typing import Callable, Dict, Iterator, Optional
+from typing import Callable, List, Optional
 
-import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-from pyspark.sql import DataFrame
-
-from corsearch_project_spark.sources.schemas import EXTRACTED_KERNEL_SCHEMA
-from corsearch_project_spark.webextract.extract import extract_document
-from corsearch_project_spark.webextract.rules import (
-    Rule,
-    rule_for_url,
-    rules_from_plain,
+from corsearch_project_spark.sources.schemas import (
+    DOC_ASSETS_SCHEMA,
+    DOC_TABLES_SCHEMA,
+    DUAL_KERNEL_SCHEMA,
+    EXTRACTED_KERNEL_SCHEMA,
 )
+from corsearch_project_spark.webextract.docxx import docx_assets_probe, docx_tables
+from corsearch_project_spark.webextract.extract import (
+    ExtractResult,
+    _digest,
+    extract_document,
+    extract_document_both,
+)
+from corsearch_project_spark.webextract.pdfx import extract_pdf_assets, pdf_tables
+from corsearch_project_spark.webextract.rules import Rule, rule_for_url, rules_from_plain
+from corsearch_project_spark.webextract.sniff import sniff_kind
 
 KERNEL_INPUT_COLS = ("url", "html", "text")
 
+# (url, bytes, fallback text, rule) -> the document's output rows, as tuples
+# in the output schema's field order
+DocRows = Callable[[str, bytes, Optional[str], Rule], List[tuple]]
 
-def _safe_extract(url, data, fb, rule, extract_fn=None):
-    """Poison-doc guard: the core is designed never to raise (fuzz-tested),
-    but at 10^12 docs one pathological payload must not fail a multi-million
-    -doc task and poison its bucket through every retry. A raising document
-    degrades to a deterministic empty 'error' row (URL and bytes_in kept,
-    digest of the empty string) so counts and lineage still reconcile."""
-    from corsearch_project_spark.webextract.extract import ExtractResult, _digest
-
-    try:
-        return (extract_fn or extract_document)(url, data, fb, rule)
-    except Exception:
-        return ExtractResult(
-            url=url,
-            doc_kind="error",
-            text="",
-            spans=[],
-            text_sha256=_digest(""),
-            n_blocks=0,
-            n_chars=0,
-            bytes_in=len(data or b""),
-        )
+# JVM-side document pre-filter of the catalog kernels, on the binary column:
+# ``%PDF-`` anywhere in the first 2 KiB (sniff_kind's head window — a 1 KiB
+# window silently dropped PDFs behind leading whitespace/BOM padding) or the
+# zip magic at offset 0 (OOXML packages). A deliberate superset of the sniff
+# rules: the kernels re-sniff and DROP false positives (an HTML page quoting
+# "%PDF-", a non-DOCX zip), so only the document share of bytes crosses the
+# Arrow boundary and Parquet scans prune every other column.
+_DOCUMENT_ROWS = (
+    "contains(substring(html, 1, 2048), X'255044462D')"
+    " OR startswith(html, X'504B0304')"
+)
 
 
-def make_kernel(rules_bc) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """rules_bc: SparkContext.broadcast of the plain-dict rules config (E5),
-    or a plain dict (single-process/golden mode)."""
+def arrow_kernel(doc_rows: DocRows, schema: StructType, rules_bc=None):
+    """The one per-document loop, as a ``mapInArrow`` function.
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        plain = rules_bc.value if hasattr(rules_bc, "value") else (rules_bc or {})
-        rules: Dict[str, Rule] = rules_from_plain(plain)
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            datas = pdf["html"].tolist()
-            texts = pdf["text"].tolist() if "text" in pdf.columns else [None] * len(urls)
-            out = {
-                "url": [],
-                "doc_kind": [],
-                "extracted_text": [],
-                "spans": [],
-                "text_sha256": [],
-                "n_blocks": [],
-                "n_chars": [],
-                "bytes_in": [],
-                "extract_us": [],
-            }
-            for url, data, fb in zip(urls, datas, texts):
-                t0 = time.perf_counter()
-                r = _safe_extract(
-                    url,
-                    bytes(data) if data is not None else b"",
-                    fb,
-                    rule_for_url(url, rules),
-                )
-                dt_us = int((time.perf_counter() - t0) * 1e6)
-                out["url"].append(r.url)
-                out["doc_kind"].append(r.doc_kind)
-                out["extracted_text"].append(r.text)
-                out["spans"].append(
-                    [
-                        {"start": int(s), "end": int(e), "kind": k}
-                        for (s, e, k) in r.spans
-                    ]
-                )
-                out["text_sha256"].append(r.text_sha256)
-                out["n_blocks"].append(r.n_blocks)
-                out["n_chars"].append(r.n_chars)
-                out["bytes_in"].append(r.bytes_in)
-                out["extract_us"].append(dt_us)
-            yield pd.DataFrame(out)
-
-    return kernel
-
-
-def make_kernel_arrow(rules_bc, extract_fn=None):
-    """Arrow-native kernel: consumes/produces ``pyarrow.RecordBatch``
-    directly (``mapInArrow``), skipping the pandas Series round-trip on both
-    sides of the boundary — string/binary columns never materialize as
-    object-dtype Series, which measured ~10-15%% of kernel-stage time at
-    250k docs. Same per-document core, byte-identical output."""
-    import pyarrow as pa
-
-    out_schema = pa.schema(
-        [
-            pa.field("url", pa.string()),
-            pa.field("doc_kind", pa.string()),
-            pa.field("extracted_text", pa.string()),
-            pa.field(
-                "spans",
-                pa.list_(
-                    pa.struct(
-                        [
-                            pa.field("start", pa.int64()),
-                            pa.field("end", pa.int64()),
-                            pa.field("kind", pa.string()),
-                        ]
-                    )
-                ),
-            ),
-            pa.field("text_sha256", pa.string()),
-            pa.field("n_blocks", pa.int64()),
-            pa.field("n_chars", pa.int64()),
-            pa.field("bytes_in", pa.int64()),
-            pa.field("extract_us", pa.int64()),
-        ]
-    )
+    Input batches carry ``url`` and ``html`` (and ``text`` when present);
+    each output batch holds the rows ``doc_rows`` returned for the input
+    batch's documents — none, one or many per document. rules_bc is a
+    SparkContext.broadcast of the plain-dict rules config (E5), a plain
+    dict (single-process mode) or None."""
+    arrow_schema = to_arrow_schema(schema)
 
     def kernel(batches):
         plain = rules_bc.value if hasattr(rules_bc, "value") else (rules_bc or {})
-        rules: Dict[str, Rule] = rules_from_plain(plain)
+        rules = rules_from_plain(plain)
         for rb in batches:
-            names = rb.schema.names
-            urls = rb.column(names.index("url")).to_pylist()
-            datas = rb.column(names.index("html")).to_pylist()
+            urls = rb.column("url").to_pylist()
+            datas = rb.column("html").to_pylist()
             texts = (
-                rb.column(names.index("text")).to_pylist()
-                if "text" in names
-                else [None] * len(urls)
+                rb.column("text").to_pylist()
+                if "text" in rb.schema.names
+                else [None] * rb.num_rows
             )
-            cols = {name: [] for name in out_schema.names}
+            cols: List[list] = [[] for _ in arrow_schema]
             for url, data, fb in zip(urls, datas, texts):
-                t0 = time.perf_counter()
-                r = _safe_extract(
-                    url,
-                    data if data is not None else b"",
-                    fb,
-                    rule_for_url(url, rules),
-                    extract_fn,
-                )
-                dt_us = int((time.perf_counter() - t0) * 1e6)
-                cols["url"].append(r.url)
-                cols["doc_kind"].append(r.doc_kind)
-                cols["extracted_text"].append(r.text)
-                cols["spans"].append(
-                    [{"start": int(s), "end": int(e), "kind": k} for (s, e, k) in r.spans]
-                )
-                cols["text_sha256"].append(r.text_sha256)
-                cols["n_blocks"].append(r.n_blocks)
-                cols["n_chars"].append(r.n_chars)
-                cols["bytes_in"].append(r.bytes_in)
-                cols["extract_us"].append(dt_us)
+                for row in doc_rows(url, data or b"", fb, rule_for_url(url, rules)):
+                    for col, value in zip(cols, row):
+                        col.append(value)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=f.type) for f in out_schema],
-                schema=out_schema,
+                [pa.array(col, type=f.type) for col, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
             )
 
     return kernel
+
+
+def _map_docs(pages: DataFrame, doc_rows: DocRows, schema: StructType, rules_bc=None):
+    return pages.mapInArrow(arrow_kernel(doc_rows, schema, rules_bc), schema)
+
+
+def _error_result(url: str, data: bytes) -> ExtractResult:
+    """Poison-doc guard's row: the core is designed never to raise
+    (fuzz-tested), but at 10^12 docs one pathological payload must not fail
+    a multi-million-doc task and poison its bucket through every retry. A
+    raising document degrades to a deterministic empty 'error' row (URL and
+    bytes_in kept, digest of the empty string) so counts and lineage still
+    reconcile."""
+    return ExtractResult(
+        url=url, doc_kind="error", text="", spans=[], text_sha256=_digest(""),
+        n_blocks=0, n_chars=0, bytes_in=len(data),
+    )
+
+
+def _result_row(r: ExtractResult, t0: float) -> tuple:
+    extract_us = int((time.perf_counter() - t0) * 1e6)
+    spans = [{"start": int(s), "end": int(e), "kind": k} for (s, e, k) in r.spans]
+    return (
+        r.url, r.doc_kind, r.text, spans, r.text_sha256,
+        r.n_blocks, r.n_chars, r.bytes_in, extract_us,
+    )
+
+
+def text_rows(url: str, data: bytes, fb: Optional[str], rule: Rule) -> List[tuple]:
+    """Text arm: one EXTRACTED_KERNEL_SCHEMA row per document."""
+    t0 = time.perf_counter()
+    try:
+        r = extract_document(url, data, fb, rule)
+    except Exception:
+        r = _error_result(url, data)
+    return [_result_row(r, t0)]
+
+
+def dual_rows(url: str, data: bytes, fb: Optional[str], rule: Rule) -> List[tuple]:
+    """Fused dual emit: ONE tokenize+DOM per document feeds both the
+    plain-text and markdown serializations (extract_document_both), so the
+    markdown column costs one extra tree walk — not a second parse — on top
+    of the text arm. A raising document degrades to the empty row in BOTH
+    arms."""
+    t0 = time.perf_counter()
+    try:
+        r, md, md_sha = extract_document_both(url, data, fb, rule)
+    except Exception:
+        r = _error_result(url, data)
+        md, md_sha = r.text, r.text_sha256
+    return [(*_result_row(r, t0), md, md_sha)]
 
 
 def run_kernel(pages: DataFrame, rules_bc) -> DataFrame:
     """pages(url, html, text, ...) -> extracted columns (kernel schema).
 
     Selects only the three kernel input columns first so Parquet column
-    pruning keeps warc_ts/lang out of the Arrow transfer. The pandas-form
-    ``make_kernel`` is retained for single-process/golden use; the Spark
-    stage runs the Arrow-native form."""
+    pruning keeps warc_ts/lang out of the Arrow transfer."""
     inp = pages.select(*KERNEL_INPUT_COLS)
-    return inp.mapInArrow(make_kernel_arrow(rules_bc), schema=EXTRACTED_KERNEL_SCHEMA)
-
-
-def run_markdown_kernel(pages: DataFrame, rules_bc) -> DataFrame:
-    """Markdown-arm kernel (same stage shape as ``run_kernel`` — ONE
-    mapInArrow Python stage, same input projection, same poison-doc guard)
-    whose ``extracted_text`` column holds the structure-preserving markdown
-    serialization (webextract/markdown.py) instead of the flat text. Run it
-    beside — not instead of — the text kernel: the text arm carries the
-    byte-identity contract, this arm feeds training-corpus exports that
-    want headings/lists/links preserved."""
-    from corsearch_project_spark.webextract.extract import (
-        extract_document_markdown,
-    )
-
-    inp = pages.select(*KERNEL_INPUT_COLS)
-    return inp.mapInArrow(
-        make_kernel_arrow(rules_bc, extract_document_markdown),
-        schema=EXTRACTED_KERNEL_SCHEMA,
-    )
-
-
-def make_dual_kernel_arrow(rules_bc):
-    """Fused dual-emit kernel: ONE tokenize+DOM per document feeds both
-    the plain-text and markdown serializations (extract_document_both), so
-    the markdown column costs one extra tree walk — not a second parse —
-    on top of the text arm. Same poison-doc guard; a raising document
-    degrades to the empty row in BOTH arms."""
-    import pyarrow as pa
-
-    from corsearch_project_spark.webextract.extract import (
-        ExtractResult,
-        _digest,
-        extract_document_both,
-    )
-
-    out_schema = pa.schema(
-        [
-            pa.field("url", pa.string()),
-            pa.field("doc_kind", pa.string()),
-            pa.field("extracted_text", pa.string()),
-            pa.field(
-                "spans",
-                pa.list_(
-                    pa.struct(
-                        [
-                            pa.field("start", pa.int64()),
-                            pa.field("end", pa.int64()),
-                            pa.field("kind", pa.string()),
-                        ]
-                    )
-                ),
-            ),
-            pa.field("text_sha256", pa.string()),
-            pa.field("n_blocks", pa.int64()),
-            pa.field("n_chars", pa.int64()),
-            pa.field("bytes_in", pa.int64()),
-            pa.field("extract_us", pa.int64()),
-            pa.field("extracted_md", pa.string()),
-            pa.field("md_sha256", pa.string()),
-        ]
-    )
-
-    def _safe_both(url, data, fb, rule):
-        try:
-            return extract_document_both(url, data, fb, rule)
-        except Exception:
-            r = ExtractResult(
-                url=url, doc_kind="error", text="", spans=[],
-                text_sha256=_digest(""), n_blocks=0, n_chars=0,
-                bytes_in=len(data or b""),
-            )
-            return r, "", _digest("")
-
-    def kernel(batches):
-        plain = rules_bc.value if hasattr(rules_bc, "value") else (rules_bc or {})
-        rules: Dict[str, Rule] = rules_from_plain(plain)
-        for rb in batches:
-            names = rb.schema.names
-            urls = rb.column(names.index("url")).to_pylist()
-            datas = rb.column(names.index("html")).to_pylist()
-            texts = (
-                rb.column(names.index("text")).to_pylist()
-                if "text" in names
-                else [None] * len(urls)
-            )
-            cols = {name: [] for name in out_schema.names}
-            for url, data, fb in zip(urls, datas, texts):
-                t0 = time.perf_counter()
-                r, md, md_sha = _safe_both(
-                    url,
-                    data if data is not None else b"",
-                    fb,
-                    rule_for_url(url, rules),
-                )
-                dt_us = int((time.perf_counter() - t0) * 1e6)
-                cols["url"].append(r.url)
-                cols["doc_kind"].append(r.doc_kind)
-                cols["extracted_text"].append(r.text)
-                cols["spans"].append(
-                    [{"start": int(s), "end": int(e), "kind": k} for (s, e, k) in r.spans]
-                )
-                cols["text_sha256"].append(r.text_sha256)
-                cols["n_blocks"].append(r.n_blocks)
-                cols["n_chars"].append(r.n_chars)
-                cols["bytes_in"].append(r.bytes_in)
-                cols["extract_us"].append(dt_us)
-                cols["extracted_md"].append(md)
-                cols["md_sha256"].append(md_sha)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=f.type) for f in out_schema],
-                schema=out_schema,
-            )
-
-    return kernel
+    return _map_docs(inp, text_rows, EXTRACTED_KERNEL_SCHEMA, rules_bc)
 
 
 def run_dual_kernel(pages: DataFrame, rules_bc) -> DataFrame:
     """pages -> plain kernel schema + (extracted_md, md_sha256) in ONE
     mapInArrow stage; the pipeline's --with-markdown path."""
-    from corsearch_project_spark.sources.schemas import DUAL_KERNEL_SCHEMA
-
     inp = pages.select(*KERNEL_INPUT_COLS)
-    return inp.mapInArrow(make_dual_kernel_arrow(rules_bc), schema=DUAL_KERNEL_SCHEMA)
+    return _map_docs(inp, dual_rows, DUAL_KERNEL_SCHEMA, rules_bc)
 
 
 # ---------------------------------------------------------------------------
-# PDF document-assets kernel (opt-in): /Info metadata + link URIs + outline
+# Document catalogs (opt-in): PDF/DOCX assets and tables
 # ---------------------------------------------------------------------------
 
-def make_assets_kernel_arrow():
-    """Arrow kernel for the document-assets catalog: (url, html) batches
-    in, DOC_ASSETS_SCHEMA batches out. PDF rows run
-    ``pdfx.extract_pdf_assets`` (Info + links + outline); DOCX rows run
-    ``docxx.docx_core_props`` (Dublin-Core core.xml; links/outline empty).
-    Total over its input — parse failures and encrypted docs emit the
-    deterministic empty shape, never raise — but the caller is expected to
-    have pre-filtered to document rows JVM-side (see
-    ``run_doc_assets_kernel``) so other bytes never cross the boundary."""
-    import pyarrow as pa
 
-    out_schema = pa.schema(
-        [
-            pa.field("url", pa.string()),
-            pa.field("kind", pa.string()),
-            pa.field("title", pa.string()),
-            pa.field("author", pa.string()),
-            pa.field("subject", pa.string()),
-            pa.field("producer", pa.string()),
-            pa.field("created", pa.string()),
-            pa.field(
-                "links",
-                pa.list_(
-                    pa.struct(
-                        [pa.field("page", pa.int32()), pa.field("uri", pa.string())]
-                    )
-                ),
-            ),
-            pa.field(
-                "outline",
-                pa.list_(
-                    pa.struct(
-                        [pa.field("depth", pa.int32()), pa.field("title", pa.string())]
-                    )
-                ),
-            ),
-        ]
-    )
+def _document_rows(pages: DataFrame) -> DataFrame:
+    return pages.select("url", "html").where(F.expr(_DOCUMENT_ROWS))
 
-    def kernel(batches):
-        from corsearch_project_spark.webextract.docxx import docx_assets_probe
-        from corsearch_project_spark.webextract.pdfx import extract_pdf_assets
-        from corsearch_project_spark.webextract.sniff import sniff_kind
 
-        for rb in batches:
-            names = rb.schema.names
-            urls = rb.column(names.index("url")).to_pylist()
-            datas = rb.column(names.index("html")).to_pylist()
-            cols = {name: [] for name in out_schema.names}
-            for url, data in zip(urls, datas):
-                data = data if data is not None else b""
-                kind = sniff_kind(data)
-                if kind == "pdf":
-                    a = extract_pdf_assets(data)
-                elif kind == "zip":
-                    # one zip open answers membership AND core props
-                    cp = docx_assets_probe(data)
-                    if cp is None:
-                        continue  # non-DOCX zip: pre-filter false positive
-                    kind = "docx"
-                    a = {**cp, "producer": None, "links": [], "outline": []}
-                else:
-                    continue  # loose JVM pre-filter false positive
-                cols["url"].append(url)
-                cols["kind"].append(kind)
-                for k in ("title", "author", "subject", "producer", "created"):
-                    cols[k].append(a[k])
-                cols["links"].append(
-                    [{"page": int(p), "uri": u} for (p, u) in a["links"]]
-                )
-                cols["outline"].append(
-                    [{"depth": int(d), "title": t} for (d, t) in a["outline"]]
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=f.type) for f in out_schema],
-                schema=out_schema,
-            )
-
-    return kernel
+def _asset_rows(url: str, data: bytes, fb, rule) -> List[tuple]:
+    """PDF rows run ``pdfx.extract_pdf_assets`` (Info + links + outline);
+    DOCX rows run ``docxx.docx_assets_probe`` (Dublin-Core core.xml;
+    links/outline empty). Total over its input — parse failures and
+    encrypted docs emit the deterministic empty shape, never raise."""
+    kind = sniff_kind(data)
+    if kind == "pdf":
+        a = extract_pdf_assets(data)
+    elif kind == "zip":
+        # one zip open answers membership AND core props
+        cp = docx_assets_probe(data)
+        if cp is None:
+            return []  # non-DOCX zip: pre-filter false positive
+        kind = "docx"
+        a = {**cp, "producer": None, "links": [], "outline": []}
+    else:
+        return []  # loose JVM pre-filter false positive
+    return [(
+        url, kind, a["title"], a["author"], a["subject"], a["producer"], a["created"],
+        [{"page": int(p), "uri": u} for (p, u) in a["links"]],
+        [{"depth": int(d), "title": t} for (d, t) in a["outline"]],
+    )]
 
 
 def run_doc_assets_kernel(pages: DataFrame) -> DataFrame:
     """pages(url, html, ...) -> DOC_ASSETS_SCHEMA rows for document rows
-    (PDF + DOCX).
+    (PDF + DOCX), so the assets table holds exactly the document rows."""
+    return _map_docs(_document_rows(pages), _asset_rows, DOC_ASSETS_SCHEMA)
 
-    The pre-filter runs JVM-side on the binary column: ``%PDF-`` anywhere
-    in the first 2 KiB (the same head window as ``sniff.sniff_kind``) or
-    the zip magic at offset 0 (OOXML packages).
-    At crawl mix only the document share of bytes crosses the Arrow
-    boundary; Parquet scans prune every other column. The filter is
-    deliberately a superset of the sniff rules; the kernel re-sniffs and
-    DROPS false positives (an HTML page quoting "%PDF-", a non-DOCX zip),
-    so the assets table holds exactly the document rows."""
-    from pyspark.sql import functions as F
 
-    from corsearch_project_spark.sources.schemas import DOC_ASSETS_SCHEMA
-
-    # 2048-byte window = sniff_kind's head size, so the JVM filter stays a
-    # strict superset of the sniff rule even for PDFs behind ~2 KiB of
-    # leading whitespace/BOM padding (a 1 KiB window silently dropped them)
-    inp = pages.select("url", "html").where(
-        F.expr(
-            "contains(substring(html, 1, 2048), X'255044462D')"
-            " OR startswith(html, X'504B0304')"
-        )
-    )
-    return inp.mapInArrow(make_assets_kernel_arrow(), schema=DOC_ASSETS_SCHEMA)
+def _table_rows(url: str, data: bytes, fb, rule) -> List[tuple]:
+    # re-sniff before parsing (same discipline as the assets kernel): the
+    # loose JVM pre-filter passes e.g. an HTML page QUOTING "%PDF-", and
+    # running the full PdfDoc parse-and-fail on every such false positive
+    # is wasted work at crawl scale — sniff_kind is a head check.
+    kind = sniff_kind(data)
+    if kind == "zip":
+        kind, tables = "docx", docx_tables(data)
+    elif kind == "pdf":
+        tables = pdf_tables(data)
+    else:
+        return []
+    return [
+        (url, kind, tab["page"], t_i, r_i, tab["n_cols"], "|".join(row))
+        for t_i, tab in enumerate(tables)
+        for r_i, row in enumerate(tab["rows"])
+    ]
 
 
 def run_doc_tables_kernel(pages: DataFrame) -> DataFrame:
@@ -435,17 +234,13 @@ def run_doc_tables_kernel(pages: DataFrame) -> DataFrame:
     walking (webextract/docxx.py:docx_tables; page = 0, DOCX has no page
     concept).
 
-    pages(url, html, ...) -> (url, kind, page, table_idx, row_idx, n_cols,
-    cells) with cells '|'-joined in column order — one output row per table
-    row, already exploded kernel-side so no second shuffle or generator
-    stage is needed. The JVM pre-filter is the same document predicate as
-    run_doc_assets_kernel (%PDF- in the 2 KiB head window OR the PK zip
-    magic — only the document share of bytes crosses the Arrow boundary);
-    both extractors re-validate and return [] on non-document bytes,
-    unsupported encryption, or non-DOCX zips. Table-less documents emit
-    nothing — at crawl mix the relation is far smaller than its input,
-    which is why the explode happens inside the kernel instead of as an
-    ARRAY column.
+    pages(url, html, ...) -> DOC_TABLES_SCHEMA with cells '|'-joined in
+    column order — one output row per table row, already exploded
+    kernel-side so no second shuffle or generator stage is needed. Both
+    extractors re-validate and return [] on non-document bytes, unsupported
+    encryption, or non-DOCX zips. Table-less documents emit nothing — at
+    crawl mix the relation is far smaller than its input, which is why the
+    explode happens inside the kernel instead of as an ARRAY column.
 
     Kind policy: a payload is what ``sniff_kind`` says it is — the ONE
     classification the whole engine shares (extraction kernel, assets
@@ -454,69 +249,4 @@ def run_doc_tables_kernel(pages: DataFrame) -> DataFrame:
     the recovery-oriented PdfDoc scan could parse it: a table catalog
     must not disagree with the extracted table about what a url is
     (cross-kernel agreement pinned in tests/test_pdftables.py)."""
-    from pyspark.sql import functions as F
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        from corsearch_project_spark.webextract.docxx import docx_tables
-        from corsearch_project_spark.webextract.pdfx import pdf_tables
-        from corsearch_project_spark.webextract.sniff import sniff_kind
-
-        out_schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("kind", pa.string()),
-                pa.field("page", pa.int32()),
-                pa.field("table_idx", pa.int32()),
-                pa.field("row_idx", pa.int32()),
-                pa.field("n_cols", pa.int32()),
-                pa.field("cells", pa.string()),
-            ]
-        )
-        for rb in batches:
-            names = rb.schema.names
-            urls = rb.column(names.index("url")).to_pylist()
-            datas = rb.column(names.index("html")).to_pylist()
-            cols = {name: [] for name in out_schema.names}
-            for url, data in zip(urls, datas):
-                data = bytes(data or b"")
-                # re-sniff before parsing (same discipline as the assets
-                # kernel): the loose JVM pre-filter passes e.g. an HTML
-                # page QUOTING "%PDF-", and running the full PdfDoc
-                # parse-and-fail on every such false positive is wasted
-                # work at crawl scale — sniff_kind is a head check.
-                kind = sniff_kind(data)
-                if kind == "zip":
-                    kind, tables = "docx", docx_tables(data)
-                elif kind == "pdf":
-                    tables = pdf_tables(data)
-                else:
-                    continue
-                for t_i, tab in enumerate(tables):
-                    for r_i, row in enumerate(tab["rows"]):
-                        cols["url"].append(url)
-                        cols["kind"].append(kind)
-                        cols["page"].append(tab["page"])
-                        cols["table_idx"].append(t_i)
-                        cols["row_idx"].append(r_i)
-                        cols["n_cols"].append(tab["n_cols"])
-                        cols["cells"].append("|".join(row))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=f.type) for f in out_schema],
-                schema=out_schema,
-            )
-
-    inp = pages.select("url", "html").where(
-        F.expr(
-            "contains(substring(html, 1, 2048), X'255044462D')"
-            " OR startswith(html, X'504B0304')"
-        )
-    )
-    return inp.mapInArrow(
-        kernel,
-        schema=(
-            "url string, kind string, page int, table_idx int, "
-            "row_idx int, n_cols int, cells string"
-        ),
-    )
+    return _map_docs(_document_rows(pages), _table_rows, DOC_TABLES_SCHEMA)

@@ -18,15 +18,10 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from corsearch_project_spark.functions.sql import host_of
+
 DEFAULT_BUCKETS = 64
 DEFAULT_SALT = 64  # kernel shuffle keys = B×S; keys ≫ partitions => balance
-
-def host_expr(url_col: str = "url"):
-    return F.lower(
-        F.regexp_extract(
-            F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)", 1
-        )
-    )
 
 
 def with_url_bucket(df: DataFrame, b: int = DEFAULT_BUCKETS, url_col: str = "url") -> DataFrame:
@@ -41,7 +36,7 @@ def hot_hosts(pages: DataFrame, hot_frac: float = 0.05, max_hosts: int = 64) -> 
     (tiny) aggregated relation — not a separate count() pass over the
     table, which would double the scan at 10^12 rows."""
     counts = (
-        pages.select(host_expr().alias("host"))
+        pages.select(host_of("url").alias("host"))
         .groupBy("host")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -77,14 +72,3 @@ def with_salt(
     salt = F.pmod(F.xxhash64(F.col(url_col), F.lit("salt-seed-1")), F.lit(s)).cast("int")
     return df.withColumn("salt", salt)
 
-
-def repartition_for_kernel(
-    df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """Shuffle on (url_bucket, salt) ahead of the Python kernel stage so each
-    task is one bucket-shard: bounded memory, bounded skew, and the write
-    side sees rows already grouped by their output partition."""
-    cols = [F.col("url_bucket"), F.col("salt")]
-    if num_partitions:
-        return df.repartition(num_partitions, *cols)
-    return df.repartition(*cols)

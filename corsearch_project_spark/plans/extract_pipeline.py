@@ -6,23 +6,35 @@ Plan shape (one Python stage by design, SURVEY §4):
   dedupe latest-wins (partial-agg max(struct)) ──▶ bucket P1 + salt P2 ──▶
   shuffle on (url_bucket, salt) ──▶ mapInArrow kernel E17 ──▶
   re-derive url_bucket (JVM) ──▶ bucketed dynamic-overwrite write S3 ──▶
-  lineage rollup from the committed table ──▶ append lineage S4
+  lineage rollup from the committed table ──▶ append lineage S4 + snapshot
 
 Resume (§3.3): completed buckets are read from lineage and excluded with a
 literal NOT isin() filter, which prunes bucket directories at scan time when
 the input is bucket-partitioned.
+
+The incremental merge (plans/merge_pipeline.py) runs the same path: both
+pipelines read their input with ``scan_input``, extract it with
+``extract_pages`` and write their ledger with ``commit_run``. The three
+live here, and call this module's imported names, so that anything wrapping
+those names (perfbench/spans.py) sees the calls of both pipelines.
 """
 
 from __future__ import annotations
 
+import time
 import uuid
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from corsearch_project_spark.operators.kernel import run_kernel
+from corsearch_project_spark.operators.kernel import (
+    run_doc_assets_kernel,
+    run_doc_tables_kernel,
+    run_dual_kernel,
+    run_kernel,
+)
 from corsearch_project_spark.operators.partitioning import (
     DEFAULT_BUCKETS,
     DEFAULT_SALT,
@@ -30,17 +42,40 @@ from corsearch_project_spark.operators.partitioning import (
     with_salt,
     with_url_bucket,
 )
+from corsearch_project_spark.sources import snapshots
 from corsearch_project_spark.sources.io import (
     ParquetBucketedFormat,
     done_buckets,
     scan_pages,
 )
 from corsearch_project_spark.sources.lineage import lineage_rows
+from corsearch_project_spark.sources.maintenance import COMPLETE_MARKER
+from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
 from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
 
 
+class TableRoot:
+    """Relations under a table root (the ``output_path`` field of the
+    config dataclasses that derive from it)."""
+
+    def _under(self, name: str) -> str:
+        return self.output_path.rstrip("/") + "/" + name
+
+    @property
+    def extracted_path(self) -> str:
+        return self._under("extracted")
+
+    @property
+    def lineage_path(self) -> str:
+        return self._under("lineage")
+
+    @property
+    def snapshots_path(self) -> str:
+        return self._under("snapshots")
+
+
 @dataclass
-class ExtractConfig:
+class ExtractConfig(TableRoot):
     input_path: str
     output_path: str  # root; extracted under <root>/extracted, lineage under <root>/lineage
     run_id: str = ""
@@ -83,24 +118,12 @@ class ExtractConfig:
             self.run_id = uuid.uuid4().hex[:12]
 
     @property
-    def extracted_path(self) -> str:
-        return self.output_path.rstrip("/") + "/extracted"
-
-    @property
-    def lineage_path(self) -> str:
-        return self.output_path.rstrip("/") + "/lineage"
-
-    @property
-    def snapshots_path(self) -> str:
-        return self.output_path.rstrip("/") + "/snapshots"
-
-    @property
     def doc_assets_path(self) -> str:
-        return self.output_path.rstrip("/") + "/doc_assets"
+        return self._under("doc_assets")
 
     @property
     def doc_tables_path(self) -> str:
-        return self.output_path.rstrip("/") + "/doc_tables"
+        return self._under("doc_tables")
 
 
 def dedupe_latest(pages: DataFrame) -> DataFrame:
@@ -141,47 +164,55 @@ def dedupe_latest_window(pages: DataFrame) -> DataFrame:
     )
 
 
-def run_extract(
-    spark: SparkSession,
-    cfg: ExtractConfig,
-    rules: Optional[Dict[str, Rule]] = None,
-) -> Dict[str, object]:
-    import time
+class Phases(dict):
+    """Wall seconds per pipeline phase: ``mark(name)`` closes the phase that
+    started at the previous mark (or at construction)."""
 
-    phases: Dict[str, float] = {}
-    t_phase = time.perf_counter()
+    def __init__(self) -> None:
+        super().__init__()
+        self._t = time.perf_counter()
 
-    def mark(name: str) -> None:
-        nonlocal t_phase
+    def mark(self, name: str) -> None:
         now = time.perf_counter()
-        phases[name] = round(now - t_phase, 3)
-        t_phase = now
+        self[name] = round(now - self._t, 3)
+        self._t = now
 
-    fmt = ParquetBucketedFormat(cfg.max_records_per_file)
-    if cfg.input_format == "warc":
+
+def scan_input(spark: SparkSession, path: str, input_format: str, buckets: int) -> DataFrame:
+    """The input pages — a parquet table, or raw WARC dumps — with their
+    url_bucket (P1)."""
+    if input_format == "warc":
         from corsearch_project_spark.sources.warc import read_warc
 
-        pages = read_warc(spark, cfg.input_path)
+        pages = read_warc(spark, path)
     else:
-        pages = scan_pages(spark, cfg.input_path)
+        pages = scan_pages(spark, path)
+    return with_url_bucket(pages, buckets)
 
-    skipped: List[int] = []
-    if cfg.resume:
-        skipped = done_buckets(spark, fmt, cfg.lineage_path, cfg.run_id)
 
-    pages = with_url_bucket(pages, cfg.buckets)
-    if skipped:
-        pages = pages.where(~F.col("url_bucket").isin(skipped))
-    if cfg.bucket_whitelist is not None:
-        pages = pages.where(F.col("url_bucket").isin(list(cfg.bucket_whitelist)))
+class Extraction(NamedTuple):
+    extracted: DataFrame  # kernel output with url_bucket re-derived JVM-side
+    pages: DataFrame  # the deduped, salted pages the kernel consumed
+    hot: List[str]  # hot hosts found on the input
 
+
+def extract_pages(
+    spark: SparkSession,
+    pages: DataFrame,
+    cfg,
+    rules: Optional[Dict[str, Rule]],
+    with_markdown: bool = False,
+) -> Extraction:
+    """The shared prelude: hot hosts, latest-wins dedupe, salt, the kernel
+    shuffle and the ONE Python stage, over bucketed ``pages``. ``cfg``
+    supplies buckets, salt, hot_frac and kernel_partitions. Spark runs one
+    job here (hot_hosts); the rest is plan construction."""
     # Hot-host detection runs on the PRE-dedupe relation: projecting just
     # `url` lets Parquet skip the fat `html` binary column entirely, and
     # avoids paying the dedupe window's shuffle twice. Re-crawl duplicates
     # inflate per-host counts slightly, which only makes the skew heuristic
     # more conservative — exactly what we want from a skew detector.
     hot = hot_hosts(pages.select("url"), cfg.hot_frac)
-    mark("hot_hosts")
 
     # Project BEFORE deduping: max(struct) packs every input column into the
     # aggregate, which defeats Catalyst's column pruning through the agg —
@@ -202,16 +233,80 @@ def run_extract(
     )
     shuffled = sel.repartition(n_kernel, *part_cols)
 
-    rules_plain = rules_to_plain(rules or {})
-    rules_bc = spark.sparkContext.broadcast(rules_plain)
+    rules_bc = spark.sparkContext.broadcast(rules_to_plain(rules or {}))
+    kernel = run_dual_kernel if with_markdown else run_kernel
+    extracted = with_url_bucket(kernel(shuffled, rules_bc), cfg.buckets)
+    return Extraction(extracted, pages, hot)
 
-    if cfg.with_markdown:
-        from corsearch_project_spark.operators.kernel import run_dual_kernel
 
-        extracted = run_dual_kernel(shuffled, rules_bc)
-    else:
-        extracted = run_kernel(shuffled, rules_bc)
-    extracted = with_url_bucket(extracted, cfg.buckets)  # re-derived JVM-side
+def _require_marker(spark: SparkSession, path: str) -> None:
+    """Ledger directories must carry Spark's ``_SUCCESS`` marker:
+    maintenance.recover_swap judges a ledger complete by it, so a
+    deployment that disables markers would turn crash recovery into a
+    silent no-op. Fail the commit loudly instead."""
+    sc = spark.sparkContext
+    marker = sc._jvm.org.apache.hadoop.fs.Path(path, COMPLETE_MARKER)
+    if not marker.getFileSystem(sc._jsc.hadoopConfiguration()).exists(marker):
+        raise RuntimeError(
+            f"{path} has no {COMPLETE_MARKER} marker after a ledger append; "
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs must stay true"
+        )
+
+
+def commit_run(
+    spark: SparkSession,
+    fmt: ParquetBucketedFormat,
+    cfg: TableRoot,
+    operation: str,
+    input_split: str,
+    buckets: Optional[Sequence[int]] = None,
+    skip: Sequence[int] = (),
+) -> Tuple[list, Optional[dict]]:
+    """Commit the ledger of a run whose data write has landed.
+
+    ONE job over the committed table (only ``buckets`` of it when given)
+    computes the per-bucket lineage rows (B rows — tiny, collected); rows
+    of ``skip`` buckets, committed by an earlier attempt of the same run,
+    are dropped. The rest are appended to lineage, then summarized in one
+    snapshot row. ``cfg`` supplies run_id and the table paths. Returns
+    (lineage rows, snapshot); nothing is appended and the snapshot is None
+    when no rows remain."""
+    committed = fmt.read_extracted(spark, cfg.extracted_path)
+    lin = lineage_rows(committed, cfg.run_id, input_split, buckets=buckets).collect()
+    skipped = set(skip)
+    rows = [r for r in lin if r["url_bucket"] not in skipped]
+    if not rows:
+        return rows, None
+    fmt.append_lineage(
+        spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1), cfg.lineage_path
+    )
+    _require_marker(spark, cfg.lineage_path)
+    snap = snapshots.append_snapshot(
+        spark, cfg.snapshots_path, cfg.run_id, operation, [r.asDict() for r in rows]
+    )
+    _require_marker(spark, cfg.snapshots_path)
+    return rows, snap
+
+
+def run_extract(
+    spark: SparkSession,
+    cfg: ExtractConfig,
+    rules: Optional[Dict[str, Rule]] = None,
+) -> Dict[str, object]:
+    phases = Phases()
+    fmt = ParquetBucketedFormat(cfg.max_records_per_file)
+    pages = scan_input(spark, cfg.input_path, cfg.input_format, cfg.buckets)
+
+    skipped: List[int] = []
+    if cfg.resume:
+        skipped = done_buckets(spark, fmt, cfg.lineage_path, cfg.run_id)
+    if skipped:
+        pages = pages.where(~F.col("url_bucket").isin(skipped))
+    if cfg.bucket_whitelist is not None:
+        pages = pages.where(F.col("url_bucket").isin(list(cfg.bucket_whitelist)))
+
+    extracted, pages, hot = extract_pages(spark, pages, cfg, rules, cfg.with_markdown)
+    phases.mark("hot_hosts")
 
     # Write-clustering exchange: the kernel ran on fine-grained (bucket,
     # salt) partitions for CPU balance; regroup rows by bucket before the
@@ -219,14 +314,10 @@ def run_extract(
     # this, files = tasks × buckets — small-file explosion that made the
     # lineage read-back the slowest stage). Same shape as Iceberg's
     # pre-write distribution ("hash" write.distribution-mode).
-    extracted = extracted.repartition(cfg.buckets, "url_bucket")
-
-    fmt.write_extracted(extracted, cfg.extracted_path)
-    mark("kernel_and_write")
+    fmt.write_extracted(extracted.repartition(cfg.buckets, "url_bucket"), cfg.extracted_path)
+    phases.mark("kernel_and_write")
 
     if cfg.with_doc_assets:
-        from corsearch_project_spark.operators.kernel import run_doc_assets_kernel
-
         # over the deduped pages relation (same rows the main kernel saw);
         # the JVM pre-filter keeps non-document bytes out of the Python stage
         assets = run_doc_assets_kernel(pages.select("url", "html"))
@@ -234,53 +325,26 @@ def run_extract(
         fmt.write_extracted(
             assets.repartition(cfg.buckets, "url_bucket"), cfg.doc_assets_path
         )
-        mark("doc_assets")
+        phases.mark("doc_assets")
 
     if cfg.with_doc_tables:
-        from corsearch_project_spark.operators.kernel import run_doc_tables_kernel
-
         tables = run_doc_tables_kernel(pages.select("url", "html"))
         tables = with_url_bucket(tables, cfg.buckets)
         fmt.write_extracted(
             tables.repartition(cfg.buckets, "url_bucket"), cfg.doc_tables_path
         )
-        mark("doc_tables")
+        phases.mark("doc_tables")
 
-    # ONE job over the committed table computes every post-commit artifact:
-    # per-bucket lineage rows are collected (B rows — tiny), the bucket list
-    # and doc totals are derived from them driver-side, and the lineage
-    # append writes the already-collected rows back without recomputing.
-    committed = fmt.read_extracted(spark, cfg.extracted_path)
-    lin_all = lineage_rows(committed, cfg.run_id, cfg.input_path).collect()
-    mark("lineage_rollup")
-    skipped_set = set(skipped)
-    new_rows = [r for r in lin_all if r["url_bucket"] not in skipped_set]
-    run_buckets = sorted(r["url_bucket"] for r in new_rows)
-    if new_rows:
-        from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
-
-        fmt.append_lineage(
-            spark.createDataFrame(new_rows, LINEAGE_SCHEMA).coalesce(1),
-            cfg.lineage_path,
-        )
-
-    snap = None
-    if new_rows:
-        from corsearch_project_spark.sources.snapshots import append_snapshot
-
-        snap = append_snapshot(
-            spark,
-            cfg.snapshots_path,
-            cfg.run_id,
-            "resume-append" if cfg.resume else "overwrite",
-            [r.asDict() for r in new_rows],
-        )
-    mark("lineage_append")
+    operation = "resume-append" if cfg.resume else "overwrite"
+    new_rows, snap = commit_run(
+        spark, fmt, cfg, operation, cfg.input_path, skip=skipped
+    )
+    phases.mark("lineage_append")
     return {
         "run_id": cfg.run_id,
         "snapshot": snap,
         "phase_wall_s": phases,
-        "buckets_written": run_buckets,
+        "buckets_written": sorted(r["url_bucket"] for r in new_rows),
         "buckets_skipped": skipped,
         "hot_hosts": hot,
         "docs_out": sum(r["doc_count"] for r in new_rows),

@@ -6,8 +6,9 @@ crawl segment carries a mix of brand-new urls and re-crawls of known urls.
 Re-extracting the whole table per segment is O(table); this job is
 O(increment + touched buckets):
 
-  1. dedupe + extract the increment through the SAME kernel path as
-     run_extract (per-url output provably byte-identical to a full run);
+  1. dedupe + extract the increment through the SAME prelude as
+     run_extract (extract_pipeline.extract_pages — per-url output provably
+     byte-identical to a full run);
   2. classify each extracted row against the existing table by url —
      `new` (url absent) or `updated` (text_sha256 differs); rows whose
      digest is unchanged are dropped (a re-crawl of identical content
@@ -18,10 +19,11 @@ O(increment + touched buckets):
      rewritten (the manual copy-on-write MERGE an Iceberg deployment gets
      from `MERGE INTO` — same TableFormat seam, sources/io.py);
   4. recompute lineage rows for exactly the rewritten buckets and append
-     a `merge-increment` snapshot, keeping checkpoint/validate semantics:
-     `jobs/validate_table.py --run-id <merge-run>` verifies the rewritten
-     buckets (earlier runs' lineage rows for those buckets describe
-     superseded snapshots, as in any versioned table).
+     a `merge-increment` snapshot (extract_pipeline.commit_run), keeping
+     checkpoint/validate semantics: `jobs/validate_table.py --run-id
+     <merge-run>` verifies the rewritten buckets (earlier runs' lineage
+     rows for those buckets describe superseded snapshots, as in any
+     versioned table).
 
 At 10^12 docs: the existing-table read is partition-pruned to touched
 buckets (url_bucket isin-filter on the partition column), the url
@@ -32,30 +34,38 @@ table.
 
 from __future__ import annotations
 
-import time
+import uuid
 from dataclasses import dataclass
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from corsearch_project_spark.operators.kernel import run_kernel
-from corsearch_project_spark.operators.partitioning import (
+from corsearch_project_spark.plans.extract_pipeline import (
+    DEFAULT_BUCKETS,
+    DEFAULT_SALT,
+    Phases,
+    TableRoot,
+    commit_run,
+    extract_pages,
+    scan_input,
+)
+from corsearch_project_spark.sources.io import ParquetBucketedFormat
+from corsearch_project_spark.webextract.rules import Rule
+
+# Unused here, but perfbench/spans.py wraps these seven names on this module.
+from corsearch_project_spark.operators.kernel import run_kernel  # noqa: F401
+from corsearch_project_spark.operators.partitioning import (  # noqa: F401
     hot_hosts,
     with_salt,
     with_url_bucket,
 )
-from corsearch_project_spark.plans.extract_pipeline import (
-    DEFAULT_BUCKETS,
-    DEFAULT_SALT,
-    dedupe_latest,
-)
-from corsearch_project_spark.sources.io import ParquetBucketedFormat, scan_pages
-from corsearch_project_spark.sources.lineage import lineage_rows
-from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
+from corsearch_project_spark.plans.extract_pipeline import dedupe_latest  # noqa: F401
+from corsearch_project_spark.sources.io import scan_pages  # noqa: F401
+from corsearch_project_spark.sources.lineage import lineage_rows  # noqa: F401
 
 
 @dataclass
-class MergeConfig:
+class MergeConfig(TableRoot):
     increment_path: str
     output_path: str  # existing table root (extracted/lineage/snapshots under it)
     run_id: str = ""
@@ -68,21 +78,7 @@ class MergeConfig:
 
     def __post_init__(self):
         if not self.run_id:
-            import uuid
-
             self.run_id = "m" + uuid.uuid4().hex[:11]
-
-    @property
-    def extracted_path(self) -> str:
-        return self.output_path.rstrip("/") + "/extracted"
-
-    @property
-    def lineage_path(self) -> str:
-        return self.output_path.rstrip("/") + "/lineage"
-
-    @property
-    def snapshots_path(self) -> str:
-        return self.output_path.rstrip("/") + "/snapshots"
 
 
 _EXTRACTED_COLS = [
@@ -104,34 +100,10 @@ def run_merge(
     cfg: MergeConfig,
     rules: Optional[Dict[str, Rule]] = None,
 ) -> Dict[str, object]:
-    phases: Dict[str, float] = {}
-    t_phase = time.perf_counter()
-
-    def mark(name: str) -> None:
-        nonlocal t_phase
-        now = time.perf_counter()
-        phases[name] = round(now - t_phase, 3)
-        t_phase = now
-
+    phases = Phases()
     fmt = ParquetBucketedFormat(cfg.max_records_per_file)
-    if cfg.input_format == "warc":
-        from corsearch_project_spark.sources.warc import read_warc
-
-        inc = read_warc(spark, cfg.increment_path)
-    else:
-        inc = scan_pages(spark, cfg.increment_path)
-
-    inc = with_url_bucket(inc, cfg.buckets)
-    hot = hot_hosts(inc.select("url"), cfg.hot_frac)
-    inc = dedupe_latest(inc.select("url", "warc_ts", "html", "text", "url_bucket"))
-    inc = with_salt(inc, hot, cfg.salt)
-    sel = inc.select("url", "html", "text", "url_bucket", "salt")
-    n_kernel = cfg.kernel_partitions or max(
-        cfg.buckets, 2 * spark.sparkContext.defaultParallelism
-    )
-    shuffled = sel.repartition(n_kernel, F.col("url_bucket"), F.col("salt"))
-    rules_bc = spark.sparkContext.broadcast(rules_to_plain(rules or {}))
-    new_ext = with_url_bucket(run_kernel(shuffled, rules_bc), cfg.buckets).persist()
+    inc = scan_input(spark, cfg.increment_path, cfg.input_format, cfg.buckets)
+    new_ext = extract_pages(spark, inc, cfg, rules).extracted.persist()
 
     # Buckets the increment lands in — partition-prunes every read of the
     # existing table below. B is bounded, so a driver-side literal list
@@ -139,7 +111,7 @@ def run_merge(
     touched = sorted(
         r["url_bucket"] for r in new_ext.select("url_bucket").distinct().collect()
     )
-    mark("extract_increment")
+    phases.mark("extract_increment")
 
     existing = fmt.read_extracted(spark, cfg.extracted_path)
     ex_touched = existing.where(F.col("url_bucket").isin(touched))
@@ -163,7 +135,7 @@ def run_merge(
     ch_buckets = sorted(
         r["url_bucket"] for r in changed.select("url_bucket").distinct().collect()
     )
-    mark("classify")
+    phases.mark("classify")
 
     if not ch_buckets:
         new_ext.unpersist()
@@ -190,29 +162,12 @@ def run_merge(
     # Dynamic partition overwrite: only the url_bucket partitions present
     # in `merged` (= ch_buckets) are replaced on disk.
     fmt.write_extracted(merged, cfg.extracted_path)
-    mark("rewrite_buckets")
+    phases.mark("rewrite_buckets")
 
-    committed = fmt.read_extracted(spark, cfg.extracted_path).where(
-        F.col("url_bucket").isin(ch_buckets)
-    )
-    lin = lineage_rows(
-        committed, cfg.run_id, cfg.increment_path, buckets=ch_buckets
-    ).collect()
-    from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
-
-    fmt.append_lineage(
-        spark.createDataFrame(lin, LINEAGE_SCHEMA).coalesce(1), cfg.lineage_path
-    )
-    from corsearch_project_spark.sources.snapshots import append_snapshot
-
-    snap = append_snapshot(
-        spark,
-        cfg.snapshots_path,
-        cfg.run_id,
-        "merge-increment",
-        [r.asDict() for r in lin],
-    )
-    mark("lineage_append")
+    snap = commit_run(
+        spark, fmt, cfg, "merge-increment", cfg.increment_path, buckets=ch_buckets
+    )[1]
+    phases.mark("lineage_append")
     new_ext.unpersist()
     changed.unpersist()
     return {

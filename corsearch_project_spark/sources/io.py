@@ -31,12 +31,6 @@ def scan_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
-def scan_pages_bucketed(spark: SparkSession, path: str) -> DataFrame:
-    """Scan a bucketed pages table (written with partitionBy url_bucket);
-    url_bucket comes back as a partition column usable for pruning."""
-    return spark.read.parquet(path)
-
-
 class ParquetBucketedFormat:
     """The TableFormat seam (SURVEY §7 hard-part 5)."""
 

@@ -120,3 +120,18 @@ DOC_ASSETS_SCHEMA = T.StructType(
         ),
     ]
 )
+
+
+# Document-tables kernel (opt-in --with-doc-tables, E24): one row per table
+# row, cells '|'-joined in column order; page is 0 for DOCX.
+DOC_TABLES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), True),
+        T.StructField("kind", T.StringType(), True),
+        T.StructField("page", T.IntegerType(), True),
+        T.StructField("table_idx", T.IntegerType(), True),
+        T.StructField("row_idx", T.IntegerType(), True),
+        T.StructField("n_cols", T.IntegerType(), True),
+        T.StructField("cells", T.StringType(), True),
+    ]
+)

@@ -107,42 +107,6 @@ def extract_document(
     )
 
 
-def extract_document_markdown(
-    url: str,
-    data: Optional[bytes],
-    fallback_text: Optional[str],
-    rule: Rule = DEFAULT_RULE,
-) -> "ExtractResult":
-    """Markdown arm of the kernel: identical sniff/guard/decode path, but
-    HTML renders through ``webextract.markdown.extract_markdown`` (same
-    block SELECTION as the text arm — pinned by tests — different
-    serialization). Non-HTML kinds reuse the plain-text arm verbatim:
-    pdfx/docxx emit paragraph text already, and inventing heading levels
-    from font sizes would be guesswork, not structure the document declared.
-    The result's ``text`` field holds the markdown; ``text_sha256`` is the
-    markdown digest (the plain arm's digest is the byte-identity contract,
-    this one is the markdown table's own lineage key)."""
-    data = data or b""
-    if len(data) > rule.max_doc_bytes:
-        return extract_document(url, data, fallback_text, rule)
-    if sniff_kind(data) != "html":
-        return extract_document(url, data, fallback_text, rule)
-    from corsearch_project_spark.webextract.markdown import extract_markdown
-
-    src = decode_bytes(data, rule.charset_override)
-    md, spans = extract_markdown(src, rule)
-    return ExtractResult(
-        url=url,
-        doc_kind="html",
-        text=md,
-        spans=list(spans),
-        text_sha256=_digest(md),
-        n_blocks=len(spans),
-        n_chars=len(md),
-        bytes_in=len(data),
-    )
-
-
 def extract_document_both(
     url: str,
     data: Optional[bytes],
@@ -156,8 +120,10 @@ def extract_document_both(
     markdown_from_dom) — enabling the markdown column costs one extra walk
     per document, not a second parse (the parse dominates kernel time).
     The plain result is byte-identical to ``extract_document``'s (pinned
-    by tests); non-HTML kinds reuse the plain text as the markdown arm,
-    same contract as ``extract_document_markdown``."""
+    by tests). Non-HTML kinds reuse the plain text as the markdown arm:
+    pdfx/docxx emit paragraph text already, and inventing heading levels
+    from font sizes would be guesswork, not structure the document
+    declared."""
     data = data or b""
     if len(data) <= rule.max_doc_bytes and sniff_kind(data) == "html":
         from corsearch_project_spark.webextract.htmlx import (

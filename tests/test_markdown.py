@@ -144,44 +144,35 @@ def test_fuzz_never_crashes_and_is_deterministic():
 
 
 def test_markdown_kernel_spark_stage(spark):
-    """Spark arm: run_markdown_kernel keeps the one-Python-stage contract,
+    """Spark arm: the dual kernel keeps the one-Python-stage contract,
     emits markdown for HTML rows, and falls back to the plain arm for
-    non-HTML kinds (identical rows there)."""
+    non-HTML kinds (identical text there)."""
     from corsearch_project_spark.fixtures.gen_pages import (
         default_rules,
         gen_pages,
         pages_to_pandas,
     )
-    from corsearch_project_spark.operators.kernel import (
-        run_kernel,
-        run_markdown_kernel,
-    )
+    from corsearch_project_spark.operators.kernel import run_dual_kernel
     from corsearch_project_spark.webextract.rules import rules_to_plain
 
     pages = spark.createDataFrame(pages_to_pandas(gen_pages(60, seed=31)))
     rules_bc = spark.sparkContext.broadcast(rules_to_plain(default_rules()))
-    md_df = run_markdown_kernel(pages, rules_bc)
+    md_df = run_dual_kernel(pages, rules_bc)
 
     plan = md_df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") + plan.count("PythonMapInArrow") == 1
     assert "BatchEvalPython" not in plan
 
-    md_rows = {r["url"]: r for r in md_df.collect()}
-    txt_rows = {r["url"]: r for r in run_kernel(pages, rules_bc).collect()}
-    assert set(md_rows) == set(txt_rows)
+    rows = md_df.collect()
+    assert len(rows) == pages.count()
     n_decorated = 0
-    for url, mr in md_rows.items():
-        tr = txt_rows[url]
-        assert mr["doc_kind"] == tr["doc_kind"]
-        if mr["doc_kind"] != "html":
+    for r in rows:
+        if r["doc_kind"] != "html":
             # non-HTML kinds reuse the plain arm verbatim
-            assert mr["extracted_text"] == tr["extracted_text"]
-            assert mr["text_sha256"] == tr["text_sha256"]
-        else:
-            # selection identical -> same spans either way
-            assert mr["spans"] == tr["spans"]
-            if any(tok in mr["extracted_text"] for tok in ("# ", "- ", "](")):
-                n_decorated += 1
+            assert r["extracted_md"] == r["extracted_text"]
+            assert r["md_sha256"] == r["text_sha256"]
+        elif any(tok in r["extracted_md"] for tok in ("# ", "- ", "](")):
+            n_decorated += 1
     assert n_decorated > 5  # the synthetic corpus is heading/list/link-rich
 
 

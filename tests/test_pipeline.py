@@ -155,33 +155,91 @@ def test_skew_salting_preserves_output(spark, tmp_path):
     assert la == lb
 
 
-def test_kernel_poison_doc_degrades_to_error_row(spark, monkeypatch):
+@pytest.mark.parametrize(
+    "arm, doc_rows, schema, core",
+    [
+        pytest.param("text", "text_rows", "EXTRACTED_KERNEL_SCHEMA", "extract_document", id="text"),
+        pytest.param("dual", "dual_rows", "DUAL_KERNEL_SCHEMA", "extract_document_both", id="dual"),
+    ],
+)
+def test_kernel_poison_doc_degrades_to_error_row(monkeypatch, arm, doc_rows, schema, core):
     """A document that makes the core raise must become a deterministic
-    'error' row, not a task failure (10^12-doc poison-doc guard)."""
-    import pandas as pd
+    'error' row, not a task failure (10^12-doc poison-doc guard) — in the
+    text kernel and in the dual (markdown) kernel."""
+    import pyarrow as pa
 
     from corsearch_project_spark.operators import kernel as K
+    from corsearch_project_spark.sources import schemas
 
-    real = K.extract_document
+    real = getattr(K, core)
 
     def exploding(url, data, fb, rule):
         if url.endswith("/poison"):
             raise ValueError("boom")
         return real(url, data, fb, rule)
 
-    monkeypatch.setattr(K, "extract_document", exploding)
-    pdf = pd.DataFrame(
+    monkeypatch.setattr(K, core, exploding)
+    rb = pa.RecordBatch.from_pydict(
         {
             "url": ["http://x.example/ok", "http://x.example/poison"],
             "html": [b"<html><body><p>fine body text that scores well enough to keep.</p></body></html>", b"<p>x</p>"],
-            "text": [None, None],
+            "text": pa.array([None, None], type=pa.string()),
         }
     )
-    out = pd.concat(list(K.make_kernel({})([pdf])), ignore_index=True)
-    by_url = {r["url"]: r for _, r in out.iterrows()}
-    assert by_url["http://x.example/poison"]["doc_kind"] == "error"
-    assert by_url["http://x.example/poison"]["extracted_text"] == ""
+    kernel = K.arrow_kernel(getattr(K, doc_rows), getattr(schemas, schema), {})
+    by_url = {r["url"]: r for b in kernel(iter([rb])) for r in b.to_pylist()}
+    poison = by_url["http://x.example/poison"]
+    assert poison["doc_kind"] == "error"
+    assert poison["extracted_text"] == ""
+    assert poison["bytes_in"] == len(b"<p>x</p>")
     assert by_url["http://x.example/ok"]["doc_kind"] == "html"
+    if arm == "dual":
+        assert poison["extracted_md"] == ""
+        assert poison["md_sha256"] == poison["text_sha256"]
+        assert by_url["http://x.example/ok"]["extracted_md"]
+
+
+def test_ledger_commit_requires_success_marker(spark, tmp_path):
+    """Crash recovery (maintenance.recover_swap) judges a ledger complete by
+    its _SUCCESS marker, so a commit that cannot leave one must fail
+    loudly instead of writing a ledger recovery would ignore."""
+    src = _write_pages(spark, tmp_path, gen_pages(40, seed=13))
+    out = os.path.join(str(tmp_path), "out")
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    prior = conf.get(key)
+    conf.set(key, "false")
+    try:
+        with pytest.raises(RuntimeError, match="_SUCCESS"):
+            run_extract(spark, ExtractConfig(src, out, run_id="NM", buckets=4))
+    finally:
+        if prior is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prior)
+    assert not os.path.exists(os.path.join(out, "lineage", "_SUCCESS"))
+    # with markers back on, the same table commits normally
+    rep = run_extract(spark, ExtractConfig(src, out, run_id="NM2", buckets=4))
+    assert rep["snapshot"]["seq"] == 0
+
+
+def test_bench_tracer_targets_resolve():
+    """perfbench/spans.py wraps (owner, attr) pairs on the pipeline modules;
+    a refactor that drops one of those names must fail here, not turn
+    `--trace 1` into a silent no-op."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "spans.py")
+    spec = importlib.util.spec_from_file_location("perfbench_spans", path)
+    spans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(spans)
+    assert spans._TARGETS
+    missing = [
+        (getattr(owner, "__name__", owner), attr)
+        for owner, attr, _ in spans._TARGETS
+        if not callable(getattr(owner, attr, None))
+    ]
+    assert not missing, missing
 
 
 def test_snapshot_ledger_grows_and_reconciles(spark, tmp_path, pages_parquet=None):

@@ -89,33 +89,18 @@ def test_local_supplier_volume_plan_broadcasts_dims_no_cartesian(spark):
 
 def test_pipeline_has_exactly_one_python_stage_and_pruned_kernel_input(spark, tmp_path):
     from corsearch_project_spark.fixtures.gen_pages import default_rules, gen_pages, pages_to_pandas
-    from corsearch_project_spark.operators.kernel import run_kernel
-    from corsearch_project_spark.operators.partitioning import (
-        repartition_for_kernel,
-        with_salt,
-        with_url_bucket,
+    from corsearch_project_spark.plans.extract_pipeline import (
+        ExtractConfig,
+        extract_pages,
+        scan_input,
     )
-    from corsearch_project_spark.plans.extract_pipeline import dedupe_latest
-    from corsearch_project_spark.sources.io import scan_pages
-    from corsearch_project_spark.webextract.rules import rules_to_plain
 
     src = os.path.join(str(tmp_path), "pages")
     spark.createDataFrame(pages_to_pandas(gen_pages(50, seed=5))).write.parquet(src)
 
-    pages = with_salt(
-        dedupe_latest(
-            with_url_bucket(scan_pages(spark, src), 16).select(
-                "url", "warc_ts", "html", "text", "url_bucket"
-            )
-        ),
-        None,
-        8,
-    )
-    shuffled = repartition_for_kernel(
-        pages.select("url", "html", "text", "url_bucket", "salt"), 8
-    )
-    rules_bc = spark.sparkContext.broadcast(rules_to_plain(default_rules()))
-    extracted = with_url_bucket(run_kernel(shuffled, rules_bc), 16)
+    cfg = ExtractConfig(src, str(tmp_path), buckets=16, salt=8, kernel_partitions=8)
+    pages = scan_input(spark, src, cfg.input_format, cfg.buckets)
+    extracted = extract_pages(spark, pages, cfg, default_rules()).extracted
 
     plan_tree = plan_of(extracted, "simple")
     # exactly one Python stage (BASELINE.json:15 'zero per-row Python' —
@@ -148,15 +133,13 @@ def test_lsh_plans_avoid_cartesian(spark):
 def test_resume_prunes_bucket_partitions(spark, tmp_path):
     """The resume filter on url_bucket must become a PartitionFilter on the
     bucket-partitioned layout (completed buckets are never read)."""
-    from corsearch_project_spark.sources.io import scan_pages_bucketed
-
     src = os.path.join(str(tmp_path), "bucketed")
     df = spark.range(100).select(
         F.col("id").alias("x"), (F.col("id") % 8).cast("int").alias("url_bucket")
     )
     df.write.partitionBy("url_bucket").parquet(src)
 
-    pruned = scan_pages_bucketed(spark, src).where(~F.col("url_bucket").isin([0, 1, 2]))
+    pruned = spark.read.parquet(src).where(~F.col("url_bucket").isin([0, 1, 2]))
     plan = plan_of(pruned)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf and "url_bucket" in pf[0], plan
