@@ -6,7 +6,8 @@ Plan shape (one Python stage by design, SURVEY §4):
   dedupe latest-wins (partial-agg max(struct)) ──▶ bucket P1 + salt P2 ──▶
   shuffle on (url_bucket, salt) ──▶ mapInArrow kernel E17 ──▶
   re-derive url_bucket (JVM) ──▶ bucketed dynamic-overwrite write S3 ──▶
-  lineage rollup from the committed table ──▶ append lineage S4 + snapshot
+  lineage rollup from the committed table ──▶ driver-written lineage S4 +
+  snapshot files
 
 Resume (§3.3): completed buckets are read from lineage and excluded with a
 literal NOT isin() filter, which prunes bucket directories at scan time when
@@ -49,8 +50,6 @@ from corsearch_project_spark.sources.io import (
     scan_pages,
 )
 from corsearch_project_spark.sources.lineage import lineage_rows
-from corsearch_project_spark.sources.maintenance import COMPLETE_MARKER
-from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
 from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
 
 
@@ -239,20 +238,6 @@ def extract_pages(
     return Extraction(extracted, pages, hot)
 
 
-def _require_marker(spark: SparkSession, path: str) -> None:
-    """Ledger directories must carry Spark's ``_SUCCESS`` marker:
-    maintenance.recover_swap judges a ledger complete by it, so a
-    deployment that disables markers would turn crash recovery into a
-    silent no-op. Fail the commit loudly instead."""
-    sc = spark.sparkContext
-    marker = sc._jvm.org.apache.hadoop.fs.Path(path, COMPLETE_MARKER)
-    if not marker.getFileSystem(sc._jsc.hadoopConfiguration()).exists(marker):
-        raise RuntimeError(
-            f"{path} has no {COMPLETE_MARKER} marker after a ledger append; "
-            "mapreduce.fileoutputcommitter.marksuccessfuljobs must stay true"
-        )
-
-
 def commit_run(
     spark: SparkSession,
     fmt: ParquetBucketedFormat,
@@ -267,24 +252,23 @@ def commit_run(
     ONE job over the committed table (only ``buckets`` of it when given)
     computes the per-bucket lineage rows (B rows — tiny, collected); rows
     of ``skip`` buckets, committed by an earlier attempt of the same run,
-    are dropped. The rest are appended to lineage, then summarized in one
-    snapshot row. ``cfg`` supplies run_id and the table paths. Returns
-    (lineage rows, snapshot); nothing is appended and the snapshot is None
-    when no rows remain."""
+    are dropped. The rest are written from the driver, with no Spark job:
+    one lineage file, then one snapshot file named by the next seq
+    (sources/snapshots.py). Both are created exclusively and leave the
+    ``_SUCCESS`` marker; a concurrent commit that took the same seq makes
+    ``append_snapshot`` raise ``SeqConflictError``. ``cfg`` supplies
+    run_id and the table paths. Returns (lineage rows, snapshot); nothing
+    is appended and the snapshot is None when no rows remain."""
     committed = fmt.read_extracted(spark, cfg.extracted_path)
     lin = lineage_rows(committed, cfg.run_id, input_split, buckets=buckets).collect()
     skipped = set(skip)
     rows = [r for r in lin if r["url_bucket"] not in skipped]
     if not rows:
         return rows, None
-    fmt.append_lineage(
-        spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1), cfg.lineage_path
-    )
-    _require_marker(spark, cfg.lineage_path)
+    fmt.append_lineage(rows, cfg.lineage_path)
     snap = snapshots.append_snapshot(
         spark, cfg.snapshots_path, cfg.run_id, operation, [r.asDict() for r in rows]
     )
-    _require_marker(spark, cfg.snapshots_path)
     return rows, snap
 
 

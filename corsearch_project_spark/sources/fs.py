@@ -9,11 +9,15 @@ exists — "rename" is copy+delete and directories are prefixes. Hard-coding
 the os calls would make snapshot expiry local-only (round-3 verdict,
 "What's wrong" #2).
 
-This module is the seam: maintenance takes an ``fs`` object implementing
-the five calls below (duck-typed, like the ``open()`` seam in
-``sources/warc.read_warc_ranges``). ``LOCAL_FS`` is the default; a cluster
-deployment passes a thin adapter over ``pyarrow.fs.S3FileSystem`` /
-``fsspec`` with the same five methods.
+The lineage and snapshot ledgers are written through the same seam: each
+commit is one driver-written Parquet file, created with
+``create_exclusive`` (``sources/snapshots.write_ledger_file``).
+
+This module is the seam: maintenance and the ledger writer take an ``fs``
+object implementing the calls below (duck-typed, like the ``open()`` seam
+in ``sources/warc.read_warc_ranges``). ``LOCAL_FS`` is the default; a
+cluster deployment passes a thin adapter over ``pyarrow.fs.S3FileSystem``
+/ ``fsspec`` with the same methods.
 
 Semantics the implementations must provide (and what they may relax):
 
@@ -29,15 +33,27 @@ Semantics the implementations must provide (and what they may relax):
   **Ordering contract for copy+delete implementations** (what makes a
   crash ANYWHERE inside a non-atomic rename recoverable, see
   ``maintenance.recover_swap``): during the copy phase the
-  ``maintenance.COMPLETE_MARKER`` file (``_SUCCESS``) must be copied
-  LAST; during the delete phase it must be deleted FIRST. Spark itself
-  commits ``_SUCCESS`` last when writing the ledger, so under this
+  ``COMPLETE_MARKER`` file (``_SUCCESS``) must be copied LAST; during
+  the delete phase it must be deleted FIRST. The ledger writer creates
+  the marker only after a commit's file has landed, so under this
   contract "directory contains the marker" ⇔ "directory is complete" in
   every crash state, and ``recover_swap`` can always tell a torn copy
   from a whole ledger. The adapter controls its own key iteration order,
   so both constraints are one ``sorted(..., key=is_marker)`` away.
   Atomic-rename filesystems (POSIX, HDFS) satisfy the contract trivially.
-* ``rmtree`` removes a directory tree / prefix, idempotently.
+* ``create_exclusive(path, data)`` writes one whole file atomically and
+  raises ``FileExistsError`` if ``path`` already exists — readers see
+  either no file or all of ``data``, and of two writers racing for one
+  name exactly one succeeds. This is the ledger's commit primitive: the
+  snapshot ``seq`` is the file name, so the loser of a race for a
+  ``seq`` fails instead of duplicating it. POSIX: write a dot-prefixed
+  temp file, hard-link it to the final name (``link`` refuses an
+  existing name), unlink the temp. Object store: a conditional put
+  (``If-None-Match: *``). A writer killed mid-call may leave the temp
+  file (``.<name>.<hex>.tmp``); readers skip dot-prefixed names and
+  ``maintenance.vacuum_staging`` reaps it.
+* ``rmtree`` removes a directory tree / prefix, or a single file,
+  idempotently.
 * ``exists``, ``listdir``, ``getsize`` are the obvious metadata probes.
 """
 
@@ -45,7 +61,14 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from typing import List
+
+# Directory-completeness marker of a ledger dir (see maintenance.recover_swap).
+COMPLETE_MARKER = "_SUCCESS"
+
+# Suffix of create_exclusive's dot-prefixed temp files.
+TMP_SUFFIX = ".tmp"
 
 
 class LocalFS:
@@ -58,7 +81,31 @@ class LocalFS:
         os.rename(src, dst)
 
     def rmtree(self, path: str) -> None:
-        shutil.rmtree(path, ignore_errors=True)
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
+
+    def create_exclusive(self, path: str, data: bytes) -> None:
+        if "://" in path:
+            raise ValueError(
+                f"LocalFS cannot write {path!r}: pass an fs adapter for that scheme"
+            )
+        parent, name = os.path.split(path)
+        os.makedirs(parent, exist_ok=True)
+        tmp = os.path.join(parent, f".{name}.{uuid.uuid4().hex}{TMP_SUFFIX}")
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            os.link(tmp, path)
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
 
     def listdir(self, path: str) -> List[str]:
         return os.listdir(path)

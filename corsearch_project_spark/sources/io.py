@@ -13,6 +13,8 @@ pipeline.
 from __future__ import annotations
 
 import os
+import re
+import uuid
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -22,6 +24,7 @@ from corsearch_project_spark.sources.schemas import (
     LINEAGE_SCHEMA,
     PAGES_SCHEMA,
 )
+from corsearch_project_spark.sources.snapshots import write_ledger_file
 
 
 def scan_pages(spark: SparkSession, path: str) -> DataFrame:
@@ -29,6 +32,14 @@ def scan_pages(spark: SparkSession, path: str) -> DataFrame:
     caller filters on url_bucket (bucketed layout) or lang/warc_ts (row-group
     min/max skip)."""
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
+
+
+def lineage_file_name(tag: str) -> str:
+    """Unique name for one lineage ledger file: ``lin-<tag>-<random>``.
+    The prefix keeps a tag starting with ``_`` or ``.`` from hiding the
+    file from readers."""
+    safe = re.sub(r"[^A-Za-z0-9_.-]", "_", tag)
+    return f"lin-{safe}-{uuid.uuid4().hex[:12]}.parquet"
 
 
 class ParquetBucketedFormat:
@@ -66,9 +77,18 @@ class ParquetBucketedFormat:
     def read_extracted(self, spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
 
-    def append_lineage(self, df: DataFrame, path: str) -> None:
-        """S4: append-only metrics table (small: B rows per run)."""
-        df.write.mode("append").parquet(path)
+    def append_lineage(self, rows, path: str) -> None:
+        """S4: append-only metrics table (small: B rows per run). ``rows``
+        are the run's collected lineage rows (a DataFrame is collected
+        first); they are committed from the driver as ONE Parquet file
+        under a unique name (``lineage_file_name``), created exclusively —
+        no Spark job."""
+        if isinstance(rows, DataFrame):
+            rows = rows.collect()
+        if rows:
+            write_ledger_file(
+                path, lineage_file_name(rows[0]["run_id"]), rows, LINEAGE_SCHEMA
+            )
 
     def read_lineage(self, spark: SparkSession, path: str) -> Optional[DataFrame]:
         try:

@@ -22,7 +22,10 @@ queries can't see expired commits.
 
 Metadata tables are driver-small by construction (one row per commit, B
 rows per run — the same boundedness argument as ``io.done_buckets``), so
-the expiry set is computed driver-side; the rewrites stay Spark writes.
+the expiry set is computed driver-side, and the compacted ledgers are
+written driver-side too, by the same writer as a commit
+(``snapshots.write_ledger_file``): one snapshot file named by the highest
+seq it keeps, one uniquely named lineage file.
 Single-writer-per-table-root assumption, as everywhere in this emulation:
 the swap is write-new → move-old-aside → move-new-in, not a catalog CAS.
 
@@ -36,10 +39,11 @@ instead (the ``TableFormat`` seam in ``sources/io.py``).
 
 Vacuum: Spark's dynamic partition overwrite stages output under
 ``_temporary`` and removes it on job commit; a killed job leaves the
-directory behind. Readers ignore underscore-prefixed paths, so the leftovers
-are invisible but billable — at crawl scale, terabytes. ``vacuum_staging``
-removes them, and also repairs/reaps interrupted-swap leftovers
-(``*.__expired__`` / ``*.__compact__``).
+directory behind. A ledger writer killed inside ``create_exclusive`` leaves
+a dot-prefixed ``.tmp`` file. Readers ignore underscore- and dot-prefixed
+paths, so the leftovers are invisible but billable — at crawl scale,
+terabytes. ``vacuum_staging`` removes them, and also repairs/reaps
+interrupted-swap leftovers (``*.__expired__`` / ``*.__compact__``).
 """
 
 from __future__ import annotations
@@ -48,9 +52,15 @@ from typing import Dict, List, Optional
 
 from pyspark.sql import SparkSession, functions as F
 
-from corsearch_project_spark.sources.fs import LOCAL_FS
+from corsearch_project_spark.sources.fs import COMPLETE_MARKER, LOCAL_FS, TMP_SUFFIX
+from corsearch_project_spark.sources.io import lineage_file_name
 from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
-from corsearch_project_spark.sources.snapshots import SNAPSHOT_SCHEMA, read_snapshots
+from corsearch_project_spark.sources.snapshots import (
+    SEQ_FILE,
+    SNAPSHOT_SCHEMA,
+    read_snapshots,
+    write_ledger_file,
+)
 
 # Swap staging suffixes. Both are SIBLINGS of the live path (same parent
 # directory), so local renames never cross a mount point (no EXDEV) and
@@ -58,15 +68,17 @@ from corsearch_project_spark.sources.snapshots import SNAPSHOT_SCHEMA, read_snap
 ASIDE_SUFFIX = ".__expired__"
 COMPACT_SUFFIX = ".__compact__"
 
-# Directory-completeness marker. Every ledger this module swaps is a
-# Spark-written parquet dir, and Spark commits ``_SUCCESS`` last — so "has
-# the marker" ⇔ "every data file of the write is present". The fs seam's
-# rename contract (sources/fs.py) extends that invariant through
-# copy+delete renames: copy the marker LAST, delete it FIRST. Under those
-# two orderings a directory with the marker is complete in EVERY crash
-# state a non-atomic rename can produce, which is what lets recover_swap
-# tell a fully-moved-in ledger from a partial copy.
-COMPLETE_MARKER = "_SUCCESS"
+# Directory-completeness marker (``COMPLETE_MARKER``, ``_SUCCESS``, defined
+# with the fs seam). Every ledger this module swaps is driver-written by
+# ``snapshots.write_ledger_file``: each file lands whole through
+# ``create_exclusive`` and the marker is created after it — so "has the
+# marker" ⇔ "every file written into the dir is present", whatever the
+# Hadoop committer settings. The fs seam's rename contract (sources/fs.py)
+# extends that invariant through copy+delete renames: copy the marker
+# LAST, delete it FIRST. Under those two orderings a directory with the
+# marker is complete in EVERY crash state a non-atomic rename can produce,
+# which is what lets recover_swap tell a fully-moved-in ledger from a
+# partial copy.
 
 
 def _complete(path: str, fs=LOCAL_FS) -> bool:
@@ -199,30 +211,38 @@ def expire_snapshots(
         report["lineage_rows_expired"] = 0
         return report
 
-    keep_lit = list(keep_runs)
-    new_snaps = (
-        spark.read.schema(SNAPSHOT_SCHEMA)
-        .parquet(snap_path)
-        .where(F.col("run_id").isin(keep_lit))
+    # run_ids and snapshot rows are not 1:1 (a resume-append commits a new
+    # row under the original run_id), so keep ROWS by run, not one per run.
+    # keep_last >= 1 keeps the highest seq, so the compacted file's name
+    # still carries the seq the next commit continues from.
+    kept_snaps = sorted(
+        (r for r in rows if r["run_id"] in keep_runs), key=lambda r: r["seq"]
     )
-    new_snaps.coalesce(1).write.mode("overwrite").parquet(
-        snap_path + COMPACT_SUFFIX
+    _write_compact(
+        snap_path, SEQ_FILE.format(kept_snaps[-1]["seq"]), kept_snaps,
+        SNAPSHOT_SCHEMA, fs,
     )
-    _swap_in(snap_path + COMPACT_SUFFIX, snap_path, fs)
 
     lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lin_path)
     n_before = lin.count()
-    kept_lin = lin.where(F.col("run_id").isin(keep_lit))
-    kept_lin.coalesce(1).write.mode("overwrite").parquet(lin_path + COMPACT_SUFFIX)
-    _swap_in(lin_path + COMPACT_SUFFIX, lin_path, fs)
+    kept_lin = lin.where(F.col("run_id").isin(list(keep_runs))).collect()
+    _write_compact(
+        lin_path, lineage_file_name("compact"), kept_lin, LINEAGE_SCHEMA, fs
+    )
 
-    # run_ids and snapshot rows are not 1:1 (a resume-append commits a new
-    # row under the original run_id), so count kept ROWS, not kept runs
-    report["snapshots_after"] = sum(1 for r in rows if r["run_id"] in keep_runs)
-    report["lineage_rows_expired"] = n_before - spark.read.schema(
-        LINEAGE_SCHEMA
-    ).parquet(lin_path).count()
+    report["snapshots_after"] = len(kept_snaps)
+    report["lineage_rows_expired"] = n_before - len(kept_lin)
     return report
+
+
+def _write_compact(live_dir: str, name: str, rows, schema, fs) -> None:
+    """Write ``rows`` as the one file of ``live_dir``'s compact dir, then
+    swap it in. A compact dir left by an interrupted earlier rewrite is
+    dropped first; ``recover_swap`` already judged it stale."""
+    compact = live_dir + COMPACT_SUFFIX
+    fs.rmtree(compact)
+    write_ledger_file(compact, name, rows, schema, fs)
+    _swap_in(compact, live_dir, fs)
 
 
 def _tree_bytes(path: str, fs) -> int:
@@ -244,12 +264,15 @@ def _tree_bytes(path: str, fs) -> int:
 
 def vacuum_staging(output_path: str, fs=LOCAL_FS) -> dict:
     """Remove crash leftovers under the table root: Spark staging dirs
-    (``_temporary``) and interrupted-swap dirs (``*.__expired__`` /
-    ``*.__compact__``, via ``recover_swap`` — which RESTORES a mid-swap
-    table rather than deleting it). Underscore/dotted staging paths are
-    invisible to readers, so this never changes query results — it
-    reclaims storage after killed jobs. Runs on the ``fs`` seam, so it
-    works against object-store prefixes as well as local dirs."""
+    (``_temporary``), ``create_exclusive`` temp files (``.*.tmp``) and
+    interrupted-swap dirs (``*.__expired__`` / ``*.__compact__``, via
+    ``recover_swap`` — which RESTORES a mid-swap table rather than
+    deleting it). Underscore/dotted staging paths are invisible to
+    readers, so this never changes query results — it reclaims storage
+    after killed jobs. Run it while no writer commits to the table: a
+    live writer's temp file looks the same as a dead one's. Runs on the
+    ``fs`` seam, so it works against object-store prefixes as well as
+    local dirs."""
     removed, freed, recovered = [], 0, []
     stack = [output_path.rstrip("/")]
     while stack:
@@ -259,6 +282,10 @@ def vacuum_staging(output_path: str, fs=LOCAL_FS) -> dict:
             p = d + "/" + name
             if name == "_temporary":
                 freed += _tree_bytes(p, fs)
+                fs.rmtree(p)
+                removed.append(p[len(output_path.rstrip("/")) + 1 :])
+            elif name.startswith(".") and name.endswith(TMP_SUFFIX):
+                freed += fs.getsize(p)
                 fs.rmtree(p)
                 removed.append(p[len(output_path.rstrip("/")) + 1 :])
             elif name.endswith(ASIDE_SUFFIX) or name.endswith(COMPACT_SUFFIX):

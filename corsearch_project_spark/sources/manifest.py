@@ -75,27 +75,29 @@ def write_manifest(
     ``snapshots_path`` is given, the ledger's latest ``seq`` is stamped
     into every row as ``as_of_seq`` so lookups can detect staleness."""
     if snapshots_path is not None:
-        seq = _latest_seq(manifest.sparkSession, snapshots_path)
+        seq = _latest_seq(snapshots_path)
         manifest = manifest.withColumn(
             "as_of_seq", F.lit(seq).cast("long")
         )
     manifest.coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def _latest_seq(spark: SparkSession, snapshots_path: str) -> int:
-    from corsearch_project_spark.sources.snapshots import read_snapshots
+def _latest_seq(snapshots_path: str) -> int:
+    """The ledger's latest seq, by the commit's own rule: the snapshot
+    file listing (snapshots.latest_seq), no Spark job."""
+    from corsearch_project_spark.sources.snapshots import latest_seq
 
-    snaps = read_snapshots(spark, snapshots_path)
-    if snaps is None:
+    seq = latest_seq(snapshots_path)
+    if seq is None:
         raise FileNotFoundError(f"no snapshots table at {snapshots_path!r}")
-    return snaps.agg(F.max("seq")).first()[0]
+    return seq
 
 
 def _check_fresh(
     spark: SparkSession, manifest: DataFrame, snapshots_path: Optional[str]
 ) -> None:
-    """Cheap guard (one metadata-table agg + one ledger agg): the manifest
-    must have been built at the ledger's CURRENT latest commit."""
+    """Cheap guard (one metadata-table agg + one ledger listing): the
+    manifest must have been built at the ledger's CURRENT latest commit."""
     if snapshots_path is None:
         return
     if "as_of_seq" not in manifest.columns:
@@ -105,7 +107,7 @@ def _check_fresh(
             "freshness check"
         )
     man_seq = manifest.agg(F.max("as_of_seq")).first()[0]
-    live_seq = _latest_seq(spark, snapshots_path)
+    live_seq = _latest_seq(snapshots_path)
     if man_seq != live_seq:
         raise StaleManifestError(
             f"manifest built at snapshot seq {man_seq}, table is at "

@@ -11,19 +11,32 @@ per-COMMIT ledger on top of it:
     and the order-insensitive digest-of-digests across those buckets;
   * `read_snapshots` lists table history in sequence order (the
     `SELECT * FROM db.tbl.snapshots` analogue);
-  * sequence numbers are derived from the existing snapshot table at commit
-    time (max+1) — single-writer per table root, same assumption Iceberg's
-    optimistic commit makes before its CAS.
+  * each commit is ONE Parquet file named by its sequence number,
+    ``seq-<012d>.parquet``, written from the driver (`write_ledger_file`,
+    no Spark job). The next seq is 1 + the highest seq among the file
+    names under ``snapshots/`` (`latest_seq`: a listing, no read of the
+    files). The file is created with the fs seam's ``create_exclusive``,
+    so of two writers that read the same next seq exactly one commits and
+    the other raises `SeqConflictError` — the optimistic commit Iceberg
+    makes with its catalog CAS, with the file name as the pointer.
 
-On real Iceberg these rows come for free from the catalog; the seam is the
-same as sources/io.py's TableFormat.
+The lineage ledger (sources/io.py ``append_lineage``) is written by the
+same `write_ledger_file`, one uniquely named file per commit. On real
+Iceberg these rows come for free from the catalog; the seam is the same as
+sources/io.py's TableFormat.
 """
 
 from __future__ import annotations
 
+import re
 from typing import List, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from corsearch_project_spark.sources.fs import COMPLETE_MARKER, LOCAL_FS
 
 SNAPSHOT_SCHEMA = T.StructType(
     [
@@ -37,6 +50,53 @@ SNAPSHOT_SCHEMA = T.StructType(
         T.StructField("rollup_xor", T.StringType(), False),
     ]
 )
+
+
+SEQ_FILE = "seq-{:012d}.parquet"
+_SEQ_NAME = re.compile(r"seq-(\d+)\.parquet")
+
+
+class SeqConflictError(FileExistsError):
+    """Another writer committed the snapshot seq this commit took as next."""
+
+
+def write_ledger_file(
+    path: str, name: str, rows, schema: T.StructType, fs=LOCAL_FS
+) -> None:
+    """Commit ``rows`` (dicts or Rows) as ONE Parquet file ``path/name``
+    with the column types of the Spark ``schema``, created exclusively
+    through the ``fs`` seam (raises ``FileExistsError`` if the name is
+    taken), then mark ``path`` complete for maintenance.recover_swap."""
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else r.asDict() for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    path = path.rstrip("/")
+    fs.create_exclusive(f"{path}/{name}", sink.getvalue().to_pybytes())
+    try:
+        fs.create_exclusive(f"{path}/{COMPLETE_MARKER}", b"")
+    except FileExistsError:
+        pass
+
+
+def latest_seq(path: str, fs=LOCAL_FS) -> Optional[int]:
+    """Highest snapshot seq committed under ``path``, from the file names
+    alone; None when there is no snapshot file. A Parquet file whose name
+    carries no seq raises ValueError: guessing one could reuse a
+    committed seq."""
+    if not fs.exists(path):
+        return None
+    seqs = []
+    for name in fs.listdir(path):
+        if name.startswith((".", "_")) or not name.endswith(".parquet"):
+            continue
+        m = _SEQ_NAME.fullmatch(name)
+        if m is None:
+            raise ValueError(f"snapshot file {name!r} under {path} carries no seq")
+        seqs.append(int(m.group(1)))
+    return max(seqs, default=None)
 
 
 def _xor_hex(digests: List[str]) -> str:
@@ -56,13 +116,13 @@ def append_snapshot(
     operation: str,
     lineage_rows: List[dict],
 ) -> dict:
-    """Append one snapshot row computed from the run's (already collected)
-    lineage rows. Returns the row as a dict."""
-    prev = read_snapshots(spark, path)
-    seq = 0
-    if prev is not None:
-        max_seq = prev.agg({"seq": "max"}).collect()[0][0]
-        seq = (max_seq if max_seq is not None else -1) + 1
+    """Commit one snapshot row computed from the run's (already collected)
+    lineage rows as file ``seq-<seq>.parquet``, seq = 1 + `latest_seq`.
+    Raises SeqConflictError when another writer committed that seq first.
+    ``spark`` is unused: the row is written from the driver. Returns the
+    row as a dict."""
+    last = latest_seq(path)
+    seq = 0 if last is None else last + 1
     snap = {
         "seq": seq,
         "run_id": run_id,
@@ -73,9 +133,12 @@ def append_snapshot(
         "bytes_in": sum(int(r["bytes_in"]) for r in lineage_rows),
         "rollup_xor": _xor_hex([r["sha256_rollup"] for r in lineage_rows]),
     }
-    spark.createDataFrame([snap], SNAPSHOT_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    try:
+        write_ledger_file(path, SEQ_FILE.format(seq), [snap], SNAPSHOT_SCHEMA)
+    except FileExistsError as e:
+        raise SeqConflictError(
+            f"snapshot seq {seq} under {path} was committed by another writer"
+        ) from e
     return snap
 
 

@@ -112,6 +112,15 @@ def test_expire_drops_fully_superseded_run(spark, tmp_path):
     kept_seqs = sorted(r["seq"] for r in snaps.collect())
     assert kept_seqs == sorted(set(kept_seqs))
     assert max(kept_seqs) == 2
+    # the compacted ledgers are one driver-written file each, the snapshot
+    # file named by the highest seq it keeps
+    snap_files = sorted(os.listdir(os.path.join(out, "snapshots")))
+    assert snap_files == ["_SUCCESS", "seq-000000000002.parquet"]
+    lin_files = sorted(os.listdir(os.path.join(out, "lineage")))
+    assert lin_files[0] == "_SUCCESS" and len(lin_files) == 2
+    assert lin_files[1].startswith("lin-compact-")
+    rep = _merge(spark, out, tmp_path, [_swap_body(base[3], base[33])], "M-next")
+    assert rep["snapshot"]["seq"] == 3
 
 
 def test_expire_noop_when_window_covers_all(spark, tmp_path):
@@ -182,6 +191,12 @@ class _RecordingFS:
     def rmtree(self, p):
         self.ops.append(("rmtree", p))
         self._shutil.rmtree(p, ignore_errors=True)
+
+    def create_exclusive(self, p, data):
+        from corsearch_project_spark.sources.fs import LOCAL_FS
+
+        self.ops.append(("create", p))
+        LOCAL_FS.create_exclusive(p, data)
 
     def listdir(self, p):
         return os.listdir(p)
@@ -337,6 +352,13 @@ class _CrashableObjectStoreFS:
 
     def getsize(self, p):
         return os.path.getsize(p)
+
+    def create_exclusive(self, p, data):
+        # a conditional put: the object lands whole or not at all
+        from corsearch_project_spark.sources.fs import LOCAL_FS
+
+        self._tick()
+        LOCAL_FS.create_exclusive(p, data)
 
     def rename(self, src, dst):
         import shutil

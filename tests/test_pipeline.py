@@ -199,10 +199,13 @@ def test_kernel_poison_doc_degrades_to_error_row(monkeypatch, arm, doc_rows, sch
         assert by_url["http://x.example/ok"]["extracted_md"]
 
 
-def test_ledger_commit_requires_success_marker(spark, tmp_path):
+def test_ledger_marker_independent_of_committer_setting(spark, tmp_path):
     """Crash recovery (maintenance.recover_swap) judges a ledger complete by
-    its _SUCCESS marker, so a commit that cannot leave one must fail
-    loudly instead of writing a ledger recovery would ignore."""
+    its _SUCCESS marker. The driver-side ledger writer leaves the marker
+    itself, so a commit with Hadoop's job-success markers switched off
+    still commits a ledger that recovery recognises as complete."""
+    from corsearch_project_spark.sources.maintenance import _complete
+
     src = _write_pages(spark, tmp_path, gen_pages(40, seed=13))
     out = os.path.join(str(tmp_path), "out")
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -210,17 +213,18 @@ def test_ledger_commit_requires_success_marker(spark, tmp_path):
     prior = conf.get(key)
     conf.set(key, "false")
     try:
-        with pytest.raises(RuntimeError, match="_SUCCESS"):
-            run_extract(spark, ExtractConfig(src, out, run_id="NM", buckets=4))
+        rep = run_extract(spark, ExtractConfig(src, out, run_id="NM", buckets=4))
     finally:
         if prior is None:
             conf.unset(key)
         else:
             conf.set(key, prior)
-    assert not os.path.exists(os.path.join(out, "lineage", "_SUCCESS"))
-    # with markers back on, the same table commits normally
-    rep = run_extract(spark, ExtractConfig(src, out, run_id="NM2", buckets=4))
     assert rep["snapshot"]["seq"] == 0
+    assert rep["snapshot"]["doc_count"] == rep["docs_out"] > 0
+    for ledger in ("lineage", "snapshots"):
+        path = os.path.join(out, ledger)
+        assert os.path.exists(os.path.join(path, "_SUCCESS")), ledger
+        assert _complete(path), ledger
 
 
 def test_bench_tracer_targets_resolve():
