@@ -44,6 +44,7 @@ from corsearch_project_spark.operators.partitioning import (
     with_url_bucket,
 )
 from corsearch_project_spark.sources import snapshots
+from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources.io import (
     ParquetBucketedFormat,
     done_buckets,
@@ -246,37 +247,60 @@ def commit_run(
     input_split: str,
     buckets: Optional[Sequence[int]] = None,
     skip: Sequence[int] = (),
+    fs=LOCAL_FS,
 ) -> Tuple[list, Optional[dict]]:
     """Commit the ledger of a run whose data write has landed.
 
     ONE job over the committed table (only ``buckets`` of it when given)
     computes the per-bucket lineage rows (B rows — tiny, collected); rows
     of ``skip`` buckets, committed by an earlier attempt of the same run,
-    are dropped. The rest are written from the driver, with no Spark job:
-    one lineage file, then one snapshot file named by the next seq
-    (sources/snapshots.py). Both are created exclusively and leave the
-    ``_SUCCESS`` marker; a concurrent commit that took the same seq makes
-    ``append_snapshot`` raise ``SeqConflictError``. ``cfg`` supplies
-    run_id and the table paths. Returns (lineage rows, snapshot); nothing
-    is appended and the snapshot is None when no rows remain."""
+    are dropped. The rest are written from the driver through the ``fs``
+    seam, with no Spark job: one lineage file, then one snapshot file
+    named by the next seq (sources/snapshots.py). Both are created
+    exclusively and leave the ``_SUCCESS`` marker. A concurrent commit
+    that took the same seq makes ``append_snapshot`` raise
+    ``SeqConflictError``; this run's lineage file is then removed, so a
+    retry (``--resume``) of the run redoes its buckets instead of
+    skipping them. ``cfg`` supplies run_id and the table paths. Returns
+    (lineage rows, snapshot); nothing is appended and the snapshot is
+    None when no rows remain."""
     committed = fmt.read_extracted(spark, cfg.extracted_path)
     lin = lineage_rows(committed, cfg.run_id, input_split, buckets=buckets).collect()
     skipped = set(skip)
     rows = [r for r in lin if r["url_bucket"] not in skipped]
     if not rows:
         return rows, None
-    fmt.append_lineage(rows, cfg.lineage_path)
-    snap = snapshots.append_snapshot(
-        spark, cfg.snapshots_path, cfg.run_id, operation, [r.asDict() for r in rows]
-    )
+    lin_file = fmt.append_lineage(rows, cfg.lineage_path, fs=fs)
+    try:
+        snap = snapshots.append_snapshot(
+            spark, cfg.snapshots_path, cfg.run_id, operation,
+            [r.asDict() for r in rows], fs=fs,
+        )
+    except snapshots.SeqConflictError:
+        fs.rmtree(lin_file)
+        raise
     return rows, snap
+
+
+def check_ledger_root(cfg: TableRoot, fs=LOCAL_FS) -> None:
+    """Fail before the data job when the ledger commit cannot succeed:
+    ``fs`` cannot reach the table root (LocalFS refuses an ``s3a://`` or
+    ``hdfs://`` root — pass an adapter) or the snapshot files yield no
+    seq. Raised after the data write, either would leave buckets
+    overwritten with no lineage or snapshot recording it."""
+    snapshots.latest_seq(cfg.snapshots_path, fs)
 
 
 def run_extract(
     spark: SparkSession,
     cfg: ExtractConfig,
     rules: Optional[Dict[str, Rule]] = None,
+    fs=LOCAL_FS,
 ) -> Dict[str, object]:
+    """Extract ``cfg.input_path`` into the table at ``cfg.output_path``
+    and commit its ledger; ``fs`` is the seam the ledger is written
+    through (sources/fs.py)."""
+    check_ledger_root(cfg, fs)
     phases = Phases()
     fmt = ParquetBucketedFormat(cfg.max_records_per_file)
     pages = scan_input(spark, cfg.input_path, cfg.input_format, cfg.buckets)
@@ -321,7 +345,7 @@ def run_extract(
 
     operation = "resume-append" if cfg.resume else "overwrite"
     new_rows, snap = commit_run(
-        spark, fmt, cfg, operation, cfg.input_path, skip=skipped
+        spark, fmt, cfg, operation, cfg.input_path, skip=skipped, fs=fs
     )
     phases.mark("lineage_append")
     return {

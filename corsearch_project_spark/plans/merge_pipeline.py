@@ -45,10 +45,12 @@ from corsearch_project_spark.plans.extract_pipeline import (
     DEFAULT_SALT,
     Phases,
     TableRoot,
+    check_ledger_root,
     commit_run,
     extract_pages,
     scan_input,
 )
+from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources.io import ParquetBucketedFormat
 from corsearch_project_spark.webextract.rules import Rule
 
@@ -99,7 +101,9 @@ def run_merge(
     spark: SparkSession,
     cfg: MergeConfig,
     rules: Optional[Dict[str, Rule]] = None,
+    fs=LOCAL_FS,
 ) -> Dict[str, object]:
+    check_ledger_root(cfg, fs)
     phases = Phases()
     fmt = ParquetBucketedFormat(cfg.max_records_per_file)
     inc = scan_input(spark, cfg.increment_path, cfg.input_format, cfg.buckets)
@@ -165,7 +169,8 @@ def run_merge(
     phases.mark("rewrite_buckets")
 
     snap = commit_run(
-        spark, fmt, cfg, "merge-increment", cfg.increment_path, buckets=ch_buckets
+        spark, fmt, cfg, "merge-increment", cfg.increment_path, buckets=ch_buckets,
+        fs=fs,
     )[1]
     phases.mark("lineage_append")
     new_ext.unpersist()

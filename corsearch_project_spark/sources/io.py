@@ -19,6 +19,7 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources.schemas import (
     EXTRACTED_SCHEMA,
     LINEAGE_SCHEMA,
@@ -77,18 +78,20 @@ class ParquetBucketedFormat:
     def read_extracted(self, spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
 
-    def append_lineage(self, rows, path: str) -> None:
+    def append_lineage(self, rows, path: str, fs=LOCAL_FS) -> Optional[str]:
         """S4: append-only metrics table (small: B rows per run). ``rows``
         are the run's collected lineage rows (a DataFrame is collected
         first); they are committed from the driver as ONE Parquet file
-        under a unique name (``lineage_file_name``), created exclusively —
-        no Spark job."""
+        under a unique name (``lineage_file_name``), created exclusively
+        through the ``fs`` seam — no Spark job. Returns the file's path,
+        or None when there are no rows."""
         if isinstance(rows, DataFrame):
             rows = rows.collect()
-        if rows:
-            write_ledger_file(
-                path, lineage_file_name(rows[0]["run_id"]), rows, LINEAGE_SCHEMA
-            )
+        if not rows:
+            return None
+        return write_ledger_file(
+            path, lineage_file_name(rows[0]["run_id"]), rows, LINEAGE_SCHEMA, fs
+        )
 
     def read_lineage(self, spark: SparkSession, path: str) -> Optional[DataFrame]:
         try:

@@ -18,7 +18,12 @@ per-COMMIT ledger on top of it:
     files). The file is created with the fs seam's ``create_exclusive``,
     so of two writers that read the same next seq exactly one commits and
     the other raises `SeqConflictError` — the optimistic commit Iceberg
-    makes with its catalog CAS, with the file name as the pointer.
+    makes with its catalog CAS, with the file name as the pointer;
+  * tables committed before that naming hold Spark-named snapshot files
+    (``part-*.parquet``). `latest_seq` reads the max seq stored in such a
+    file (it is committed data, not a guess), so those tables keep
+    committing; ``maintenance.expire_snapshots`` rewrites them into one
+    seq-named file. Only an unreadable unnamed file stops a commit.
 
 The lineage ledger (sources/io.py ``append_lineage``) is written by the
 same `write_ledger_file`, one uniquely named file per commit. On real
@@ -32,6 +37,7 @@ import re
 from typing import List, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -62,11 +68,12 @@ class SeqConflictError(FileExistsError):
 
 def write_ledger_file(
     path: str, name: str, rows, schema: T.StructType, fs=LOCAL_FS
-) -> None:
+) -> str:
     """Commit ``rows`` (dicts or Rows) as ONE Parquet file ``path/name``
     with the column types of the Spark ``schema``, created exclusively
     through the ``fs`` seam (raises ``FileExistsError`` if the name is
-    taken), then mark ``path`` complete for maintenance.recover_swap."""
+    taken), then mark ``path`` complete for maintenance.recover_swap.
+    Returns the file's path."""
     table = pa.Table.from_pylist(
         [r if isinstance(r, dict) else r.asDict() for r in rows],
         schema=to_arrow_schema(schema),
@@ -74,29 +81,52 @@ def write_ledger_file(
     sink = pa.BufferOutputStream()
     pq.write_table(table, sink)
     path = path.rstrip("/")
-    fs.create_exclusive(f"{path}/{name}", sink.getvalue().to_pybytes())
-    try:
-        fs.create_exclusive(f"{path}/{COMPLETE_MARKER}", b"")
-    except FileExistsError:
-        pass
+    file = f"{path}/{name}"
+    fs.create_exclusive(file, sink.getvalue().to_pybytes())
+    marker = f"{path}/{COMPLETE_MARKER}"
+    if not fs.exists(marker):
+        try:
+            fs.create_exclusive(marker, b"")
+        except FileExistsError:
+            pass
+    return file
 
 
 def latest_seq(path: str, fs=LOCAL_FS) -> Optional[int]:
-    """Highest snapshot seq committed under ``path``, from the file names
-    alone; None when there is no snapshot file. A Parquet file whose name
-    carries no seq raises ValueError: guessing one could reuse a
-    committed seq."""
+    """Highest snapshot seq committed under ``path``; None when there is
+    no snapshot row. A ``seq-<N>.parquet`` file counts by its name; any
+    other Parquet file (the Spark-written ``part-*`` files of a table
+    committed before seq-named files) counts by the max seq stored in it.
+    An unnamed file that cannot be read raises ValueError: guessing a seq
+    could reuse a committed one."""
     if not fs.exists(path):
         return None
+    path = path.rstrip("/")
     seqs = []
     for name in fs.listdir(path):
         if name.startswith((".", "_")) or not name.endswith(".parquet"):
             continue
         m = _SEQ_NAME.fullmatch(name)
-        if m is None:
-            raise ValueError(f"snapshot file {name!r} under {path} carries no seq")
-        seqs.append(int(m.group(1)))
+        if m is not None:
+            seqs.append(int(m.group(1)))
+            continue
+        stored = _stored_max_seq(f"{path}/{name}", fs)
+        if stored is not None:
+            seqs.append(stored)
     return max(seqs, default=None)
+
+
+def _stored_max_seq(file: str, fs) -> Optional[int]:
+    """max(seq) of the rows in a snapshot file; None for a file of no
+    rows."""
+    try:
+        table = pq.read_table(pa.BufferReader(fs.read_bytes(file)), columns=["seq"])
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(
+            f"snapshot file {file} carries no seq in its name and cannot be "
+            f"read: {e}"
+        ) from e
+    return pc.max(table.column("seq")).as_py()
 
 
 def _xor_hex(digests: List[str]) -> str:
@@ -115,13 +145,14 @@ def append_snapshot(
     run_id: str,
     operation: str,
     lineage_rows: List[dict],
+    fs=LOCAL_FS,
 ) -> dict:
     """Commit one snapshot row computed from the run's (already collected)
-    lineage rows as file ``seq-<seq>.parquet``, seq = 1 + `latest_seq`.
-    Raises SeqConflictError when another writer committed that seq first.
-    ``spark`` is unused: the row is written from the driver. Returns the
-    row as a dict."""
-    last = latest_seq(path)
+    lineage rows as file ``seq-<seq>.parquet``, seq = 1 + `latest_seq`,
+    through the ``fs`` seam. Raises SeqConflictError when another writer
+    committed that seq first. ``spark`` is unused: the row is written from
+    the driver. Returns the row as a dict."""
+    last = latest_seq(path, fs)
     seq = 0 if last is None else last + 1
     snap = {
         "seq": seq,
@@ -134,7 +165,7 @@ def append_snapshot(
         "rollup_xor": _xor_hex([r["sha256_rollup"] for r in lineage_rows]),
     }
     try:
-        write_ledger_file(path, SEQ_FILE.format(seq), [snap], SNAPSHOT_SCHEMA)
+        write_ledger_file(path, SEQ_FILE.format(seq), [snap], SNAPSHOT_SCHEMA, fs)
     except FileExistsError as e:
         raise SeqConflictError(
             f"snapshot seq {seq} under {path} was committed by another writer"

@@ -1,11 +1,14 @@
 """The driver-written lineage and snapshot ledger (sources/snapshots.py,
 sources/io.py ``append_lineage``): one exclusively created file per commit,
-snapshot seq taken from the file listing. Two writers never share a seq, a
-crash between the lineage and snapshot files leaves a committable table,
-and a writer killed inside ``create_exclusive`` leaves nothing a reader
-sees."""
+snapshot seq taken from the file listing. Two writers never share a seq
+(and a loser leaves no lineage), a crash between the lineage and snapshot
+files leaves a committable table, a writer killed inside
+``create_exclusive`` leaves nothing a reader sees, tables with Spark-named
+ledger files keep committing, and a root the ledger cannot reach fails
+before the data job."""
 
 import os
+import shutil
 import subprocess
 import sys
 import threading
@@ -19,7 +22,13 @@ sys.path.insert(
 )
 
 from corsearch_project_spark.fixtures.gen_pages import gen_pages
-from corsearch_project_spark.plans.extract_pipeline import ExtractConfig, run_extract
+from corsearch_project_spark.plans.extract_pipeline import (
+    ExtractConfig,
+    commit_run,
+    run_extract,
+)
+from corsearch_project_spark.plans.merge_pipeline import MergeConfig, run_merge
+from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources import snapshots as S
 from corsearch_project_spark.sources.io import ParquetBucketedFormat, done_buckets
 from corsearch_project_spark.sources.maintenance import vacuum_staging
@@ -158,14 +167,183 @@ def test_killed_writer_leftover_is_invisible_and_vacuumed(spark, tmp_path):
     assert nxt["snapshot"]["seq"] == 1
 
 
-def test_snapshot_file_without_seq_refuses_to_guess(tmp_path):
-    """A Parquet file in snapshots/ whose name carries no seq stops the
-    commit rather than letting it guess the next seq."""
-    snap = tmp_path / "snapshots"
-    snap.mkdir()
-    (snap / "part-00000-c000.snappy.parquet").write_bytes(b"")
-    with pytest.raises(ValueError, match="carries no seq"):
-        S.latest_seq(str(snap))
-    with pytest.raises(ValueError, match="carries no seq"):
-        S.append_snapshot(None, str(snap), "X", "overwrite", _lineage("X", 1))
-    assert sorted(os.listdir(snap)) == ["part-00000-c000.snappy.parquet"]
+def _bucket_files(out):
+    """{relative path: mtime_ns} of every data file under extracted/."""
+    ext = os.path.join(out, "extracted")
+    return {
+        os.path.relpath(os.path.join(d, n), ext): os.stat(os.path.join(d, n)).st_mtime_ns
+        for d, _, names in os.walk(ext)
+        for n in names
+    }
+
+
+def _to_spark_layout(spark, path, schema):
+    """Rewrite a driver-written ledger dir in the layout Spark's writer
+    left before seq-named files: part-*.parquet plus _SUCCESS."""
+    rows = spark.read.schema(schema).parquet(path).collect()
+    shutil.rmtree(path)
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+    assert not any(n.startswith(("seq-", "lin-")) for n in os.listdir(path))
+
+
+def test_legacy_spark_named_ledger_keeps_committing(spark, tmp_path):
+    """A table committed before seq-named files holds Spark-named
+    part-*.parquet ledger files. Their committed seq is read from the
+    file, so the next run_extract commits the next seq, and the manifest
+    guard sees it."""
+    from corsearch_project_spark.sources.manifest import _latest_seq
+    from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
+
+    base = gen_pages(30, seed=93, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "legacy")
+    snap, lin = os.path.join(out, "snapshots"), os.path.join(out, "lineage")
+    S.append_snapshot(spark, snap, "R-legacy-2", "merge-increment", _lineage("L", 2))
+    _to_spark_layout(spark, snap, S.SNAPSHOT_SCHEMA)
+    _to_spark_layout(spark, lin, LINEAGE_SCHEMA)
+    assert S.latest_seq(snap) == 1
+    assert _latest_seq(snap) == 1
+
+    src = str(tmp_path / "legacy.parquet")
+    rep = run_extract(spark, ExtractConfig(src, out, run_id="R-new", buckets=BUCKETS))
+    assert rep["snapshot"]["seq"] == 2
+    assert "seq-000000000002.parquet" in os.listdir(snap)
+    hist = S.read_snapshots(spark, snap).collect()
+    assert [(r["seq"], r["run_id"]) for r in hist] == [
+        (0, "R-legacy"), (1, "R-legacy-2"), (2, "R-new")
+    ]
+    fmt = ParquetBucketedFormat()
+    assert done_buckets(spark, fmt, lin, "R-new") == done_buckets(
+        spark, fmt, lin, "R-legacy"
+    )
+    assert S.latest_seq(snap) == _latest_seq(snap) == 2
+
+
+def test_unreadable_unnamed_snapshot_file_stops_before_the_data_job(spark, tmp_path):
+    """A Parquet file in snapshots/ whose name carries no seq and whose
+    contents cannot be read stops the commit rather than letting it guess
+    the next seq — and run_extract stops before it rewrites any bucket."""
+    base = gen_pages(30, seed=94, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "torn")
+    snap = os.path.join(out, "snapshots")
+    with open(os.path.join(snap, "part-00000-c000.snappy.parquet"), "wb"):
+        pass
+    before = sorted(os.listdir(snap))
+    with pytest.raises(ValueError, match="cannot be read"):
+        S.latest_seq(snap)
+    with pytest.raises(ValueError, match="cannot be read"):
+        S.append_snapshot(None, snap, "X", "overwrite", _lineage("X", 1))
+    assert sorted(os.listdir(snap)) == before
+
+    files = _bucket_files(out)
+    src = str(tmp_path / "torn.parquet")
+    with pytest.raises(ValueError, match="cannot be read"):
+        run_extract(spark, ExtractConfig(src, out, run_id="R-no", buckets=BUCKETS))
+    assert _bucket_files(out) == files
+    assert sorted(os.listdir(snap)) == before
+
+
+def test_uri_table_root_commits_or_fails_before_the_data_job(
+    spark, tmp_path, monkeypatch
+):
+    """A file: URI root commits its ledger like a plain path. A root the
+    ledger's fs cannot reach (s3a:// on LocalFS) fails before any data
+    is written."""
+    from corsearch_project_spark.sources.maintenance import _complete
+
+    src = str(tmp_path / "uri.parquet")
+    _write_pages(gen_pages(30, seed=95, dup_frac=0.0), src)
+    out = str(tmp_path / "uri")
+    rep = run_extract(
+        spark, ExtractConfig(src, "file://" + out, run_id="R-uri", buckets=BUCKETS)
+    )
+    assert rep["snapshot"]["seq"] == 0
+    assert [r["run_id"] for r in S.read_snapshots(spark, out + "/snapshots").collect()] == ["R-uri"]
+    assert all(_complete(os.path.join(out, d)) for d in ("lineage", "snapshots"))
+    rep = run_extract(
+        spark, ExtractConfig(src, "file:" + out, run_id="R-uri2", buckets=BUCKETS)
+    )
+    assert rep["snapshot"]["seq"] == 1
+
+    writes = []
+    monkeypatch.setattr(
+        ParquetBucketedFormat, "write_extracted", lambda self, df, path: writes.append(path)
+    )
+    with pytest.raises(ValueError, match="pass an fs adapter"):
+        run_extract(
+            spark, ExtractConfig(src, "s3a://bucket/table", run_id="R-s3", buckets=BUCKETS)
+        )
+    with pytest.raises(ValueError, match="pass an fs adapter"):
+        run_merge(
+            spark, MergeConfig(src, "s3a://bucket/table", run_id="M-s3", buckets=BUCKETS)
+        )
+    assert writes == []
+
+
+def test_seq_race_loser_removes_its_lineage_file(spark, tmp_path, monkeypatch):
+    """Whole commits racing for one seq: the winner's lineage and
+    snapshot land; each loser raises SeqConflictError and removes its own
+    lineage file, so lineage holds only the winner's rows and a --resume
+    of a losing run redoes its buckets."""
+    base = gen_pages(30, seed=96, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "race")
+    src = str(tmp_path / "race.parquet")
+    lin = os.path.join(out, "lineage")
+    fmt = ParquetBucketedFormat()
+    written = done_buckets(spark, fmt, lin, "R-race")
+
+    n = 3
+    barrier = threading.Barrier(n, timeout=120)
+    real_latest = S.latest_seq
+
+    def racing_latest(path, fs=S.LOCAL_FS):
+        seq = real_latest(path, fs)
+        barrier.wait()  # every writer's lineage file landed, same seq read
+        return seq
+
+    monkeypatch.setattr(S, "latest_seq", racing_latest)
+    results = {}
+
+    def commit(k):
+        cfg = ExtractConfig(src, out, run_id=f"W{k}", buckets=BUCKETS)
+        try:
+            results[k] = commit_run(spark, fmt, cfg, "overwrite", src)[1]
+        except S.SeqConflictError as e:
+            results[k] = e
+
+    threads = [threading.Thread(target=commit, args=(k,)) for k in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    monkeypatch.undo()
+    assert not any(t.is_alive() for t in threads)
+    won = [k for k, v in results.items() if isinstance(v, dict)]
+    assert len(won) == 1, results
+    assert all(isinstance(results[k], S.SeqConflictError) for k in results if k not in won)
+    assert results[won[0]]["seq"] == 1
+
+    runs = {r["run_id"] for r in spark.read.parquet(lin).select("run_id").collect()}
+    assert runs == {"R-race", f"W{won[0]}"}
+    assert len([n for n in os.listdir(lin) if n.endswith(".parquet")]) == 2
+    assert done_buckets(spark, fmt, lin, f"W{won[0]}") == written
+    for k in results:
+        if k not in won:
+            assert done_buckets(spark, fmt, lin, f"W{k}") == []
+    hist = S.read_snapshots(spark, os.path.join(out, "snapshots")).collect()
+    assert [(r["seq"], r["run_id"]) for r in hist] == [(0, "R-race"), (1, f"W{won[0]}")]
+
+
+def test_create_exclusive_syncs_data_before_linking_it(tmp_path, monkeypatch):
+    """The file's bytes reach the disk before its name does, and the name
+    is synced after: a power loss leaves no file or all of it."""
+    events = []
+    real_fsync, real_link = os.fsync, os.link
+    monkeypatch.setattr(os, "fsync", lambda fd: (events.append("fsync"), real_fsync(fd)))
+    monkeypatch.setattr(os, "link", lambda a, b: (events.append("link"), real_link(a, b)))
+    LOCAL_FS.create_exclusive(str(tmp_path / "d" / "f.bin"), b"abc")
+    assert events == ["fsync", "link", "fsync"]
+    assert (tmp_path / "d" / "f.bin").read_bytes() == b"abc"
+    assert os.listdir(tmp_path / "d") == ["f.bin"]
+    with pytest.raises(FileExistsError):
+        LOCAL_FS.create_exclusive("file://" + str(tmp_path / "d" / "f.bin"), b"x")
+    assert (tmp_path / "d" / "f.bin").read_bytes() == b"abc"
