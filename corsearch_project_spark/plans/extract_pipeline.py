@@ -50,7 +50,7 @@ from corsearch_project_spark.sources.io import (
     done_buckets,
     scan_pages,
 )
-from corsearch_project_spark.sources.lineage import lineage_rows
+from corsearch_project_spark.sources.lineage import LINEAGE_INPUT_SCHEMA, lineage_rows
 from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
 
 
@@ -194,6 +194,7 @@ class Extraction(NamedTuple):
     extracted: DataFrame  # kernel output with url_bucket re-derived JVM-side
     pages: DataFrame  # the deduped, salted pages the kernel consumed
     hot: List[str]  # hot hosts found on the input
+    kernel_tasks: int  # tasks of the kernel stage (n_kernel)
 
 
 def extract_pages(
@@ -206,7 +207,10 @@ def extract_pages(
     """The shared prelude: hot hosts, latest-wins dedupe, salt, the kernel
     shuffle and the ONE Python stage, over bucketed ``pages``. ``cfg``
     supplies buckets, salt, hot_frac and kernel_partitions. Spark runs one
-    job here (hot_hosts); the rest is plan construction."""
+    job here (hot_hosts); the rest is plan construction.
+
+    The kernel stage runs one Python task per slot
+    (``defaultParallelism``); ``cfg.kernel_partitions`` overrides it."""
     # Hot-host detection runs on the PRE-dedupe relation: projecting just
     # `url` lets Parquet skip the fat `html` binary column entirely, and
     # avoids paying the dedupe window's shuffle twice. Re-crawl duplicates
@@ -228,15 +232,20 @@ def extract_pages(
     # CPU-bound Python kernel stage over small-but-expensive rows that
     # collapsed the stage to 1-2 tasks regardless of cores (measured: flat
     # scaling local[8]→local[32]). Bytes are the wrong currency here.
-    n_kernel = cfg.kernel_partitions or max(
-        cfg.buckets, 2 * spark.sparkContext.defaultParallelism
-    )
+    # One task per slot: every Python task pays a fixed ~0.3-0.4 s
+    # (plans/session.py), so each extra wave adds that cost. Measured on 4
+    # vCPUs at local[4], crawl-mix backfills: 8000 docs took 1.5-1.7 s of
+    # kernel stage in 4 tasks, 1.6-1.9 s in 8 and 2.6-2.7 s in 16; 24000
+    # docs 3.4-4.2 s in 4 tasks, 3.8-4.9 s in 8 and 5.2-5.9 s in 24. The
+    # bucket count is no lower bound: the salt already gives B×S shuffle
+    # keys, and the write exchange regroups rows by bucket after the kernel.
+    n_kernel = cfg.kernel_partitions or spark.sparkContext.defaultParallelism
     shuffled = sel.repartition(n_kernel, *part_cols)
 
     rules_bc = spark.sparkContext.broadcast(rules_to_plain(rules or {}))
     kernel = run_dual_kernel if with_markdown else run_kernel
     extracted = with_url_bucket(kernel(shuffled, rules_bc), cfg.buckets)
-    return Extraction(extracted, pages, hot)
+    return Extraction(extracted, pages, hot, n_kernel)
 
 
 def commit_run(
@@ -252,8 +261,10 @@ def commit_run(
     """Commit the ledger of a run whose data write has landed.
 
     ONE job over the committed table (only ``buckets`` of it when given)
-    computes the per-bucket lineage rows (B rows — tiny, collected); rows
-    of ``skip`` buckets, committed by an earlier attempt of the same run,
+    computes the per-bucket lineage rows (B rows — tiny, collected); the
+    scan reads only the columns lineage_rows needs, under a declared
+    schema, so no job infers the schema from the file footers. Rows of
+    ``skip`` buckets, committed by an earlier attempt of the same run,
     are dropped. The rest are written from the driver through the ``fs``
     seam, with no Spark job: one lineage file, then one snapshot file
     named by the next seq (sources/snapshots.py). Both are created
@@ -261,23 +272,35 @@ def commit_run(
     that took the same seq makes ``append_snapshot`` raise
     ``SeqConflictError``; this run's lineage file is then removed, so a
     retry (``--resume``) of the run redoes its buckets instead of
-    skipping them. ``cfg`` supplies run_id and the table paths. Returns
-    (lineage rows, snapshot); nothing is appended and the snapshot is
-    None when no rows remain."""
-    committed = fmt.read_extracted(spark, cfg.extracted_path)
+    skipping them.
+
+    An earlier attempt that crashed between its lineage and snapshot
+    files left ``skip`` buckets that no snapshot of the run covers
+    (``snapshots.run_buckets``, read on the driver). The snapshot
+    committed here covers them too, with their rows from the same job
+    over the committed table — one row per bucket, whatever number of
+    crashed attempts wrote lineage for it — so a resume that skips every
+    bucket still commits the run's snapshot. ``cfg`` supplies run_id and
+    the table paths. Returns (lineage rows, snapshot); nothing is
+    appended and the snapshot is None when no new or uncovered rows
+    remain."""
+    committed = fmt.read_extracted(spark, cfg.extracted_path, LINEAGE_INPUT_SCHEMA)
     lin = lineage_rows(committed, cfg.run_id, input_split, buckets=buckets).collect()
     skipped = set(skip)
+    covered = snapshots.run_buckets(cfg.snapshots_path, cfg.run_id, fs) if skipped else set()
     rows = [r for r in lin if r["url_bucket"] not in skipped]
-    if not rows:
+    orphans = [r for r in lin if r["url_bucket"] in skipped - covered]
+    if not rows and not orphans:
         return rows, None
     lin_file = fmt.append_lineage(rows, cfg.lineage_path, fs=fs)
     try:
         snap = snapshots.append_snapshot(
             spark, cfg.snapshots_path, cfg.run_id, operation,
-            [r.asDict() for r in rows], fs=fs,
+            [r.asDict() for r in rows + orphans], fs=fs,
         )
     except snapshots.SeqConflictError:
-        fs.rmtree(lin_file)
+        if lin_file is not None:
+            fs.rmtree(lin_file)
         raise
     return rows, snap
 
@@ -307,13 +330,14 @@ def run_extract(
 
     skipped: List[int] = []
     if cfg.resume:
-        skipped = done_buckets(spark, fmt, cfg.lineage_path, cfg.run_id)
+        skipped = done_buckets(cfg.lineage_path, cfg.run_id, fs)
     if skipped:
         pages = pages.where(~F.col("url_bucket").isin(skipped))
     if cfg.bucket_whitelist is not None:
         pages = pages.where(F.col("url_bucket").isin(list(cfg.bucket_whitelist)))
 
-    extracted, pages, hot = extract_pages(spark, pages, cfg, rules, cfg.with_markdown)
+    ext = extract_pages(spark, pages, cfg, rules, cfg.with_markdown)
+    extracted, pages = ext.extracted, ext.pages
     phases.mark("hot_hosts")
 
     # Write-clustering exchange: the kernel ran on fine-grained (bucket,
@@ -354,7 +378,8 @@ def run_extract(
         "phase_wall_s": phases,
         "buckets_written": sorted(r["url_bucket"] for r in new_rows),
         "buckets_skipped": skipped,
-        "hot_hosts": hot,
+        "hot_hosts": ext.hot,
+        "kernel_tasks": ext.kernel_tasks,
         "docs_out": sum(r["doc_count"] for r in new_rows),
         "extracted_path": cfg.extracted_path,
         "lineage_path": cfg.lineage_path,

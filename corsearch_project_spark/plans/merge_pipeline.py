@@ -107,7 +107,8 @@ def run_merge(
     phases = Phases()
     fmt = ParquetBucketedFormat(cfg.max_records_per_file)
     inc = scan_input(spark, cfg.increment_path, cfg.input_format, cfg.buckets)
-    new_ext = extract_pages(spark, inc, cfg, rules).extracted.persist()
+    ext = extract_pages(spark, inc, cfg, rules)
+    new_ext = ext.extracted.persist()
 
     # Buckets the increment lands in — partition-prunes every read of the
     # existing table below. B is bounded, so a driver-side literal list
@@ -150,6 +151,7 @@ def run_merge(
             "docs_added": 0,
             "docs_updated": 0,
             "docs_unchanged": n_unchanged,
+            "kernel_tasks": ext.kernel_tasks,
             "phase_wall_s": phases,
             "extracted_path": cfg.extracted_path,
         }
@@ -182,6 +184,7 @@ def run_merge(
         "docs_added": n_new,
         "docs_updated": n_updated,
         "docs_unchanged": n_unchanged,
+        "kernel_tasks": ext.kernel_tasks,
         "phase_wall_s": phases,
         "extracted_path": cfg.extracted_path,
         "lineage_path": cfg.lineage_path,

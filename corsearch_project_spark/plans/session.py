@@ -13,7 +13,15 @@ Every conf here is a deliberate 100-TB design decision (SURVEY.md §4):
   cluster set ~2-3× total executor cores (AQE coalesces the excess).
 - python.worker.reuse keeps the forked Python workers (and their imported
   extraction core) warm across tasks — worker startup would otherwise
-  dominate small tasks.
+  dominate small tasks. Reuse does not remove the fixed cost of a Python
+  task, though: on PySpark 4.1, 4 vCPUs, an identity mapInArrow over 4000
+  rows took 0.32-0.49 s in 4 tasks, 1.0-1.5 s in 16 and 4.6 s in 64, on
+  4 reused workers, with a ~1 ms function body. Each task spends 0.2-0.3 s
+  blocked in pyspark.worker's ``setup_spark_files``, reading the rest of
+  the task header from the JVM. Disabling worker reuse, Unix domain
+  sockets, the faulthandler or a larger Arrow batch did not remove the
+  wait, so the kernel stage runs one task per slot instead
+  (plans/extract_pipeline.py ``n_kernel``).
 """
 
 from __future__ import annotations

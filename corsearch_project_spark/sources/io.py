@@ -17,7 +17,7 @@ import re
 import uuid
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources.schemas import (
@@ -25,7 +25,11 @@ from corsearch_project_spark.sources.schemas import (
     LINEAGE_SCHEMA,
     PAGES_SCHEMA,
 )
-from corsearch_project_spark.sources.snapshots import write_ledger_file
+from corsearch_project_spark.sources.snapshots import (
+    ledger_files,
+    read_run_rows,
+    write_ledger_file,
+)
 
 
 def scan_pages(spark: SparkSession, path: str) -> DataFrame:
@@ -35,12 +39,34 @@ def scan_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
+def _file_tag(tag: str) -> str:
+    return re.sub(r"[^A-Za-z0-9_.-]", "_", tag)
+
+
+_LINEAGE_NAME = re.compile(r"lin-(.*)-[0-9a-f]{12}\.parquet")
+
+
 def lineage_file_name(tag: str) -> str:
     """Unique name for one lineage ledger file: ``lin-<tag>-<random>``.
     The prefix keeps a tag starting with ``_`` or ``.`` from hiding the
     file from readers."""
-    safe = re.sub(r"[^A-Za-z0-9_.-]", "_", tag)
-    return f"lin-{safe}-{uuid.uuid4().hex[:12]}.parquet"
+    return f"lin-{_file_tag(tag)}-{uuid.uuid4().hex[:12]}.parquet"
+
+
+def run_lineage_files(path: str, run_id: str, fs=LOCAL_FS) -> List[str]:
+    """The lineage files under ``path`` that can hold rows of ``run_id``:
+    its own ``lin-<run_id>-*`` files, the ``lin-compact-*`` file of
+    maintenance.expire_snapshots, and files of any other name (Spark's
+    ``part-*`` files of a table committed before per-commit files). Other
+    runs' files are not read, so the cost follows the run, not the
+    table's history."""
+    tags = {_file_tag(run_id), "compact"}
+    files = []
+    for file in ledger_files(path, fs):
+        m = _LINEAGE_NAME.fullmatch(file.rsplit("/", 1)[1])
+        if m is None or m.group(1) in tags:
+            files.append(file)
+    return files
 
 
 class ParquetBucketedFormat:
@@ -75,8 +101,15 @@ class ParquetBucketedFormat:
             .parquet(path)
         )
 
-    def read_extracted(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(path)
+    def read_extracted(
+        self, spark: SparkSession, path: str, schema: Optional[T.StructType] = None
+    ) -> DataFrame:
+        """The extracted table at ``path``. With a read ``schema`` (a subset
+        of EXTRACTED_SCHEMA's columns) the scan reads only those columns
+        and Spark runs no job to infer the schema from the file footers."""
+        if schema is None:
+            return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     def append_lineage(self, rows, path: str, fs=LOCAL_FS) -> Optional[str]:
         """S4: append-only metrics table (small: B rows per run). ``rows``
@@ -198,19 +231,12 @@ def read_evolved(
     return df.select(*out)
 
 
-def done_buckets(
-    spark: SparkSession, fmt: ParquetBucketedFormat, lineage_path: str, run_id: str
-) -> List[int]:
-    """P5 resume input: buckets already committed for this run_id. B is small
-    (≤ thousands) so collecting to a literal list lets the scan-side filter
-    prune partitions instead of joining."""
-    lin = fmt.read_lineage(spark, lineage_path)
-    if lin is None:
-        return []
-    rows = (
-        lin.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("url_bucket")
-        .distinct()
-        .collect()
+def done_buckets(lineage_path: str, run_id: str, fs=LOCAL_FS) -> List[int]:
+    """P5 resume input: buckets already committed for this run_id, read
+    on the driver from the run's lineage files (``run_lineage_files``)
+    with no Spark job. B is small (≤ thousands) so collecting to a literal
+    list lets the scan-side filter prune partitions instead of joining."""
+    rows = read_run_rows(
+        run_lineage_files(lineage_path, run_id, fs), run_id, ("url_bucket", "status"), fs
     )
-    return sorted(r["url_bucket"] for r in rows)
+    return sorted({r["url_bucket"] for r in rows if r["status"] == "done"})

@@ -12,11 +12,21 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from corsearch_project_spark.functions.sql import (
     digest_xor_chunks,
     digest_xor_concat,
+)
+from corsearch_project_spark.sources.schemas import EXTRACTED_SCHEMA
+
+# The extracted-table columns lineage_rows reads: a read schema for the
+# committed table that prunes every other column (markdown ones included).
+LINEAGE_INPUT_SCHEMA = T.StructType(
+    [
+        EXTRACTED_SCHEMA[c]
+        for c in ("url_bucket", "bytes_in", "extract_us", "text_sha256")
+    ]
 )
 
 

@@ -34,7 +34,7 @@ sources/io.py's TableFormat.
 from __future__ import annotations
 
 import re
-from typing import List, Optional
+from typing import List, Optional, Sequence, Set
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -92,6 +92,44 @@ def write_ledger_file(
     return file
 
 
+def ledger_files(path: str, fs=LOCAL_FS) -> List[str]:
+    """Paths of the Parquet files under ledger dir ``path`` (none when it
+    does not exist). Hidden files — ``_SUCCESS``, a torn ``.tmp`` — are
+    skipped, as Spark skips them."""
+    if not fs.exists(path):
+        return []
+    path = path.rstrip("/")
+    return [
+        f"{path}/{name}"
+        for name in fs.listdir(path)
+        if not name.startswith((".", "_")) and name.endswith(".parquet")
+    ]
+
+
+def read_run_rows(
+    files: Sequence[str], run_id: str, columns: Sequence[str], fs=LOCAL_FS
+) -> List[dict]:
+    """``columns`` of the rows of ``run_id`` in the ledger ``files``
+    (lineage or snapshots), read on the driver through the ``fs`` seam
+    with no Spark job; only those columns and run_id are decoded."""
+    rows: List[dict] = []
+    for file in files:
+        table = pq.read_table(
+            pa.BufferReader(fs.read_bytes(file)), columns=["run_id", *columns]
+        )
+        mine = table.filter(pc.equal(table.column("run_id"), run_id))
+        rows += mine.select(list(columns)).to_pylist()
+    return rows
+
+
+def run_buckets(path: str, run_id: str, fs=LOCAL_FS) -> Set[int]:
+    """The buckets that snapshots of ``run_id`` under ``path`` cover.
+    Snapshot files are named by seq, not run, so every one is read —
+    only its run_id and buckets columns; expire_snapshots compacts them."""
+    rows = read_run_rows(ledger_files(path, fs), run_id, ("buckets",), fs)
+    return {b for r in rows for b in r["buckets"]}
+
+
 def latest_seq(path: str, fs=LOCAL_FS) -> Optional[int]:
     """Highest snapshot seq committed under ``path``; None when there is
     no snapshot row. A ``seq-<N>.parquet`` file counts by its name; any
@@ -99,18 +137,13 @@ def latest_seq(path: str, fs=LOCAL_FS) -> Optional[int]:
     committed before seq-named files) counts by the max seq stored in it.
     An unnamed file that cannot be read raises ValueError: guessing a seq
     could reuse a committed one."""
-    if not fs.exists(path):
-        return None
-    path = path.rstrip("/")
     seqs = []
-    for name in fs.listdir(path):
-        if name.startswith((".", "_")) or not name.endswith(".parquet"):
-            continue
-        m = _SEQ_NAME.fullmatch(name)
+    for file in ledger_files(path, fs):
+        m = _SEQ_NAME.fullmatch(file.rsplit("/", 1)[1])
         if m is not None:
             seqs.append(int(m.group(1)))
             continue
-        stored = _stored_max_seq(f"{path}/{name}", fs)
+        stored = _stored_max_seq(file, fs)
         if stored is not None:
             seqs.append(stored)
     return max(seqs, default=None)

@@ -30,7 +30,11 @@ from corsearch_project_spark.plans.extract_pipeline import (
 from corsearch_project_spark.plans.merge_pipeline import MergeConfig, run_merge
 from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources import snapshots as S
-from corsearch_project_spark.sources.io import ParquetBucketedFormat, done_buckets
+from corsearch_project_spark.sources.io import (
+    ParquetBucketedFormat,
+    done_buckets,
+    lineage_file_name,
+)
 from corsearch_project_spark.sources.maintenance import vacuum_staging
 
 from test_merge import BUCKETS, _extract_all, _write_pages
@@ -115,11 +119,10 @@ def test_crash_between_lineage_and_snapshot_file_leaves_committable_table(
         run_extract(spark, ExtractConfig(src, out, run_id="R-dead", buckets=BUCKETS))
     monkeypatch.undo()
 
-    fmt = ParquetBucketedFormat()
     lin_path, snap_path = os.path.join(out, "lineage"), os.path.join(out, "snapshots")
-    written = done_buckets(spark, fmt, lin_path, "R-crash")
+    written = done_buckets(lin_path, "R-crash")
     assert written
-    assert done_buckets(spark, fmt, lin_path, "R-dead") == written  # lineage landed
+    assert done_buckets(lin_path, "R-dead") == written  # lineage landed
     hist = S.read_snapshots(spark, snap_path).collect()
     assert [r["run_id"] for r in hist] == ["R-crash"]
 
@@ -127,12 +130,149 @@ def test_crash_between_lineage_and_snapshot_file_leaves_committable_table(
     assert rep["snapshot"]["seq"] == 1
     hist = S.read_snapshots(spark, snap_path).collect()
     assert [(r["seq"], r["run_id"]) for r in hist] == [(0, "R-crash"), (1, "R-next")]
-    assert done_buckets(spark, fmt, lin_path, "R-next") == written
+    assert done_buckets(lin_path, "R-next") == written
     v = validate_table(
         spark, os.path.join(out, "extracted"), lin_path, "R-next", BUCKETS,
         snapshots_path=snap_path,
     )
     assert v["ok"], v
+
+
+def test_resume_commits_the_snapshot_a_crash_left_out(spark, tmp_path, monkeypatch):
+    """A commit that dies between its lineage and snapshot files leaves
+    lineage rows that count as done buckets. Here the run dies there
+    twice (the second attempt without --resume), so lineage holds two
+    rows per bucket. A --resume of that run skips every bucket and still
+    commits exactly one snapshot for it, one row per bucket, with the
+    lineage totals; a further resume appends nothing."""
+    from validate_table import validate_table
+
+    base = gen_pages(40, seed=97, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "orphan")
+    src = str(tmp_path / "orphan.parquet")
+    lin_path, snap_path = os.path.join(out, "lineage"), os.path.join(out, "snapshots")
+
+    class _Crash(Exception):
+        pass
+
+    real = S.append_snapshot
+    crashes = []
+
+    def crash_twice(*args, **kwargs):
+        if len(crashes) < 2:
+            crashes.append(1)
+            raise _Crash("killed before the snapshot file")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "append_snapshot", crash_twice)
+    cfg = ExtractConfig(src, out, run_id="R-torn", buckets=BUCKETS)
+    for _ in range(2):
+        with pytest.raises(_Crash):
+            run_extract(spark, cfg)
+    assert [r["run_id"] for r in S.read_snapshots(spark, snap_path).collect()] == ["R-orphan"]
+    lin_rows = (
+        ParquetBucketedFormat().read_lineage(spark, lin_path)
+        .where("run_id = 'R-torn'").collect()
+    )
+    by_bucket = {}
+    for r in lin_rows:
+        by_bucket.setdefault(r["url_bucket"], set()).add(
+            (r["doc_count"], r["bytes_in"], r["sha256_rollup"])
+        )
+    assert len(lin_rows) == 2 * len(by_bucket)
+    assert all(len(v) == 1 for v in by_bucket.values())  # both attempts agree
+    lin = [v.pop() for _, v in sorted(by_bucket.items())]
+
+    cfg.resume = True
+    rep = run_extract(spark, cfg)
+    assert rep["buckets_written"] == []
+    assert rep["buckets_skipped"] == sorted(by_bucket)
+    snap = rep["snapshot"]
+    assert (snap["seq"], snap["run_id"], snap["operation"]) == (1, "R-torn", "resume-append")
+    assert snap["buckets"] == rep["buckets_skipped"]
+    assert snap["n_buckets"] == len(lin)
+    assert snap["doc_count"] == sum(d for d, _, _ in lin) == len(base)
+    assert snap["bytes_in"] == sum(b for _, b, _ in lin)
+    assert snap["rollup_xor"] == S._xor_hex([h for _, _, h in lin])
+    hist = [r.asDict() for r in S.read_snapshots(spark, snap_path).collect()]
+    assert [h for h in hist if h["run_id"] == "R-torn"] == [snap]
+    v = validate_table(
+        spark, os.path.join(out, "extracted"), lin_path, "R-torn", BUCKETS,
+        snapshots_path=snap_path,
+    )
+    assert v["ok"], v
+
+    assert run_extract(spark, cfg)["snapshot"] is None
+    assert len(S.read_snapshots(spark, snap_path).collect()) == 2
+
+
+def test_done_buckets_reads_only_the_runs_lineage_files(tmp_path):
+    """done_buckets reads, on the driver, the run's own lin-<run_id>-*
+    files, the lin-compact-* file of expiry and Spark-named part-* files
+    of older tables; other runs' files are not opened."""
+    from corsearch_project_spark.sources.fs import LocalFS
+    from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
+
+    lin = str(tmp_path / "lineage")
+
+    def row(run_id, b, status="done"):
+        return {"run_id": run_id, "url_bucket": b, "input_split": "x",
+                "doc_count": 1, "sha256_rollup": "0" * 64, "status": status,
+                "wall_ms": 0, "bytes_in": 1}
+
+    fmt = ParquetBucketedFormat()
+    fmt.append_lineage([row("R-a", 1), row("R-a", 2)], lin)
+    fmt.append_lineage([row("R-a", 2), row("R-a", 9, "failed")], lin)
+    fmt.append_lineage([row("R-ab", 3)], lin)
+    fmt.append_lineage([row("R", 4)], lin)
+    S.write_ledger_file(
+        lin, lineage_file_name("compact"), [row("R-a", 5), row("R", 6)], LINEAGE_SCHEMA
+    )
+    S.write_ledger_file(
+        lin, "part-00000-x.snappy.parquet", [row("R-a", 7), row("Z", 8)], LINEAGE_SCHEMA
+    )
+
+    class Recording(LocalFS):
+        def __init__(self):
+            self.read = []
+
+        def read_bytes(self, path):
+            self.read.append(os.path.basename(path))
+            return super().read_bytes(path)
+
+    fs = Recording()
+    assert done_buckets(lin, "R-a", fs) == [1, 2, 5, 7]
+    assert len(fs.read) == 4, fs.read  # 2 own files, compact, part
+    assert all(n.startswith(("lin-R-a-", "lin-compact-", "part-")) for n in fs.read)
+    assert done_buckets(lin, "R", LocalFS()) == [4, 6]
+    assert done_buckets(str(tmp_path / "missing"), "R-a") == []
+
+
+def test_commit_read_back_runs_no_schema_inference_job(spark, tmp_path):
+    """commit_run reads the committed table under a declared read schema
+    of the lineage columns, so none of its Spark jobs is the footer
+    inference job Spark runs for a schema-less read ("parquet at ...")."""
+    base = gen_pages(30, seed=98, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "readback")
+    src = str(tmp_path / "readback.parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("commit-read-back", "commit_run read-back")
+    try:
+        rows, snap = commit_run(
+            spark, ParquetBucketedFormat(),
+            ExtractConfig(src, out, run_id="R-rb", buckets=BUCKETS), "overwrite", src,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert snap["doc_count"] == len(base)
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in tracker.getJobIdsForGroup("commit-read-back")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert stages
+    assert not [n for n in stages if n.startswith("parquet at")], stages
 
 
 def test_killed_writer_leftover_is_invisible_and_vacuumed(spark, tmp_path):
@@ -211,10 +351,7 @@ def test_legacy_spark_named_ledger_keeps_committing(spark, tmp_path):
     assert [(r["seq"], r["run_id"]) for r in hist] == [
         (0, "R-legacy"), (1, "R-legacy-2"), (2, "R-new")
     ]
-    fmt = ParquetBucketedFormat()
-    assert done_buckets(spark, fmt, lin, "R-new") == done_buckets(
-        spark, fmt, lin, "R-legacy"
-    )
+    assert done_buckets(lin, "R-new") == done_buckets(lin, "R-legacy")
     assert S.latest_seq(snap) == _latest_seq(snap) == 2
 
 
@@ -289,7 +426,7 @@ def test_seq_race_loser_removes_its_lineage_file(spark, tmp_path, monkeypatch):
     src = str(tmp_path / "race.parquet")
     lin = os.path.join(out, "lineage")
     fmt = ParquetBucketedFormat()
-    written = done_buckets(spark, fmt, lin, "R-race")
+    written = done_buckets(lin, "R-race")
 
     n = 3
     barrier = threading.Barrier(n, timeout=120)
@@ -325,10 +462,10 @@ def test_seq_race_loser_removes_its_lineage_file(spark, tmp_path, monkeypatch):
     runs = {r["run_id"] for r in spark.read.parquet(lin).select("run_id").collect()}
     assert runs == {"R-race", f"W{won[0]}"}
     assert len([n for n in os.listdir(lin) if n.endswith(".parquet")]) == 2
-    assert done_buckets(spark, fmt, lin, f"W{won[0]}") == written
+    assert done_buckets(lin, f"W{won[0]}") == written
     for k in results:
         if k not in won:
-            assert done_buckets(spark, fmt, lin, f"W{k}") == []
+            assert done_buckets(lin, f"W{k}") == []
     hist = S.read_snapshots(spark, os.path.join(out, "snapshots")).collect()
     assert [(r["seq"], r["run_id"]) for r in hist] == [(0, "R-race"), (1, f"W{won[0]}")]
 
