@@ -193,7 +193,6 @@ def scan_input(spark: SparkSession, path: str, input_format: str, buckets: int) 
 class Extraction(NamedTuple):
     extracted: DataFrame  # kernel output with url_bucket re-derived JVM-side
     pages: DataFrame  # the deduped, salted pages the kernel consumed
-    hot: List[str]  # hot hosts found on the input
     kernel_tasks: int  # tasks of the kernel stage (n_kernel)
 
 
@@ -204,26 +203,19 @@ def extract_pages(
     rules: Optional[Dict[str, Rule]],
     with_markdown: bool = False,
 ) -> Extraction:
-    """The shared prelude: hot hosts, latest-wins dedupe, salt, the kernel
-    shuffle and the ONE Python stage, over bucketed ``pages``. ``cfg``
-    supplies buckets, salt, hot_frac and kernel_partitions. Spark runs one
-    job here (hot_hosts); the rest is plan construction.
+    """The shared prelude: latest-wins dedupe, salt, the kernel shuffle
+    and the ONE Python stage, over bucketed ``pages``. ``cfg`` supplies
+    buckets, salt and kernel_partitions. Spark runs no job here: it is
+    plan construction only.
 
     The kernel stage runs one Python task per slot
     (``defaultParallelism``); ``cfg.kernel_partitions`` overrides it."""
-    # Hot-host detection runs on the PRE-dedupe relation: projecting just
-    # `url` lets Parquet skip the fat `html` binary column entirely, and
-    # avoids paying the dedupe window's shuffle twice. Re-crawl duplicates
-    # inflate per-host counts slightly, which only makes the skew heuristic
-    # more conservative — exactly what we want from a skew detector.
-    hot = hot_hosts(pages.select("url"), cfg.hot_frac)
-
     # Project BEFORE deduping: max(struct) packs every input column into the
     # aggregate, which defeats Catalyst's column pruning through the agg —
     # an explicit projection here is what keeps unused columns (lang) out of
     # the Parquet scan (asserted by test_plans' ReadSchema audit).
     pages = dedupe_latest(pages.select("url", "warc_ts", "html", "text", "url_bucket"))
-    pages = with_salt(pages, hot, cfg.salt)
+    pages = with_salt(pages, s=cfg.salt)
 
     sel = pages.select("url", "html", "text", "url_bucket", "salt")
     part_cols = [F.col("url_bucket"), F.col("salt")]
@@ -245,7 +237,7 @@ def extract_pages(
     rules_bc = spark.sparkContext.broadcast(rules_to_plain(rules or {}))
     kernel = run_dual_kernel if with_markdown else run_kernel
     extracted = with_url_bucket(kernel(shuffled, rules_bc), cfg.buckets)
-    return Extraction(extracted, pages, hot, n_kernel)
+    return Extraction(extracted, pages, n_kernel)
 
 
 def commit_run(
@@ -336,6 +328,11 @@ def run_extract(
     if cfg.bucket_whitelist is not None:
         pages = pages.where(F.col("url_bucket").isin(list(cfg.bucket_whitelist)))
 
+    # Reported only: with_salt salts every url, so the hot hosts steer
+    # nothing. Counted on the pre-dedupe `url` column alone, which Parquet
+    # reads without the fat `html` column; re-crawl duplicates inflate the
+    # per-host counts slightly.
+    hot = hot_hosts(pages.select("url"), cfg.hot_frac)
     ext = extract_pages(spark, pages, cfg, rules, cfg.with_markdown)
     extracted, pages = ext.extracted, ext.pages
     phases.mark("hot_hosts")
@@ -378,7 +375,7 @@ def run_extract(
         "phase_wall_s": phases,
         "buckets_written": sorted(r["url_bucket"] for r in new_rows),
         "buckets_skipped": skipped,
-        "hot_hosts": ext.hot,
+        "hot_hosts": hot,
         "kernel_tasks": ext.kernel_tasks,
         "docs_out": sum(r["doc_count"] for r in new_rows),
         "extracted_path": cfg.extracted_path,

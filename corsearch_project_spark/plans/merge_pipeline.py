@@ -8,16 +8,20 @@ O(increment + touched buckets):
 
   1. dedupe + extract the increment through the SAME prelude as
      run_extract (extract_pipeline.extract_pages — per-url output provably
-     byte-identical to a full run);
-  2. classify each extracted row against the existing table by url —
-     `new` (url absent) or `updated` (text_sha256 differs); rows whose
-     digest is unchanged are dropped (a re-crawl of identical content
-     must not dirty a bucket);
-  3. rewrite only the buckets holding new/updated rows: per bucket,
-     existing rows minus replaced urls, union the fresh rows — committed
-     via dynamic partition overwrite, so untouched buckets are never
-     rewritten (the manual copy-on-write MERGE an Iceberg deployment gets
-     from `MERGE INTO` — same TableFormat seam, sources/io.py);
+     byte-identical to a full run), with the markdown arm exactly when the
+     existing table has its columns;
+  2. classify: ONE join of the extracted rows against the touched buckets'
+     (url, digests) tags each row `new` (url absent), `updated`
+     (text_sha256, or md_sha256 when the table has it, differs) or
+     `unchanged`, and ONE aggregate over (url_bucket, state) yields the
+     three doc counts and the buckets to rewrite. Unchanged rows are
+     dropped (a re-crawl of identical content must not dirty a bucket);
+  3. rewrite only the buckets holding new/updated rows, in the table's
+     own columns: per bucket, existing rows minus replaced urls, union
+     the fresh rows — committed via dynamic partition overwrite, so
+     untouched buckets are never rewritten (the manual copy-on-write
+     MERGE an Iceberg deployment gets from `MERGE INTO` — same
+     TableFormat seam, sources/io.py);
   4. recompute lineage rows for exactly the rewritten buckets and append
      a `merge-increment` snapshot (extract_pipeline.commit_run), keeping
      checkpoint/validate semantics: `jobs/validate_table.py --run-id
@@ -35,6 +39,7 @@ table.
 from __future__ import annotations
 
 import uuid
+from collections import Counter
 from dataclasses import dataclass
 from typing import Dict, Optional
 
@@ -54,7 +59,10 @@ from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources.io import ParquetBucketedFormat
 from corsearch_project_spark.webextract.rules import Rule
 
-# Unused here, but perfbench/spans.py wraps these seven names on this module.
+# Never called here: the merge reaches them through extract_pipeline's
+# scan_input, extract_pages and commit_run. They are re-imported only so that
+# the seven names perfbench/spans.py wraps on this module resolve
+# (tests/test_pipeline.py::test_bench_tracer_targets_resolve).
 from corsearch_project_spark.operators.kernel import run_kernel  # noqa: F401
 from corsearch_project_spark.operators.partitioning import (  # noqa: F401
     hot_hosts,
@@ -74,27 +82,12 @@ class MergeConfig(TableRoot):
     input_format: str = "pages"  # 'pages' | 'warc'
     buckets: int = DEFAULT_BUCKETS
     salt: int = DEFAULT_SALT
-    hot_frac: float = 0.05
     kernel_partitions: Optional[int] = None
     max_records_per_file: int = 50_000
 
     def __post_init__(self):
         if not self.run_id:
             self.run_id = "m" + uuid.uuid4().hex[:11]
-
-
-_EXTRACTED_COLS = [
-    "url",
-    "doc_kind",
-    "extracted_text",
-    "spans",
-    "text_sha256",
-    "n_blocks",
-    "n_chars",
-    "bytes_in",
-    "extract_us",
-    "url_bucket",
-]
 
 
 def run_merge(
@@ -106,86 +99,83 @@ def run_merge(
     check_ledger_root(cfg, fs)
     phases = Phases()
     fmt = ParquetBucketedFormat(cfg.max_records_per_file)
-    inc = scan_input(spark, cfg.increment_path, cfg.input_format, cfg.buckets)
-    ext = extract_pages(spark, inc, cfg, rules)
-    new_ext = ext.extracted.persist()
-
-    # Buckets the increment lands in — partition-prunes every read of the
-    # existing table below. B is bounded, so a driver-side literal list
-    # beats a join (same rationale as done_buckets).
-    touched = sorted(
-        r["url_bucket"] for r in new_ext.select("url_bucket").distinct().collect()
-    )
-    phases.mark("extract_increment")
-
     existing = fmt.read_extracted(spark, cfg.extracted_path)
-    ex_touched = existing.where(F.col("url_bucket").isin(touched))
-    changed = (
-        new_ext.join(
-            ex_touched.select("url", F.col("text_sha256").alias("_old_sha")),
-            "url",
-            "left",
+    inc = scan_input(spark, cfg.increment_path, cfg.input_format, cfg.buckets)
+    # The increment is extracted into the table's own columns: with the
+    # markdown arm exactly when the table carries it.
+    ext = extract_pages(spark, inc, cfg, rules, "extracted_md" in existing.columns)
+    new_ext = ext.extracted.persist()
+    classified = None
+    try:
+        # Buckets the increment lands in — partition-prunes every read of
+        # the existing table below. B is bounded, so a driver-side literal
+        # list beats a join (same rationale as done_buckets).
+        touched = sorted(
+            r["url_bucket"] for r in new_ext.select("url_bucket").distinct().collect()
         )
-        .where(
-            F.col("_old_sha").isNull()
-            | (F.col("text_sha256") != F.col("_old_sha"))
-        )
-        .withColumn("_is_new", F.col("_old_sha").isNull())
-        .drop("_old_sha")
-        .persist()
-    )
-    n_new = changed.where(F.col("_is_new")).count()
-    n_updated = changed.where(~F.col("_is_new")).count()
-    n_unchanged = new_ext.count() - n_new - n_updated
-    ch_buckets = sorted(
-        r["url_bucket"] for r in changed.select("url_bucket").distinct().collect()
-    )
-    phases.mark("classify")
+        phases.mark("extract_increment")
 
-    if not ch_buckets:
-        new_ext.unpersist()
-        changed.unpersist()
+        # A row is updated when any digest column the table has differs:
+        # a re-crawl can change the markdown (a heading level) and keep
+        # the text.
+        digest = F.concat_ws(
+            " ", *[c for c in ("text_sha256", "md_sha256") if c in existing.columns]
+        )
+        old = existing.where(F.col("url_bucket").isin(touched)).select(
+            "url", digest.alias("_old_digest")
+        )
+        classified = (
+            new_ext.join(old, "url", "left")
+            .withColumn(
+                "_state",
+                F.when(F.col("_old_digest").isNull(), "new")
+                .when(digest != F.col("_old_digest"), "updated")
+                .otherwise("unchanged"),
+            )
+            .drop("_old_digest")
+            .persist()
+        )
+        # ONE action: per (bucket, state) counts, at most 3·B rows, give
+        # the three doc counts and the buckets to rewrite together.
+        by_state = classified.groupBy("url_bucket", "_state").count().collect()
+        counts = Counter()
+        for r in by_state:
+            counts[r["_state"]] += r["count"]
+        ch_buckets = sorted({r["url_bucket"] for r in by_state if r["_state"] != "unchanged"})
+        phases.mark("classify")
+
+        snap = None
+        if ch_buckets:
+            changed = classified.where(F.col("_state") != "unchanged").select(
+                *existing.columns
+            )
+            keep = existing.where(F.col("url_bucket").isin(ch_buckets)).join(
+                changed.select("url"), "url", "left_anti"
+            )
+            merged = keep.unionByName(changed).repartition(len(ch_buckets), "url_bucket")
+            # Dynamic partition overwrite: only the url_bucket partitions
+            # present in `merged` (= ch_buckets) are replaced on disk.
+            fmt.write_extracted(merged, cfg.extracted_path)
+            phases.mark("rewrite_buckets")
+
+            snap = commit_run(
+                spark, fmt, cfg, "merge-increment", cfg.increment_path,
+                buckets=ch_buckets, fs=fs,
+            )[1]
+            phases.mark("lineage_append")
         return {
             "run_id": cfg.run_id,
-            "buckets_rewritten": [],
-            "docs_added": 0,
-            "docs_updated": 0,
-            "docs_unchanged": n_unchanged,
+            "snapshot": snap,
+            "buckets_rewritten": ch_buckets,
+            "docs_added": counts["new"],
+            "docs_updated": counts["updated"],
+            "docs_unchanged": counts["unchanged"],
             "kernel_tasks": ext.kernel_tasks,
             "phase_wall_s": phases,
             "extracted_path": cfg.extracted_path,
+            "lineage_path": cfg.lineage_path,
         }
-
-    changed_rows = changed.select(*_EXTRACTED_COLS)
-    keep = existing.where(F.col("url_bucket").isin(ch_buckets)).join(
-        changed_rows.select("url"), "url", "left_anti"
-    )
-    merged = (
-        keep.select(*_EXTRACTED_COLS)
-        .unionByName(changed_rows)
-        .repartition(max(len(ch_buckets), 1), "url_bucket")
-    )
-    # Dynamic partition overwrite: only the url_bucket partitions present
-    # in `merged` (= ch_buckets) are replaced on disk.
-    fmt.write_extracted(merged, cfg.extracted_path)
-    phases.mark("rewrite_buckets")
-
-    snap = commit_run(
-        spark, fmt, cfg, "merge-increment", cfg.increment_path, buckets=ch_buckets,
-        fs=fs,
-    )[1]
-    phases.mark("lineage_append")
-    new_ext.unpersist()
-    changed.unpersist()
-    return {
-        "run_id": cfg.run_id,
-        "snapshot": snap,
-        "buckets_rewritten": ch_buckets,
-        "docs_added": n_new,
-        "docs_updated": n_updated,
-        "docs_unchanged": n_unchanged,
-        "kernel_tasks": ext.kernel_tasks,
-        "phase_wall_s": phases,
-        "extracted_path": cfg.extracted_path,
-        "lineage_path": cfg.lineage_path,
-    }
+    finally:
+        new_ext.unpersist()
+        if classified is not None:
+            classified.unpersist()

@@ -35,8 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from corsearch_project_spark.functions.sql import digest_xor_chunks, digest_xor_concat
 from corsearch_project_spark.plans.session import build_session
+from corsearch_project_spark.sources.lineage import lineage_rows
 
 
 def _latest_lineage(spark, lineage_path: str, snapshots_path: str | None):
@@ -100,10 +100,9 @@ def validate_table(spark, extracted_path: str, lineage_path: str, run_id: str,
     if n_dups:
         failures.append({"check": "url_uniqueness", "duplicate_urls": n_dups})
 
-    recomputed = (
-        ext.groupBy("url_bucket")
-        .agg(F.count(F.lit(1)).alias("doc_count"), *digest_xor_chunks("text_sha256"))
-        .select("url_bucket", "doc_count", digest_xor_concat().alias("sha256_rollup"))
+    # the same per-bucket rollup the commit writes, recomputed from the data
+    recomputed = lineage_rows(ext, run_id, "").select(
+        "url_bucket", "doc_count", "sha256_rollup"
     )
     mismatch = (
         recomputed.alias("r")

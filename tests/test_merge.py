@@ -3,6 +3,7 @@ semantics over the bucketed table — full-run equivalence, no-op increments,
 untouched buckets physically preserved, post-merge validation."""
 
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -35,17 +36,28 @@ def _table_state(spark, root):
     return {r["url"]: (r["text_sha256"], r["url_bucket"]) for r in rows}
 
 
-def _extract_all(spark, tmp_path, rows, name):
+def _extract_all(spark, tmp_path, rows, name, **cfg):
     src = str(tmp_path / f"{name}.parquet")
     _write_pages(rows, src)
     out = str(tmp_path / name)
     run_extract(
         spark,
         ExtractConfig(input_path=src, output_path=out, run_id=f"R-{name}",
-                      buckets=BUCKETS),
+                      buckets=BUCKETS, **cfg),
         default_rules(),
     )
     return out
+
+
+def _new_and_updated(base, n_new, seed):
+    """An increment of ``n_new`` brand-new urls plus re-crawls of
+    ``base[:10]`` whose body is another base doc's (so the text differs)."""
+    inc = gen_pages(n_new, seed=seed, dup_frac=0.0)
+    for r in inc:
+        r["url"] = r["url"].replace("https://", "https://inc-")
+    for r, donor in zip(base[:10], base[30:40]):
+        inc.append(dict(r, html=donor["html"], text=donor["text"]))
+    return inc
 
 
 def test_merge_equals_full_run(spark, tmp_path):
@@ -87,6 +99,81 @@ def test_merge_equals_full_run(spark, tmp_path):
     out_full = _extract_all(spark, tmp_path, list(merged_rows.values()), "full")
 
     assert _table_state(spark, out_a) == _table_state(spark, out_full)
+
+
+def test_merge_keeps_markdown_columns(spark, tmp_path):
+    """A table backfilled with_markdown keeps (extracted_md, md_sha256)
+    through a merge, and every url's markdown equals a full with_markdown
+    run over base + increment — also for re-crawls whose markup change
+    moves only the markdown (h2 -> h3 keeps the text)."""
+    base = gen_pages(60, seed=96, dup_frac=0.0)
+    restyled = [
+        dict(r, html=r["html"].replace(b"<h2>", b"<h3>").replace(b"</h2>", b"</h3>"))
+        for r in base[40:]
+        if b"<h2>" in r["html"]
+    ]
+    assert restyled
+    increment = _new_and_updated(base, 15, seed=97) + restyled
+    out = _extract_all(spark, tmp_path, base, "md", with_markdown=True)
+    inc_src = str(tmp_path / "md_inc.parquet")
+    _write_pages(increment, inc_src)
+    rep = run_merge(
+        spark,
+        MergeConfig(increment_path=inc_src, output_path=out, run_id="M-md",
+                    buckets=BUCKETS),
+        default_rules(),
+    )
+    assert (rep["docs_added"], rep["docs_updated"]) == (15, 10 + len(restyled))
+
+    merged_rows = {r["url"]: r for r in base}
+    merged_rows.update((r["url"], r) for r in increment)
+    full = _extract_all(spark, tmp_path, list(merged_rows.values()), "md_full",
+                        with_markdown=True)
+
+    def markdown(root):
+        df = spark.read.parquet(os.path.join(root, "extracted"))
+        assert {"extracted_md", "md_sha256"} <= set(df.columns), df.columns
+        return {r["url"]: (r["extracted_md"], r["md_sha256"])
+                for r in df.select("url", "extracted_md", "md_sha256").collect()}
+
+    got = markdown(out)
+    assert len(got) == len(merged_rows)
+    assert got == markdown(full)
+
+
+def test_merge_computes_no_hot_hosts(spark, tmp_path, monkeypatch):
+    """The merge never asks for hot hosts: with hot_hosts raising, it
+    commits the same counts and table as an unpatched merge."""
+    from corsearch_project_spark.plans import extract_pipeline, merge_pipeline
+
+    base = gen_pages(60, seed=98, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "hot")
+    out_patched = str(tmp_path / "hot_patched")
+    shutil.copytree(out, out_patched)
+    inc_src = str(tmp_path / "hot_inc.parquet")
+    _write_pages(_new_and_updated(base, 20, seed=99), inc_src)
+
+    def merge(root):
+        return run_merge(
+            spark,
+            MergeConfig(increment_path=inc_src, output_path=root, run_id="M-hot",
+                        buckets=BUCKETS),
+            default_rules(),
+        )
+
+    plain = merge(out)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("the merge must not compute hot hosts")
+
+    for mod in (extract_pipeline, merge_pipeline):
+        monkeypatch.setattr(mod, "hot_hosts", refuse)
+    patched = merge(out_patched)
+    keys = ("docs_added", "docs_updated", "docs_unchanged", "buckets_rewritten")
+    assert [patched[k] for k in keys] == [plain[k] for k in keys]
+    assert (plain["docs_added"], plain["docs_updated"]) == (20, 10)
+    assert patched["snapshot"] is not None
+    assert _table_state(spark, out_patched) == _table_state(spark, out)
 
 
 def test_merge_unchanged_increment_is_noop(spark, tmp_path):
