@@ -260,11 +260,10 @@ def commit_run(
     are dropped. The rest are written from the driver through the ``fs``
     seam, with no Spark job: one lineage file, then one snapshot file
     named by the next seq (sources/snapshots.py). Both are created
-    exclusively and leave the ``_SUCCESS`` marker. A concurrent commit
-    that took the same seq makes ``append_snapshot`` raise
-    ``SeqConflictError``; this run's lineage file is then removed, so a
-    retry (``--resume``) of the run redoes its buckets instead of
-    skipping them.
+    exclusively. A concurrent commit that took the same seq makes
+    ``append_snapshot`` raise ``SeqConflictError``; this run's lineage
+    file is then removed, so a retry (``--resume``) of the run redoes its
+    buckets instead of skipping them.
 
     An earlier attempt that crashed between its lineage and snapshot
     files left ``skip`` buckets that no snapshot of the run covers

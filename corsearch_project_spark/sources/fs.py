@@ -1,46 +1,23 @@
 """Injectable filesystem seam for driver-side metadata operations.
 
 The table emulation keeps its data I/O inside Spark (the JVM resolves
-``s3a://``/``hdfs://`` through Hadoop filesystems), but a handful of
-maintenance operations run driver-side in Python: the metadata-table swap
-in ``maintenance.expire_snapshots`` and the staging vacuum. In-sandbox
-those are ``os.rename``/``shutil.rmtree``; on an object store neither
-exists — "rename" is copy+delete and directories are prefixes. Hard-coding
-the os calls would make snapshot expiry local-only (round-3 verdict,
-"What's wrong" #2).
+``s3a://``/``hdfs://`` through Hadoop filesystems), but the lineage and
+snapshot ledgers are written and maintained from the driver in Python:
+each commit is one driver-written Parquet file, created with
+``create_exclusive`` (``sources/snapshots.write_ledger_file``);
+``maintenance.expire_snapshots`` deletes whole ledger files and
+``maintenance.vacuum_staging`` reaps crash leftovers. Hard-coding the os
+calls would make those local-only.
 
-The lineage and snapshot ledgers are written through the same seam: each
-commit is one driver-written Parquet file, created with
-``create_exclusive`` (``sources/snapshots.write_ledger_file``).
-
-This module is the seam: maintenance and the ledger writer take an ``fs``
+This module is the seam: the ledger writer and maintenance take an ``fs``
 object implementing the calls below (duck-typed, like the ``open()`` seam
 in ``sources/warc.read_warc_ranges``). ``LOCAL_FS`` is the default; a
 cluster deployment passes a thin adapter over ``pyarrow.fs.S3FileSystem``
-/ ``fsspec`` with the same methods.
+/ ``fsspec`` with the same methods. No call moves a file, so an object
+store needs no copy+delete emulation.
 
-Semantics the implementations must provide (and what they may relax):
+Semantics the implementations must provide:
 
-* ``rename`` moves a directory tree to a SIBLING path (the callers only
-  ever rename ``path`` <-> ``path + suffix``, same parent — so a POSIX
-  implementation never crosses a mount point and EXDEV cannot occur).
-  On an object store this is a prefix copy+delete: NOT atomic. The
-  emulation's documented single-writer-per-table-root assumption is what
-  makes that acceptable — no concurrent reader races the swap; a real
-  multi-writer deployment flips an Iceberg catalog pointer instead, which
-  is why the swap is isolated behind this seam in the first place.
-
-  **Ordering contract for copy+delete implementations** (what makes a
-  crash ANYWHERE inside a non-atomic rename recoverable, see
-  ``maintenance.recover_swap``): during the copy phase the
-  ``COMPLETE_MARKER`` file (``_SUCCESS``) must be copied LAST; during
-  the delete phase it must be deleted FIRST. The ledger writer creates
-  the marker only after a commit's file has landed, so under this
-  contract "directory contains the marker" ⇔ "directory is complete" in
-  every crash state, and ``recover_swap`` can always tell a torn copy
-  from a whole ledger. The adapter controls its own key iteration order,
-  so both constraints are one ``sorted(..., key=is_marker)`` away.
-  Atomic-rename filesystems (POSIX, HDFS) satisfy the contract trivially.
 * ``create_exclusive(path, data)`` writes one whole file atomically and
   raises ``FileExistsError`` if ``path`` already exists — readers see
   either no file or all of ``data``, also after a crash or power loss,
@@ -53,11 +30,12 @@ Semantics the implementations must provide (and what they may relax):
   (``If-None-Match: *``). A writer killed mid-call may leave the temp
   file (``.<name>.<hex>.tmp``); readers skip dot-prefixed names and
   ``maintenance.vacuum_staging`` reaps it.
-* ``read_bytes(path)`` returns a whole (small) file — the ledger reads a
-  legacy snapshot file's seq through it.
+* ``read_bytes(path)`` returns a whole (small) file — ledger files are
+  read through it on the driver.
 * ``rmtree`` removes a directory tree / prefix, or a single file,
   idempotently.
-* ``exists``, ``listdir``, ``getsize`` are the obvious metadata probes.
+* ``exists``, ``listdir``, ``isdir``, ``getsize`` are the obvious
+  metadata probes.
 
 ``LocalFS`` takes plain paths and ``file:`` URIs, and raises ValueError
 for any other scheme (``s3a://``, ``hdfs://``...): a caller that must not
@@ -72,9 +50,6 @@ import re
 import shutil
 import uuid
 from typing import List
-
-# Directory-completeness marker of a ledger dir (see maintenance.recover_swap).
-COMPLETE_MARKER = "_SUCCESS"
 
 # Suffix of create_exclusive's dot-prefixed temp files.
 TMP_SUFFIX = ".tmp"
@@ -107,9 +82,6 @@ class LocalFS:
 
     def exists(self, path: str) -> bool:
         return os.path.exists(_local(path))
-
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(_local(src), _local(dst))
 
     def rmtree(self, path: str) -> None:
         path = _local(path)

@@ -55,11 +55,12 @@ def lineage_file_name(tag: str) -> str:
 
 def run_lineage_files(path: str, run_id: str, fs=LOCAL_FS) -> List[str]:
     """The lineage files under ``path`` that can hold rows of ``run_id``:
-    its own ``lin-<run_id>-*`` files, the ``lin-compact-*`` file of
-    maintenance.expire_snapshots, and files of any other name (Spark's
-    ``part-*`` files of a table committed before per-commit files). Other
-    runs' files are not read, so the cost follows the run, not the
-    table's history."""
+    its own ``lin-<run_id>-*`` files, and the legacy files of older
+    tables — the ``lin-compact-*`` file an older, rewriting
+    ``expire_snapshots`` left (nothing writes one now) and files of any
+    other name (Spark's ``part-*`` files of a table committed before
+    per-commit files). Other runs' files are not read, so the cost
+    follows the run, not the table's history."""
     tags = {_file_tag(run_id), "compact"}
     files = []
     for file in ledger_files(path, fs):
@@ -125,12 +126,6 @@ class ParquetBucketedFormat:
         return write_ledger_file(
             path, lineage_file_name(rows[0]["run_id"]), rows, LINEAGE_SCHEMA, fs
         )
-
-    def read_lineage(self, spark: SparkSession, path: str) -> Optional[DataFrame]:
-        try:
-            return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-        except Exception:
-            return None
 
 
 # ---------------------------------------------------------------------------

@@ -22,8 +22,9 @@ per-COMMIT ledger on top of it:
   * tables committed before that naming hold Spark-named snapshot files
     (``part-*.parquet``). `latest_seq` reads the max seq stored in such a
     file (it is committed data, not a guess), so those tables keep
-    committing; ``maintenance.expire_snapshots`` rewrites them into one
-    seq-named file. Only an unreadable unnamed file stops a commit.
+    committing. ``maintenance.expire_snapshots`` deletes such a file only
+    once every run in it has expired. Only an unreadable unnamed file
+    stops a commit.
 
 The lineage ledger (sources/io.py ``append_lineage``) is written by the
 same `write_ledger_file`, one uniquely named file per commit. On real
@@ -42,7 +43,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from corsearch_project_spark.sources.fs import COMPLETE_MARKER, LOCAL_FS
+from corsearch_project_spark.sources.fs import LOCAL_FS
 
 SNAPSHOT_SCHEMA = T.StructType(
     [
@@ -72,30 +73,22 @@ def write_ledger_file(
     """Commit ``rows`` (dicts or Rows) as ONE Parquet file ``path/name``
     with the column types of the Spark ``schema``, created exclusively
     through the ``fs`` seam (raises ``FileExistsError`` if the name is
-    taken), then mark ``path`` complete for maintenance.recover_swap.
-    Returns the file's path."""
+    taken). Returns the file's path."""
     table = pa.Table.from_pylist(
         [r if isinstance(r, dict) else r.asDict() for r in rows],
         schema=to_arrow_schema(schema),
     )
     sink = pa.BufferOutputStream()
     pq.write_table(table, sink)
-    path = path.rstrip("/")
-    file = f"{path}/{name}"
+    file = f"{path.rstrip('/')}/{name}"
     fs.create_exclusive(file, sink.getvalue().to_pybytes())
-    marker = f"{path}/{COMPLETE_MARKER}"
-    if not fs.exists(marker):
-        try:
-            fs.create_exclusive(marker, b"")
-        except FileExistsError:
-            pass
     return file
 
 
 def ledger_files(path: str, fs=LOCAL_FS) -> List[str]:
     """Paths of the Parquet files under ledger dir ``path`` (none when it
-    does not exist). Hidden files — ``_SUCCESS``, a torn ``.tmp`` — are
-    skipped, as Spark skips them."""
+    does not exist). Hidden files — the ``_SUCCESS`` of a Spark-written
+    ledger, a torn ``.tmp`` — are skipped, as Spark skips them."""
     if not fs.exists(path):
         return []
     path = path.rstrip("/")
@@ -125,7 +118,8 @@ def read_run_rows(
 def run_buckets(path: str, run_id: str, fs=LOCAL_FS) -> Set[int]:
     """The buckets that snapshots of ``run_id`` under ``path`` cover.
     Snapshot files are named by seq, not run, so every one is read —
-    only its run_id and buckets columns; expire_snapshots compacts them."""
+    only its run_id and buckets columns; expire_snapshots bounds their
+    number."""
     rows = read_run_rows(ledger_files(path, fs), run_id, ("buckets",), fs)
     return {b for r in rows for b in r["buckets"]}
 

@@ -2,15 +2,18 @@
 """Table maintenance CLI: expire old snapshots + vacuum crash leftovers.
 
 The Iceberg ``expireSnapshots``/``removeOrphanFiles`` maintenance actions
-for the emulated bucketed table (sources/maintenance.py — retention rules,
-latest-writer preservation invariant, and the single-writer assumption are
-documented there).
+for the emulated bucketed table (sources/maintenance.py — the retention
+rules and the latest-writer preservation invariant are documented there).
+Both run on the driver without Spark: expiry deletes whole ledger files,
+and the vacuum reaps crash leftovers anywhere under the table root (Spark
+``_temporary`` dirs, a killed ledger commit's ``.tmp`` file in
+``lineage/`` or ``snapshots/``).
 
-    spark-submit --py-files csp.zip jobs/expire_table.py \
-        --output /data/out --keep-last 3
+    python jobs/expire_table.py --output /data/out --keep-last 3
 
 Prints one JSON report line. Exit 0 on success (including the no-op case),
-1 when --output has no snapshots table.
+1 when --output has no snapshots table; a crashed older expiry's leftover
+under --output raises ValueError with the manual fix.
 """
 
 from __future__ import annotations
@@ -22,7 +25,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from corsearch_project_spark.plans.session import build_session
 from corsearch_project_spark.sources.maintenance import (
     expire_snapshots,
     vacuum_staging,
@@ -36,18 +38,14 @@ def main(argv=None) -> int:
                     "live under it)")
     ap.add_argument("--keep-last", type=int, default=3)
     ap.add_argument("--skip-vacuum", action="store_true")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
-    spark = build_session("expire_table", master=args.master)
-    report = expire_snapshots(spark, args.output, keep_last=args.keep_last)
+    report = expire_snapshots(args.output, keep_last=args.keep_last)
     if report is None:
         print(json.dumps({"error": f"no snapshots table under {args.output}"}))
         return 1
     if not args.skip_vacuum:
-        report["vacuum"] = vacuum_staging(
-            os.path.join(args.output.rstrip("/"), "extracted")
-        )
+        report["vacuum"] = vacuum_staging(args.output)
     print(json.dumps(report))
     return 0
 

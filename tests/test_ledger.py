@@ -36,6 +36,7 @@ from corsearch_project_spark.sources.io import (
     lineage_file_name,
 )
 from corsearch_project_spark.sources.maintenance import vacuum_staging
+from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
 
 from test_merge import BUCKETS, _extract_all, _write_pages
 
@@ -171,7 +172,7 @@ def test_resume_commits_the_snapshot_a_crash_left_out(spark, tmp_path, monkeypat
             run_extract(spark, cfg)
     assert [r["run_id"] for r in S.read_snapshots(spark, snap_path).collect()] == ["R-orphan"]
     lin_rows = (
-        ParquetBucketedFormat().read_lineage(spark, lin_path)
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lin_path)
         .where("run_id = 'R-torn'").collect()
     )
     by_bucket = {}
@@ -385,8 +386,6 @@ def test_uri_table_root_commits_or_fails_before_the_data_job(
     """A file: URI root commits its ledger like a plain path. A root the
     ledger's fs cannot reach (s3a:// on LocalFS) fails before any data
     is written."""
-    from corsearch_project_spark.sources.maintenance import _complete
-
     src = str(tmp_path / "uri.parquet")
     _write_pages(gen_pages(30, seed=95, dup_frac=0.0), src)
     out = str(tmp_path / "uri")
@@ -395,7 +394,10 @@ def test_uri_table_root_commits_or_fails_before_the_data_job(
     )
     assert rep["snapshot"]["seq"] == 0
     assert [r["run_id"] for r in S.read_snapshots(spark, out + "/snapshots").collect()] == ["R-uri"]
-    assert all(_complete(os.path.join(out, d)) for d in ("lineage", "snapshots"))
+    for d, schema in (("lineage", LINEAGE_SCHEMA), ("snapshots", S.SNAPSHOT_SCHEMA)):
+        (name,) = os.listdir(os.path.join(out, d))
+        rows = spark.read.schema(schema).parquet(os.path.join(out, d, name)).collect()
+        assert {r["run_id"] for r in rows} == {"R-uri"}
     rep = run_extract(
         spark, ExtractConfig(src, "file:" + out, run_id="R-uri2", buckets=BUCKETS)
     )

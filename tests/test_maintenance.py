@@ -1,10 +1,14 @@
 """Snapshot expiration + staging vacuum (sources/maintenance.py,
 jobs/expire_table.py): the retention invariant is that expiry NEVER touches
 data files and never expires the latest writer of any bucket, so
-validate_table reconciles identically before and after."""
+validate_table reconciles identically before and after. Expiry only
+deletes whole ledger files: a crash leaves a subset of the deletions, a
+racing commit survives, and a file that mixes a kept run's rows stays."""
 
+import itertools
 import json
 import os
+import shutil
 import sys
 
 sys.path.insert(
@@ -12,14 +16,20 @@ sys.path.insert(
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"),
 )
 
+import pytest
+
 from corsearch_project_spark.fixtures.gen_pages import default_rules, gen_pages
+from corsearch_project_spark.plans.extract_pipeline import ExtractConfig, run_extract
 from corsearch_project_spark.plans.merge_pipeline import MergeConfig, run_merge
+from corsearch_project_spark.sources.fs import LOCAL_FS
+from corsearch_project_spark.sources.io import ParquetBucketedFormat
 from corsearch_project_spark.sources.maintenance import (
     expire_snapshots,
     latest_writers,
     vacuum_staging,
 )
-from corsearch_project_spark.sources.snapshots import read_snapshots
+from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
+from corsearch_project_spark.sources.snapshots import append_snapshot, read_snapshots
 
 from test_merge import BUCKETS, _extract_all, _table_state, _write_pages
 
@@ -56,13 +66,43 @@ def _three_commit_table(spark, tmp_path):
     return out
 
 
+def _ledger_files(root):
+    """{ledger dir/name: (mtime_ns, bytes)} of every file in lineage/ and
+    snapshots/."""
+    state = {}
+    for d in ("lineage", "snapshots"):
+        for n in os.listdir(os.path.join(root, d)):
+            p = os.path.join(root, d, n)
+            with open(p, "rb") as f:
+                state[f"{d}/{n}"] = (os.stat(p).st_mtime_ns, f.read())
+    return state
+
+
+def _validate(spark, out, run_id):
+    from validate_table import validate_table
+
+    return validate_table(
+        spark,
+        os.path.join(out, "extracted"),
+        os.path.join(out, "lineage"),
+        run_id,
+        BUCKETS,
+        snapshots_path=os.path.join(out, "snapshots"),
+    )
+
+
+def _runs(spark, out):
+    return {r["run_id"] for r in
+            read_snapshots(spark, os.path.join(out, "snapshots")).collect()}
+
+
 def test_expire_preserves_validation_and_data(spark, tmp_path):
     from validate_table import validate_table
 
     out = _three_commit_table(spark, tmp_path)
     state_before = _table_state(spark, out)
 
-    report = expire_snapshots(spark, out, keep_last=1)
+    report = expire_snapshots(out, keep_last=1)
     # R-base is latest writer of every bucket M1/M2 didn't rewrite -> kept
     # even though only M2 is inside the window; M1's buckets may or may not
     # all be superseded by M2 (different urls -> different buckets), so only
@@ -102,7 +142,8 @@ def test_expire_drops_fully_superseded_run(spark, tmp_path):
     _merge(spark, out, tmp_path,
            [_swap_body(r, d) for r, d in zip(base, donors2)], "M-last")
 
-    report = expire_snapshots(spark, out, keep_last=1)
+    before = _ledger_files(out)
+    report = expire_snapshots(out, keep_last=1)
     assert "M-all" in report["expired_runs"]
     snaps = read_snapshots(spark, os.path.join(out, "snapshots"))
     assert "M-all" not in {r["run_id"] for r in snaps.collect()}
@@ -112,13 +153,12 @@ def test_expire_drops_fully_superseded_run(spark, tmp_path):
     kept_seqs = sorted(r["seq"] for r in snaps.collect())
     assert kept_seqs == sorted(set(kept_seqs))
     assert max(kept_seqs) == 2
-    # the compacted ledgers are one driver-written file each, the snapshot
-    # file named by the highest seq it keeps
-    snap_files = sorted(os.listdir(os.path.join(out, "snapshots")))
-    assert snap_files == ["_SUCCESS", "seq-000000000002.parquet"]
-    lin_files = sorted(os.listdir(os.path.join(out, "lineage")))
-    assert lin_files[0] == "_SUCCESS" and len(lin_files) == 2
-    assert lin_files[1].startswith("lin-compact-")
+    # each ledger dir holds exactly the kept run's own files, untouched
+    assert report["kept_runs"] == ["M-last"]
+    kept = {n: st for n, st in before.items()
+            if n == "snapshots/seq-000000000002.parquet"
+            or n.startswith("lineage/lin-M-last-")}
+    assert len(kept) == 2 and _ledger_files(out) == kept
     rep = _merge(spark, out, tmp_path, [_swap_body(base[3], base[33])], "M-next")
     assert rep["snapshot"]["seq"] == 3
 
@@ -135,7 +175,7 @@ def test_expire_noop_when_window_covers_all(spark, tmp_path):
         return fs
 
     before = file_state(out)
-    report = expire_snapshots(spark, out, keep_last=10)
+    report = expire_snapshots(out, keep_last=10)
     assert report["expired_runs"] == []
     assert report["lineage_rows_expired"] == 0
     assert file_state(out) == before  # ledgers not even rewritten
@@ -167,36 +207,30 @@ def test_vacuum_removes_staging_only(spark, tmp_path):
     assert _table_state(spark, out) == state_before
 
 
+
+
 class _RecordingFS:
-    """Object-store-shaped FS: same five calls as fs.LocalFS but with every
-    mutation recorded, and rename implemented as copy+delete — the
-    non-atomic prefix semantics S3/GCS adapters actually have. Running the
-    full expiry through it proves maintenance never bypasses the seam with
-    a raw os call (the round-3 'local-FS-only' finding)."""
+    """Object-store-shaped FS: the seam's calls (fs.LocalFS's, no more),
+    with every mutation recorded. Running the full expiry through it
+    proves maintenance never bypasses the seam with a raw os call (the
+    round-3 'local-FS-only' finding)."""
 
     def __init__(self):
-        import shutil
-
-        self._shutil = shutil
         self.ops = []
 
     def exists(self, p):
         return os.path.exists(p)
 
-    def rename(self, src, dst):
-        self.ops.append(("rename", src, dst))
-        self._shutil.copytree(src, dst)
-        self._shutil.rmtree(src)
-
     def rmtree(self, p):
         self.ops.append(("rmtree", p))
-        self._shutil.rmtree(p, ignore_errors=True)
+        LOCAL_FS.rmtree(p)
 
     def create_exclusive(self, p, data):
-        from corsearch_project_spark.sources.fs import LOCAL_FS
-
         self.ops.append(("create", p))
         LOCAL_FS.create_exclusive(p, data)
+
+    def read_bytes(self, p):
+        return LOCAL_FS.read_bytes(p)
 
     def listdir(self, p):
         return os.listdir(p)
@@ -208,9 +242,16 @@ class _RecordingFS:
         return os.path.getsize(p)
 
 
+def _all_files(root):
+    return {os.path.join(d, n): os.stat(os.path.join(d, n)).st_mtime_ns
+            for d, _, names in os.walk(root) for n in names}
+
+
 def test_expire_through_injected_object_store_fs(spark, tmp_path):
-    """Expiry must work end-to-end through a copy+delete-rename FS object
-    — i.e. driver-side maintenance has no hidden os.rename dependence."""
+    """Expiry must work end-to-end through an injected FS object — i.e.
+    driver-side maintenance has no hidden os dependence: every file it
+    removes is an rmtree on the seam, it creates and moves nothing, and
+    every other file keeps its mtime."""
     from validate_table import validate_table
 
     base = gen_pages(40, seed=98, dup_frac=0.0)
@@ -222,13 +263,14 @@ def test_expire_through_injected_object_store_fs(spark, tmp_path):
            [_swap_body(r, d) for r, d in zip(base, donors[5:] + donors[:5])],
            "O2")
 
+    before = _all_files(out)
     fs = _RecordingFS()
-    report = expire_snapshots(spark, out, keep_last=1, fs=fs)
+    report = expire_snapshots(out, keep_last=1, fs=fs)
     assert report["expired_runs"]  # something actually got expired
-    # every swap mutation went through the seam: 2 renames + >=1 rmtree per
-    # swapped ledger (snapshots + lineage)
-    renames = [o for o in fs.ops if o[0] == "rename"]
-    assert len(renames) == 4
+    after = _all_files(out)
+    assert fs.ops and all(op == "rmtree" for op, _ in fs.ops)
+    assert {p for _, p in fs.ops} == set(before) - set(after)
+    assert after == {p: t for p, t in before.items() if p in after}
     v = validate_table(
         spark,
         os.path.join(out, "extracted"),
@@ -240,241 +282,200 @@ def test_expire_through_injected_object_store_fs(spark, tmp_path):
     assert v["ok"], v
 
 
-def test_interrupted_swap_is_recovered(spark, tmp_path):
-    """Simulate a crash inside _swap_in's rename window (live missing,
-    aside + compact present): the next expire_snapshots must restore the
-    ledger and still produce a correct expiry."""
-    import shutil
-
-    from corsearch_project_spark.sources.maintenance import recover_swap
-
+def test_expire_refuses_old_swap_leftover(spark, tmp_path):
+    """A directory the older swap-based expiry left after a crash stops
+    expiry before it deletes anything, with the manual fix in the error:
+    move the aside back when the live ledger is missing, else delete the
+    leftover."""
     out = _three_commit_table(spark, tmp_path)
-    snap = os.path.join(out, "snapshots")
-    state_before = _table_state(spark, out)
-    snaps_before = {r["run_id"] for r in read_snapshots(spark, snap).collect()}
+    snap, lin = os.path.join(out, "snapshots"), os.path.join(out, "lineage")
 
-    # crash state: compact written, live renamed aside, move-in never ran
-    shutil.copytree(snap, snap + ".__compact__")
-    os.rename(snap, snap + ".__expired__")
-    assert read_snapshots(spark, snap) is None  # table looks snapshot-less
+    def refused(match):
+        before = _all_files(out)
+        with pytest.raises(ValueError, match=match):
+            expire_snapshots(out, keep_last=1)
+        assert _all_files(out) == before
 
-    report = expire_snapshots(spark, out, keep_last=10)
-    assert "restored_live_from_aside" in report["recovered_swaps"]
-    assert "reaped_compact" in report["recovered_swaps"]
-    assert {r["run_id"] for r in read_snapshots(spark, snap).collect()} == snaps_before
-    assert _table_state(spark, out) == state_before
-    assert not os.path.exists(snap + ".__expired__")
-    assert not os.path.exists(snap + ".__compact__")
+    shutil.copytree(lin, lin + ".__compact__")
+    refused(r"lineage\.__compact__ was left .*: delete it, then rerun")
+    shutil.rmtree(lin + ".__compact__")
+    shutil.copytree(snap, snap + ".__expired__")
+    refused(r"snapshots\.__expired__ was left .*: delete it, then rerun")
+    shutil.rmtree(snap)
+    refused(r"snapshots\.__expired__ was left .*: move it back to .*/snapshots,")
 
-    # idempotent: a clean table recovers nothing
-    assert recover_swap(snap) == []
-
-
-def test_vacuum_reaps_swap_leftovers(spark, tmp_path):
-    """vacuum_staging repairs interrupted swaps (restoring a mid-swap
-    ledger) and reaps completed-swap leftovers."""
-    import shutil
-
-    out = _three_commit_table(spark, tmp_path)
-    snap = os.path.join(out, "snapshots")
-    lin = os.path.join(out, "lineage")
-    state_before = _table_state(spark, out)
-
-    # mid-swap crash on snapshots; completed-swap leftover on lineage
-    os.rename(snap, snap + ".__expired__")
-    shutil.copytree(lin, lin + ".__expired__")
-
-    rep = vacuum_staging(out)
-    assert any("restored_live_from_aside" in r for r in rep["recovered_swaps"])
-    assert any("reaped_aside" in r for r in rep["recovered_swaps"])
-    assert os.path.exists(snap) and not os.path.exists(snap + ".__expired__")
-    assert not os.path.exists(lin + ".__expired__")
-    assert _table_state(spark, out) == state_before
+    os.rename(snap + ".__expired__", snap)
+    assert "M2" in expire_snapshots(out, keep_last=1)["kept_runs"]
 
 
 def test_expire_cli(spark, tmp_path, capsys):
     import expire_table as J
 
     out = _three_commit_table(spark, tmp_path)
+    torn = os.path.join(out, "snapshots", ".seq-000000000003.parquet.0a1b.tmp")
+    with open(torn, "wb") as f:
+        f.write(b"torn")
     rc = J.main(["--output", out, "--keep-last", "1"])
     assert rc == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "vacuum" in rep and rep["kept_runs"]
+    assert rep["vacuum"]["staging_dirs_removed"] == [
+        "snapshots/.seq-000000000003.parquet.0a1b.tmp"
+    ]
+    assert not os.path.exists(torn)
 
     rc = J.main(["--output", str(tmp_path / "nope"), "--keep-last", "1"])
     assert rc == 1
 
 
-# ---------------------------------------------------------------- S3 crashes
+def test_concurrent_commit_survives_expiry(spark, tmp_path):
+    """A writer that commits a new run while expiry runs — just before
+    expiry's first deletion — keeps both of its ledger files: expiry
+    deletes only files of the listing it decided on, and never replaces a
+    ledger directory."""
+    base = gen_pages(30, seed=91, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "1")
+    src = str(tmp_path / "1.parquet")
+    run_extract(spark, ExtractConfig(src, out, run_id="R-2", buckets=BUCKETS),
+                default_rules())
+    snap, lin = os.path.join(out, "snapshots"), os.path.join(out, "lineage")
+    # the racing run re-commits R-2's buckets, as a re-extraction would
+    rows = [dict(r.asDict(), run_id="R-3") for r in
+            spark.read.schema(LINEAGE_SCHEMA).parquet(lin)
+            .where("run_id = 'R-2'").collect()]
+    committed = []
+
+    class _RacingFS(_RecordingFS):
+        def rmtree(self, p):
+            if not committed:
+                committed.append(
+                    ParquetBucketedFormat().append_lineage(rows, lin))
+                committed.append(
+                    append_snapshot(None, snap, "R-3", "overwrite", rows)["seq"])
+            super().rmtree(p)
+
+    report = expire_snapshots(out, keep_last=1, fs=_RacingFS())
+    assert report["expired_runs"] == ["R-1"]
+    lin_file, seq = committed
+    assert seq == 2
+    assert os.path.exists(lin_file)
+    assert os.path.exists(os.path.join(snap, "seq-000000000002.parquet"))
+    assert sorted(os.listdir(snap)) == [
+        "seq-000000000001.parquet", "seq-000000000002.parquet"
+    ]
+    assert _runs(spark, out) == {"R-2", "R-3"}
+    v = _validate(spark, out, "R-3")
+    assert v["ok"], v
 
 
 class _InjectedCrash(Exception):
     pass
 
 
-class _CrashableObjectStoreFS:
-    """Object-store double with fault injection: rename is a per-file
-    copy+delete honoring the seam's ordering contract (COMPLETE_MARKER
-    copied LAST, deleted FIRST — sources/fs.py), rmtree is per-file, and
-    every single file mutation ticks a fuse that raises after
-    ``fail_after`` mutations. Sweeping the fuse over every index proves a
-    crash at ANY point inside the non-atomic maintenance swap leaves a
-    state recover_swap/vacuum_staging can repair without data loss."""
+class _CrashableObjectStoreFS(_RecordingFS):
+    """Object-store double with fault injection: the seam's calls and no
+    rename; every create_exclusive (a conditional put) and rmtree ticks a
+    fuse that raises after ``fail_after`` mutations."""
 
     def __init__(self, fail_after=None):
+        super().__init__()
         self.fail_after = fail_after
-        self.ops = 0
 
     def _tick(self):
-        self.ops += 1
-        if self.fail_after is not None and self.ops > self.fail_after:
-            raise _InjectedCrash(f"injected crash at mutation {self.ops}")
-
-    @staticmethod
-    def _files(root):
-        from corsearch_project_spark.sources.maintenance import COMPLETE_MARKER
-
-        out = []
-        for d, _, names in os.walk(root):
-            for n in names:
-                out.append(os.path.join(d, n))
-        # deterministic, marker-neutral base order
-        return sorted(out), COMPLETE_MARKER
-
-    def exists(self, p):
-        return os.path.exists(p)
-
-    def isdir(self, p):
-        return os.path.isdir(p)
-
-    def listdir(self, p):
-        return os.listdir(p)
-
-    def getsize(self, p):
-        return os.path.getsize(p)
+        if self.fail_after is not None and len(self.ops) >= self.fail_after:
+            raise _InjectedCrash(f"injected crash at mutation {len(self.ops) + 1}")
 
     def create_exclusive(self, p, data):
-        # a conditional put: the object lands whole or not at all
-        from corsearch_project_spark.sources.fs import LOCAL_FS
-
         self._tick()
-        LOCAL_FS.create_exclusive(p, data)
-
-    def rename(self, src, dst):
-        import shutil
-
-        files, marker = self._files(src)
-        # copy phase: marker last
-        for f in sorted(files, key=lambda f: os.path.basename(f) == marker):
-            rel = os.path.relpath(f, src)
-            target = os.path.join(dst, rel)
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            self._tick()
-            shutil.copy2(f, target)
-        # delete phase: marker first
-        for f in sorted(files, key=lambda f: os.path.basename(f) != marker):
-            self._tick()
-            os.remove(f)
-        shutil.rmtree(src, ignore_errors=True)
+        super().create_exclusive(p, data)
 
     def rmtree(self, p):
-        import shutil
-
-        if not os.path.exists(p):
-            return
-        files, marker = self._files(p)
-        # reap is delete-shaped: marker first, so a half-reaped dir never
-        # masquerades as complete
-        for f in sorted(files, key=lambda f: os.path.basename(f) != marker):
-            self._tick()
-            os.remove(f)
-        shutil.rmtree(p, ignore_errors=True)
+        self._tick()
+        super().rmtree(p)
 
 
-def test_swap_crash_anywhere_on_object_store_recovers(spark, tmp_path):
-    """Fault-injection sweep (round-4 verdict item 6): run snapshot expiry
-    through the copy+delete FS double, crashing after every k-th file
-    mutation in turn. After each crash, vacuum_staging (the repair entry
-    point) + a re-run of the expiry must converge to the same table state
-    as a crash-free expiry — ledgers complete, no staging leftovers, no
-    torn directory ever mistaken for a whole one."""
-    import shutil
-
-    # M2 rewrites exactly M1's urls, so M1 is fully superseded and
-    # keep_last=1 genuinely expires it — the swap (the code under test)
-    # must actually run.
+def test_crash_anywhere_in_expiry_converges(spark, tmp_path):
+    """Fault-injection sweep: run expiry through the crashing object-store
+    double, crashing after the k-th mutation for every k until a run
+    finishes without a crash. Every crash leaves a table that validates
+    for its latest run and no run with lineage but no snapshot, and a
+    crash-free rerun reaches exactly the state of an expiry that never
+    crashed."""
+    # M1..M3 rewrite the same urls and M-last rewrites them again, so
+    # keep_last=1 expires M1, M2 and M3 (R-exp stays: latest writer of the
+    # buckets no merge touched).
     base = gen_pages(40, seed=96, dup_frac=0.0)
     src_table = _extract_all(spark, tmp_path, base, "exp")
-    m1 = [_swap_body(base[0], base[20]), _swap_body(base[1], base[21])]
-    _merge(spark, src_table, tmp_path, m1, "M1")
-    m2 = [_swap_body(base[0], base[25]), _swap_body(base[1], base[26])]
-    _merge(spark, src_table, tmp_path, m2, "M2")
+    for run_id, d in (("M1", 20), ("M2", 25), ("M3", 30), ("M-last", 35)):
+        _merge(spark, src_table, tmp_path,
+               [_swap_body(base[0], base[d]), _swap_body(base[1], base[d + 1])],
+               run_id)
 
-    # Reference: the state a crash-free object-store expiry produces.
+    def state(root):
+        return (_runs(spark, root),
+                {d: sorted(os.listdir(os.path.join(root, d)))
+                 for d in ("lineage", "snapshots")},
+                _table_state(spark, root))
+
     ref = str(tmp_path / "ref")
     shutil.copytree(src_table, ref)
-    rep = expire_snapshots(spark, ref, keep_last=1, fs=_CrashableObjectStoreFS())
-    assert rep["expired_runs"]
-    want_state = _table_state(spark, ref)
-    want_runs = {r["run_id"] for r in
-                 read_snapshots(spark, os.path.join(ref, "snapshots")).collect()}
+    rep = expire_snapshots(ref, keep_last=1, fs=_CrashableObjectStoreFS())
+    assert rep["expired_runs"] == ["M1", "M2", "M3"]
+    want = state(ref)
 
-    k = 0
-    completed_without_crash = False
-    while not completed_without_crash:
-        k += 1
+    for k in itertools.count(1):
         root = str(tmp_path / f"crash{k}")
         shutil.copytree(src_table, root)
-        fs = _CrashableObjectStoreFS(fail_after=k)
         try:
-            expire_snapshots(spark, root, keep_last=1, fs=fs)
-            completed_without_crash = True
+            expire_snapshots(root, keep_last=1, fs=_CrashableObjectStoreFS(k))
+            break
         except _InjectedCrash:
             pass
-
-        # repair + finish with a crash-free object-store FS
-        vrep = vacuum_staging(root, fs=_CrashableObjectStoreFS())
-        assert not any(
-            "unrecoverable" in a for a in vrep["recovered_swaps"]
-        ), (k, vrep)
-        expire_snapshots(spark, root, keep_last=1, fs=_CrashableObjectStoreFS())
-
-        snap = os.path.join(root, "snapshots")
-        assert os.path.exists(os.path.join(snap, "_SUCCESS")), k
-        assert not os.path.exists(snap + ".__expired__"), k
-        assert not os.path.exists(snap + ".__compact__"), k
-        got_runs = {r["run_id"] for r in read_snapshots(spark, snap).collect()}
-        assert got_runs == want_runs, (k, got_runs, want_runs)
-        assert _table_state(spark, root) == want_state, k
-    assert k > 10  # the sweep actually exercised many distinct crash points
+        v = _validate(spark, root, "M-last")
+        assert v["ok"], (k, v)
+        # lineage goes first: no run is left with lineage but no snapshot,
+        # the state --resume reads as a commit to finish
+        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(os.path.join(root, "lineage"))
+        assert {r["run_id"] for r in lin.collect()} <= _runs(spark, root), k
+        expire_snapshots(root, keep_last=1, fs=_CrashableObjectStoreFS())
+        assert state(root) == want, k
+        shutil.rmtree(root)
+    assert state(root) == want
+    assert k == 6  # one lineage and one snapshot file per expired run
 
 
-def test_recover_swap_prefers_complete_ledger_over_partial_live(tmp_path):
-    """Unit pin of the marker rule: a torn move-in (partial live, complete
-    aside) must roll BACK — reaping the aside here is the one
-    order-of-operations that loses the table."""
-    from corsearch_project_spark.sources.maintenance import recover_swap
+def test_mixed_legacy_lineage_file_is_kept(spark, tmp_path):
+    """A Spark-named part-* lineage file (the layout of tables committed
+    before per-commit files) holding rows of a kept run and of an expired
+    run stays byte-identical, while the expired run's own seq-* and lin-*
+    files go."""
+    base = gen_pages(40, seed=96, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "mix")
+    m1 = [_swap_body(base[0], base[20]), _swap_body(base[1], base[21])]
+    _merge(spark, out, tmp_path, m1, "M1")
+    m2 = [_swap_body(base[0], base[25]), _swap_body(base[1], base[26])]
+    _merge(spark, out, tmp_path, m2, "M2")
+    snap, lin = os.path.join(out, "snapshots"), os.path.join(out, "lineage")
 
-    live = tmp_path / "snapshots"
-    aside = tmp_path / "snapshots.__expired__"
-    # complete aside (the old ledger), torn live copy (no marker yet)
-    aside.mkdir()
-    (aside / "part-00000.parquet").write_bytes(b"OLD")
-    (aside / "_SUCCESS").write_bytes(b"")
-    live.mkdir()
-    (live / "part-00000.parquet").write_bytes(b"NEW-TORN")
+    own = {run: n for run in ("R-mix", "M1", "M2")
+           for n in os.listdir(lin) if n.startswith(f"lin-{run}-")}
+    # R-mix's rows move into a legacy file that also holds a copy of M1's
+    rows = spark.read.schema(LINEAGE_SCHEMA).parquet(lin).where(
+        "run_id IN ('R-mix', 'M1')").collect()
+    os.remove(os.path.join(lin, own["R-mix"]))
+    spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
+        "append").parquet(lin)
+    (legacy,) = [n for n in os.listdir(lin) if n.startswith("part-")]
+    with open(os.path.join(lin, legacy), "rb") as f:
+        legacy_bytes = f.read()
 
-    acts = recover_swap(str(live), fs=_CrashableObjectStoreFS())
-    assert acts == ["reaped_partial_live", "restored_live_from_aside"]
-    assert (live / "_SUCCESS").exists()
-    assert (live / "part-00000.parquet").read_bytes() == b"OLD"
-    assert not aside.exists()
-
-    # and when NEITHER side carries the marker, nothing is reaped
-    live2 = tmp_path / "lineage"
-    aside2 = tmp_path / "lineage.__expired__"
-    live2.mkdir(); (live2 / "x.parquet").write_bytes(b"a")
-    aside2.mkdir(); (aside2 / "x.parquet").write_bytes(b"b")
-    acts2 = recover_swap(str(live2), fs=_CrashableObjectStoreFS())
-    assert acts2 == ["unrecoverable_both_partial"]
-    assert live2.exists() and aside2.exists()
+    report = expire_snapshots(out, keep_last=1)
+    assert report["expired_runs"] == ["M1"]
+    with open(os.path.join(lin, legacy), "rb") as f:
+        assert f.read() == legacy_bytes
+    assert "seq-000000000001.parquet" not in os.listdir(snap)
+    assert not os.path.exists(os.path.join(lin, own["M1"]))
+    assert os.path.exists(os.path.join(lin, own["M2"]))
+    assert _runs(spark, out) == {"R-mix", "M2"}
+    v = _validate(spark, out, "M2")
+    assert v["ok"], v
