@@ -181,7 +181,13 @@ def _extract_bench(spark, n_docs: int, workdir: str) -> dict:
     import pyarrow.parquet as pq
 
     from corsearch_project_spark.fixtures.gen_pages import gen_pages, pages_to_pandas
-    from corsearch_project_spark.plans.extract_pipeline import ExtractConfig, run_extract
+    from corsearch_project_spark.plans.extract_pipeline import (
+        ExtractConfig,
+        extract_pages,
+        run_extract,
+        scan_input,
+    )
+    from corsearch_project_spark.sources.io import scan_pages
 
     src = os.path.join(workdir, "pages.parquet")
     pq.write_table(
@@ -199,31 +205,15 @@ def _extract_bench(spark, n_docs: int, workdir: str) -> dict:
     dt = time.perf_counter() - t0
     n_out = spark.read.parquet(os.path.join(out, "extracted")).count()
 
-    # Steady-state kernel throughput: re-run just scan→dedupe→salt→kernel
-    # with warm Python workers (no write/lineage) — the per-doc cost a
-    # long-running cluster job converges to once fixed job overhead is
-    # amortized. BENCH/BASELINE.md carries the N-vs-4N scaling evidence.
-    from pyspark.sql import functions as F
-
-    from corsearch_project_spark.operators.kernel import run_kernel
-    from corsearch_project_spark.operators.partitioning import with_salt, with_url_bucket
-    from corsearch_project_spark.plans.extract_pipeline import dedupe_latest
-    from corsearch_project_spark.sources.io import scan_pages
-    from corsearch_project_spark.webextract.rules import rules_to_plain
-
-    kdf = with_salt(
-        dedupe_latest(
-            with_url_bucket(scan_pages(spark, src), 32).select(
-                "url", "warc_ts", "html", "text", "url_bucket"
-            )
-        )
-    )
-    kdf = kdf.select("url", "html", "text", "url_bucket", "salt").repartition(
-        128, F.col("url_bucket"), F.col("salt")
-    )
-    bc = spark.sparkContext.broadcast(rules_to_plain({}))
+    # Steady-state kernel throughput: re-run just the engine's prelude
+    # (scan → dedupe → salt → kernel, extract_pages) with warm Python
+    # workers (no write/lineage) — the per-doc cost a long-running cluster
+    # job converges to once fixed job overhead is amortized.
+    # BENCH/BASELINE.md carries the N-vs-4N scaling evidence.
+    cfg = ExtractConfig(src, out, buckets=32, kernel_partitions=128)
+    ext = extract_pages(spark, scan_input(spark, src, "pages", cfg.buckets), cfg, {})
     t0 = time.perf_counter()
-    n_k = run_kernel(kdf, bc).count()
+    n_k = ext.extracted.count()
     kdt = time.perf_counter() - t0
 
     # Document-assets pass (E23/C75): the --with-doc-assets catalog over

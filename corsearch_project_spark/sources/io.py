@@ -27,7 +27,7 @@ from corsearch_project_spark.sources.schemas import (
 )
 from corsearch_project_spark.sources.snapshots import (
     ledger_files,
-    read_run_rows,
+    read_ledger,
     write_ledger_file,
 )
 
@@ -231,7 +231,10 @@ def done_buckets(lineage_path: str, run_id: str, fs=LOCAL_FS) -> List[int]:
     on the driver from the run's lineage files (``run_lineage_files``)
     with no Spark job. B is small (≤ thousands) so collecting to a literal
     list lets the scan-side filter prune partitions instead of joining."""
-    rows = read_run_rows(
-        run_lineage_files(lineage_path, run_id, fs), run_id, ("url_bucket", "status"), fs
+    files = read_ledger(
+        run_lineage_files(lineage_path, run_id, fs), ("run_id", "url_bucket", "status"), fs
     )
-    return sorted({r["url_bucket"] for r in rows if r["status"] == "done"})
+    return sorted({
+        r["url_bucket"] for rs in files.values() for r in rs
+        if r["run_id"] == run_id and r["status"] == "done"
+    })

@@ -5,7 +5,7 @@ table format).
 A 10^12-doc table re-crawled incrementally accumulates one snapshot row and
 B lineage rows per commit forever; after 10^5 merge commits the metadata
 tables dwarf their purpose and every ``validate_table`` reconciliation
-window ranks an ever-growing ledger. Iceberg bounds this with
+reads an ever-growing ledger. Iceberg bounds this with
 ``expireSnapshots`` — history older than a retention window is dropped,
 EXCEPT state still referenced by live data. The emulation has the same
 invariant, at run granularity:
@@ -59,11 +59,8 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 from corsearch_project_spark.sources.fs import LOCAL_FS, TMP_SUFFIX
-from corsearch_project_spark.sources.snapshots import ledger_files
+from corsearch_project_spark.sources.snapshots import ledger_files, read_ledger
 
 # Sibling directories the older swap-based expiry staged its rewrite in.
 ASIDE_SUFFIX = ".__expired__"
@@ -79,6 +76,22 @@ def latest_writers(snap_rows: List[dict]) -> Dict[int, str]:
         for b in r["buckets"]:
             latest[int(b)] = r["run_id"]
     return latest
+
+
+def current_lineage(
+    snap_rows: List[dict], lin_rows: List[dict]
+) -> Dict[int, List[dict]]:
+    """bucket -> the done lineage rows that describe its current contents:
+    for a bucket a snapshot covers, the rows of its latest writer
+    (`latest_writers`); for a bucket no snapshot covers (a table without
+    snapshots), every done row it has."""
+    writers = latest_writers(snap_rows)
+    current: Dict[int, List[dict]] = {}
+    for r in lin_rows:
+        b = int(r["url_bucket"])
+        if r["status"] == "done" and writers.get(b, r["run_id"]) == r["run_id"]:
+            current.setdefault(b, []).append(r)
+    return current
 
 
 def _refuse_swap_leftovers(root: str, fs) -> None:
@@ -101,14 +114,6 @@ def _refuse_swap_leftovers(root: str, fs) -> None:
             )
 
 
-def _read_files(files: List[str], columns, fs) -> Dict[str, List[dict]]:
-    """file -> its rows (only ``columns``), read on the driver."""
-    return {
-        f: pq.read_table(pa.BufferReader(fs.read_bytes(f)), columns=columns).to_pylist()
-        for f in files
-    }
-
-
 def expire_snapshots(
     output_path: str, keep_last: int = 3, fs=LOCAL_FS
 ) -> Optional[dict]:
@@ -121,10 +126,10 @@ def expire_snapshots(
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     _refuse_swap_leftovers(root, fs)
-    snap_files = _read_files(
+    snap_files = read_ledger(
         ledger_files(root + "/snapshots", fs), ["seq", "run_id", "buckets"], fs
     )
-    lin_files = _read_files(ledger_files(root + "/lineage", fs), ["run_id"], fs)
+    lin_files = read_ledger(ledger_files(root + "/lineage", fs), ["run_id"], fs)
     rows = [r for rs in snap_files.values() for r in rs]  # one row per commit
     if not rows:
         return None

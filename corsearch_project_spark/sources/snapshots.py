@@ -27,7 +27,10 @@ per-COMMIT ledger on top of it:
     stops a commit.
 
 The lineage ledger (sources/io.py ``append_lineage``) is written by the
-same `write_ledger_file`, one uniquely named file per commit. On real
+same `write_ledger_file`, one uniquely named file per commit. Every
+driver-side read of either ledger — the seq of a commit, ``--resume``'s
+done buckets, snapshot expiry, ``jobs/validate_table.py`` — goes through
+`read_ledger`, which raises on a file it cannot read. On real
 Iceberg these rows come for free from the catalog; the seam is the same as
 sources/io.py's TableFormat.
 """
@@ -35,10 +38,9 @@ sources/io.py's TableFormat.
 from __future__ import annotations
 
 import re
-from typing import List, Optional, Sequence, Set
+from typing import Dict, List, Optional, Sequence, Set
 
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -99,20 +101,24 @@ def ledger_files(path: str, fs=LOCAL_FS) -> List[str]:
     ]
 
 
-def read_run_rows(
-    files: Sequence[str], run_id: str, columns: Sequence[str], fs=LOCAL_FS
-) -> List[dict]:
-    """``columns`` of the rows of ``run_id`` in the ledger ``files``
-    (lineage or snapshots), read on the driver through the ``fs`` seam
-    with no Spark job; only those columns and run_id are decoded."""
-    rows: List[dict] = []
+def read_ledger(
+    files: Sequence[str], columns: Sequence[str], fs=LOCAL_FS
+) -> Dict[str, List[dict]]:
+    """file -> its rows (only ``columns``) for each of the ledger
+    ``files`` (lineage or snapshots), read on the driver through the
+    ``fs`` seam with no Spark job. A file that cannot be read raises
+    ValueError: a reader that skipped it would judge the table without
+    the commits it holds."""
+    out: Dict[str, List[dict]] = {}
     for file in files:
-        table = pq.read_table(
-            pa.BufferReader(fs.read_bytes(file)), columns=["run_id", *columns]
-        )
-        mine = table.filter(pc.equal(table.column("run_id"), run_id))
-        rows += mine.select(list(columns)).to_pylist()
-    return rows
+        try:
+            table = pq.read_table(
+                pa.BufferReader(fs.read_bytes(file)), columns=list(columns)
+            )
+        except (OSError, pa.ArrowException) as e:
+            raise ValueError(f"ledger file {file} cannot be read: {e}") from e
+        out[file] = table.to_pylist()
+    return out
 
 
 def run_buckets(path: str, run_id: str, fs=LOCAL_FS) -> Set[int]:
@@ -120,8 +126,11 @@ def run_buckets(path: str, run_id: str, fs=LOCAL_FS) -> Set[int]:
     Snapshot files are named by seq, not run, so every one is read —
     only its run_id and buckets columns; expire_snapshots bounds their
     number."""
-    rows = read_run_rows(ledger_files(path, fs), run_id, ("buckets",), fs)
-    return {b for r in rows for b in r["buckets"]}
+    files = read_ledger(ledger_files(path, fs), ("run_id", "buckets"), fs)
+    return {
+        b for rs in files.values() for r in rs if r["run_id"] == run_id
+        for b in r["buckets"]
+    }
 
 
 def latest_seq(path: str, fs=LOCAL_FS) -> Optional[int]:
@@ -137,23 +146,8 @@ def latest_seq(path: str, fs=LOCAL_FS) -> Optional[int]:
         if m is not None:
             seqs.append(int(m.group(1)))
             continue
-        stored = _stored_max_seq(file, fs)
-        if stored is not None:
-            seqs.append(stored)
+        seqs += [r["seq"] for r in read_ledger([file], ("seq",), fs)[file]]
     return max(seqs, default=None)
-
-
-def _stored_max_seq(file: str, fs) -> Optional[int]:
-    """max(seq) of the rows in a snapshot file; None for a file of no
-    rows."""
-    try:
-        table = pq.read_table(pa.BufferReader(fs.read_bytes(file)), columns=["seq"])
-    except (OSError, pa.ArrowException) as e:
-        raise ValueError(
-            f"snapshot file {file} carries no seq in its name and cannot be "
-            f"read: {e}"
-        ) from e
-    return pc.max(table.column("seq")).as_py()
 
 
 def _xor_hex(digests: List[str]) -> str:

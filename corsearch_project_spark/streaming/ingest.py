@@ -7,6 +7,14 @@ execution modes.
 All sinks here use ``trigger(availableNow=True)`` + a checkpoint dir —
 the batch-like drain mode that still exercises watermarks, state stores,
 and exactly-once file sinks.
+
+Nothing here writes the lineage or snapshot ledger: ``commit_run``
+(plans/extract_pipeline.py) is the engine's one ledger writer, and
+``write_extracted_stream`` is a plain exactly-once file sink whose output
+``validate_table``, ``--resume`` and the merge do not see as a commit. A
+streaming ledger would commit each micro-batch as a merge
+(plans/merge_pipeline.py), so it waits on a merge that survives a crash
+between its data write and its ledger commit.
 """
 
 from __future__ import annotations
@@ -182,109 +190,4 @@ def running_counts_tws(events: DataFrame, key_col: str = "user_id") -> DataFrame
         outputStructType="key bigint, total bigint",
         outputMode="Update",
         timeMode="None",
-    )
-
-
-def ingest_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    output_root: str,
-    rules_bc,
-    run_id: str,
-    input_path: str,
-    buckets: int = 64,
-) -> None:
-    """One micro-batch's idempotent commit (module-level so replay semantics
-    are directly testable): kernel → dynamic-overwrite data partitions keyed
-    by (url_bucket, batch_id) → ledger append gated on the batch's lineage
-    rows not existing yet. Calling this twice with the same (batch, id) —
-    foreachBatch's replay after a crash — leaves table and ledger
-    byte-identical to calling it once."""
-    from corsearch_project_spark.sources.lineage import lineage_rows
-    from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
-
-    out = output_root.rstrip("/")
-    extracted_path = out + "/extracted"
-    lineage_path = out + "/lineage"
-    batch_run_id = f"{run_id}-b{batch_id}"
-
-    spark_ = batch_df.sparkSession
-    try:
-        lin = spark_.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-        committed = bool(lin.where(F.col("run_id") == batch_run_id).head(1))
-    except Exception:
-        committed = False
-    if committed:
-        return  # replayed batch that fully committed: data + ledger done
-
-    ext = (
-        with_url_bucket(
-            run_kernel(batch_df.select("url", "html", "text"), rules_bc),
-            buckets,
-        )
-        .withColumn("batch_id", F.lit(batch_id))
-        .persist()
-    )
-    (
-        ext.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("url_bucket", "batch_id")
-        .parquet(extracted_path)
-    )
-    lin = lineage_rows(ext.drop("batch_id"), batch_run_id, input_path)
-    lin.coalesce(1).write.mode("append").parquet(lineage_path)
-    ext.unpersist()
-
-
-def stream_extract_with_lineage(
-    spark: SparkSession,
-    input_path: str,
-    output_root: str,
-    rules_bc,
-    run_id: str,
-    buckets: int = 64,
-    max_files_per_trigger: Optional[int] = None,
-):
-    """Continuous ingest with the SAME ledger as the batch pipeline: each
-    micro-batch runs the kernel, appends to the bucketed table, and appends
-    per-bucket lineage rows under run_id '<run>-b<batch>' — so
-    jobs/validate_table.py and the resume/merge machinery see streaming
-    commits exactly like batch commits.
-
-    foreachBatch (not a direct file sink) because one micro-batch must
-    produce TWO writes (data + lineage): the lineage row is written after
-    the data commit returns, mirroring the batch pipeline's
-    commit-then-ledger ordering. Delivery semantics, stated precisely
-    (round-2 ADVICE — a blind append here would be at-least-once):
-
-    - SOURCE side: the stream checkpoint guarantees no input file is ever
-      re-read once its batch committed — a drained query restarted with
-      the same checkpoint re-processes nothing.
-    - SINK side: foreachBatch replays a batch whose epoch didn't commit
-      (crash between data write and checkpoint commit), so the batch body
-      must be an idempotent upsert, not an append. The data write is
-      dynamic-partition-overwrite keyed by (url_bucket, batch_id): a
-      replayed batch N rewrites exactly its own partitions — same rows,
-      no duplicates, other batches' data untouched. The lineage append is
-      gated on the '<run>-b<batch>' ledger rows not already existing.
-      Net: exactly-once TABLE STATE under replay; the extracted layout
-      gains a batch_id partition level (harmless extra column on read,
-      and it doubles as commit provenance).
-
-    At cluster scale this is the kappa-style backfill-free path: point it
-    at the landing directory of a crawler and the extracted table + ledger
-    stay continuously current."""
-    out = output_root.rstrip("/")
-    checkpoint = out + "/checkpoint"
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_batch(batch_df, batch_id, out, rules_bc, run_id, input_path,
-                     buckets)
-
-    return (
-        stream_pages(spark, input_path, max_files_per_trigger)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(process_batch)
-        .start()
     )

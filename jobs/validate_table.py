@@ -2,20 +2,32 @@
 """Post-run table validation (SURVEY §3.3's final validation pass as a
 standalone job): verify an extracted table against its lineage ledger.
 
-Checks (each one aggregate job over pruned columns):
-  1. bucket completeness — every bucket the lineage ledger recorded as
-     done for this run is present in the data (NOT all of 0..B-1: a bucket
-     no url hashes into — small runs, bucket_whitelist — is legitimate);
-  2. url uniqueness — no url appears twice (dedupe + idempotent overwrite
-     guarantee);
-  3. lineage reconciliation — per-bucket doc_count AND the
-     order-insensitive XOR-sha256 rollup recomputed from the data equal the
-     LATEST lineage row per bucket, ordered by the snapshot ledger's seq
-     (post-merge tables mix run_ids: the run that last rewrote a bucket
-     describes its current contents — proves the ledger matches exactly
-     the committed bytes);
-  4. digest integrity — JVM-side sha2(extracted_text) equals the kernel's
-     Python-side text_sha256 for every row (cross-runtime hash agreement).
+Both ledgers are read on the driver through the ``fs`` seam
+(``snapshots.read_ledger``, no Spark job; a file that cannot be read
+stops the validation). The table is read in two Spark actions, each over
+declared columns, so no job infers the schema:
+
+  1. one ``lineage_rows`` collect over the table's lineage columns
+     recomputes each bucket's doc_count and order-insensitive XOR-sha256
+     rollup, exactly as the commit does. From it, on the driver:
+     * bucket completeness — every bucket the lineage ledger records as
+       done for this run is present in the data (NOT all of 0..B-1: a
+       bucket no url hashes into — small runs, bucket_whitelist — is
+       legitimate);
+     * lineage reconciliation — each bucket's recomputed doc_count and
+       rollup equal its current lineage rows
+       (``maintenance.current_lineage``): the rows of the bucket's
+       latest writer in snapshot order, since the run that last rewrote
+       a bucket describes its contents, whatever run is validated
+       (post-merge tables mix run_ids). A bucket no snapshot covers is
+       checked against every done row it has. This proves the ledger
+       matches exactly the committed bytes;
+  2. one aggregate over url, extracted_text and text_sha256:
+     * url uniqueness — no url appears twice (dedupe + idempotent
+       overwrite guarantee);
+     * digest integrity — JVM-side sha2(extracted_text) equals the
+       kernel's Python-side text_sha256 for every row (cross-runtime
+       hash agreement).
 
 Exit 0 with a JSON report when all pass; exit 2 listing failures.
 
@@ -33,111 +45,104 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from corsearch_project_spark.plans.session import build_session
-from corsearch_project_spark.sources.lineage import lineage_rows
+from corsearch_project_spark.sources.fs import LOCAL_FS
+from corsearch_project_spark.sources.lineage import LINEAGE_INPUT_SCHEMA, lineage_rows
+from corsearch_project_spark.sources.maintenance import current_lineage
+from corsearch_project_spark.sources.schemas import EXTRACTED_SCHEMA
+from corsearch_project_spark.sources.snapshots import ledger_files, read_ledger
+
+# The extracted-table columns the uniqueness and digest checks read.
+CHECK_SCHEMA = T.StructType(
+    [EXTRACTED_SCHEMA[c] for c in ("url", "extracted_text", "text_sha256")]
+)
 
 
-def _latest_lineage(spark, lineage_path: str, snapshots_path: str | None):
-    """Latest committed lineage row per bucket, ordered by the snapshot
-    ledger's seq (the run that last rewrote a bucket describes its current
-    contents — the merge-increment job rewrites buckets under new run_ids,
-    so reconciliation can NOT assume one run owns the whole table). Falls
-    back to the raw lineage rows when no snapshots table exists."""
-    from pyspark.sql import Window
-
-    lin = spark.read.parquet(lineage_path).where(F.col("status") == "done")
-    seqs = None
-    if snapshots_path:
-        try:
-            from corsearch_project_spark.sources.snapshots import read_snapshots
-
-            snaps = read_snapshots(spark, snapshots_path)
-            if snaps is not None:
-                seqs = snaps.select("run_id", "seq").distinct()
-        except Exception:
-            seqs = None
-    if seqs is None:
-        return lin
-    w = Window.partitionBy("url_bucket").orderBy(F.desc_nulls_last("seq"))
-    return (
-        lin.join(seqs, "run_id", "left")
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "seq")
-    )
+def _rows(path: str, columns, fs) -> list:
+    """Every row (only ``columns``) of the ledger dir ``path``."""
+    files = read_ledger(ledger_files(path, fs), columns, fs)
+    return [r for rs in files.values() for r in rs]
 
 
 def validate_table(spark, extracted_path: str, lineage_path: str, run_id: str,
-                   buckets: int, snapshots_path: str | None = None) -> dict:
-    ext = spark.read.parquet(extracted_path)
-    lin_run = spark.read.parquet(lineage_path).where(
-        (F.col("run_id") == run_id) & (F.col("status") == "done")
+                   buckets: int, snapshots_path: str | None = None, *,
+                   fs=LOCAL_FS) -> dict:
+    lin = _rows(
+        lineage_path,
+        ("run_id", "url_bucket", "status", "doc_count", "sha256_rollup"),
+        fs,
     )
-    # Reconciliation target: the latest row per bucket across ALL runs
-    # (post-merge tables mix run_ids); completeness stays per --run-id.
-    lin = _latest_lineage(spark, lineage_path, snapshots_path)
+    snaps = []
+    if snapshots_path:
+        snaps = _rows(snapshots_path, ("seq", "run_id", "buckets"), fs)
+    current = current_lineage(snaps, lin)
     failures = []
 
-    present = sorted(
-        r["url_bucket"] for r in ext.select("url_bucket").distinct().collect()
-    )
-    expected = sorted(
-        r["url_bucket"] for r in lin_run.select("url_bucket").distinct().collect()
-    )
+    # the same per-bucket rollup the commit writes, recomputed from the data
+    ext = spark.read.schema(LINEAGE_INPUT_SCHEMA).parquet(extracted_path)
+    recomputed = {r["url_bucket"]: r for r in lineage_rows(ext, run_id, "").collect()}
     # Completeness is judged against the ledger, not range(buckets): an
     # empty bucket is valid, but a ledger-done bucket absent from the data
     # means committed rows were lost.
-    missing = sorted(set(expected) - set(present))
+    expected = {
+        r["url_bucket"] for r in lin if r["run_id"] == run_id and r["status"] == "done"
+    }
+    missing = sorted(expected - set(recomputed))
     if missing:
         failures.append({"check": "bucket_completeness", "missing_buckets": missing})
 
-    dup_urls = (
-        ext.groupBy("url").agg(F.count(F.lit(1)).alias("n")).where(F.col("n") > 1)
-    )
-    n_dups = dup_urls.count()
-    if n_dups:
-        failures.append({"check": "url_uniqueness", "duplicate_urls": n_dups})
-
-    # the same per-bucket rollup the commit writes, recomputed from the data
-    recomputed = lineage_rows(ext, run_id, "").select(
-        "url_bucket", "doc_count", "sha256_rollup"
-    )
-    mismatch = (
-        recomputed.alias("r")
-        .join(lin.alias("l"), "url_bucket", "full")
-        .where(
-            F.col("r.doc_count").eqNullSafe(F.col("l.doc_count")) == F.lit(False)
+    checks = (
+        spark.read.schema(CHECK_SCHEMA).parquet(extracted_path)
+        .groupBy("url")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                (F.sha2(F.col("extracted_text").cast("binary"), 256)
+                 != F.col("text_sha256")).cast("int")
+            ).alias("bad"),
         )
-        .count()
+        .agg(
+            F.count(F.when(F.col("n") > 1, 1)).alias("dup_urls"),
+            F.coalesce(F.sum("bad"), F.lit(0)).alias("bad_digests"),
+        )
+        .first()
     )
-    rollup_mismatch = (
-        recomputed.alias("r")
-        .join(lin.alias("l"), "url_bucket", "inner")
-        .where(F.col("r.sha256_rollup") != F.col("l.sha256_rollup"))
-        .count()
-    )
-    if mismatch or rollup_mismatch:
+    if checks["dup_urls"]:
+        failures.append(
+            {"check": "url_uniqueness", "duplicate_urls": checks["dup_urls"]}
+        )
+
+    # A bucket on one side only is one count mismatch per row it has there.
+    count_mismatch = rollup_mismatch = 0
+    for b in set(recomputed) | set(current):
+        r, ledger = recomputed.get(b), current.get(b, [])
+        if r is None or not ledger:
+            count_mismatch += max(len(ledger), 1)
+            continue
+        for row in ledger:
+            count_mismatch += row["doc_count"] != r["doc_count"]
+            rollup_mismatch += row["sha256_rollup"] != r["sha256_rollup"]
+    if count_mismatch or rollup_mismatch:
         failures.append(
             {
                 "check": "lineage_reconciliation",
-                "count_mismatches": mismatch,
+                "count_mismatches": count_mismatch,
                 "rollup_mismatches": rollup_mismatch,
             }
         )
 
-    bad_digests = ext.where(
-        F.sha2(F.col("extracted_text").cast("binary"), 256) != F.col("text_sha256")
-    ).count()
-    if bad_digests:
-        failures.append({"check": "digest_integrity", "bad_rows": bad_digests})
+    if checks["bad_digests"]:
+        failures.append(
+            {"check": "digest_integrity", "bad_rows": checks["bad_digests"]}
+        )
 
     return {
         "run_id": run_id,
         "buckets_expected": buckets,
-        "buckets_present": len(present),
-        "docs": ext.count(),
+        "buckets_present": len(recomputed),
+        "docs": sum(r["doc_count"] for r in recomputed.values()),
         "ok": not failures,
         "failures": failures,
     }

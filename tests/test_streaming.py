@@ -222,77 +222,6 @@ def test_stateful_running_counts_tws(spark, tmp_path):
     assert final == {1: 3, 2: 2}
 
 
-def test_stream_extract_with_lineage_and_exactly_once_resume(spark, tmp_path):
-    """Continuous ingest with the batch ledger: per-micro-batch lineage rows
-    reconcile against the data (count + XOR rollup), and restarting a
-    drained query with the same checkpoint re-processes NOTHING; new files
-    landed after the first drain are picked up exactly once."""
-    rows = gen_pages(40, seed=654, dup_frac=0.0)
-    src = os.path.join(str(tmp_path), "cont_src")
-    spark.createDataFrame(pages_to_pandas(rows[:25])).write.mode("overwrite").parquet(src)
-
-    rules_bc = spark.sparkContext.broadcast(rules_to_plain(default_rules()))
-    out = os.path.join(str(tmp_path), "cont_out")
-    _drain(S.stream_extract_with_lineage(spark, src, out, rules_bc, "SRUN", buckets=8))
-
-    ext = spark.read.parquet(os.path.join(out, "extracted"))
-    assert ext.count() == 25
-    lin = spark.read.parquet(os.path.join(out, "lineage"))
-    assert lin.count() > 0
-    assert all(r["run_id"].startswith("SRUN-b") for r in lin.collect())
-
-    # ledger reconciliation: per-bucket counts match the data
-    got = {r["url_bucket"]: r["doc_count"] for r in
-           lin.groupBy("url_bucket").agg(F.sum("doc_count").alias("doc_count")).collect()}
-    want = {r["url_bucket"]: r["cnt"] for r in
-            ext.groupBy("url_bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert got == want
-
-    # drain again with NO new input: nothing re-processed (exactly-once)
-    _drain(S.stream_extract_with_lineage(spark, src, out, rules_bc, "SRUN", buckets=8))
-    assert spark.read.parquet(os.path.join(out, "extracted")).count() == 25
-
-    # land the remaining 15 docs as a new file; only they are processed
-    spark.createDataFrame(pages_to_pandas(rows[25:])).write.mode("append").parquet(src)
-    _drain(S.stream_extract_with_lineage(spark, src, out, rules_bc, "SRUN", buckets=8))
-    final = spark.read.parquet(os.path.join(out, "extracted"))
-    assert final.count() == 40
-    assert final.select("url").distinct().count() == 40
-
-
-def test_ingest_batch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch replays a batch whose epoch didn't commit; the batch body
-    must therefore be an idempotent upsert (round-2 ADVICE — the old blind
-    append double-wrote rows + a duplicate ledger row on replay). Calling
-    ingest_batch twice with the same (df, id) must leave table and ledger
-    identical to calling it once."""
-    rows = gen_pages(20, seed=321, dup_frac=0.0)
-    src = os.path.join(str(tmp_path), "rep_src")
-    spark.createDataFrame(pages_to_pandas(rows)).write.parquet(src)
-    rules_bc = spark.sparkContext.broadcast(rules_to_plain(default_rules()))
-    out = os.path.join(str(tmp_path), "rep_out")
-    batch = spark.read.parquet(src)
-
-    S.ingest_batch(batch, 0, out, rules_bc, "RRUN", src, buckets=8)
-    ext1 = spark.read.parquet(out + "/extracted")
-    n1, urls1 = ext1.count(), ext1.select("url").distinct().count()
-
-    # replay the SAME batch (crash-before-checkpoint-commit scenario)
-    S.ingest_batch(batch, 0, out, rules_bc, "RRUN", src, buckets=8)
-    ext2 = spark.read.parquet(out + "/extracted")
-    assert ext2.count() == n1 == urls1 == 20
-    lin = spark.read.parquet(out + "/lineage")
-    per_run = lin.groupBy("run_id", "url_bucket").count().collect()
-    assert all(r["count"] == 1 for r in per_run), "duplicate ledger rows"
-
-    # a second DISTINCT batch still lands next to the first (no clobber)
-    rows2 = gen_pages(30, seed=322, dup_frac=0.0)[20:]
-    src2 = os.path.join(str(tmp_path), "rep_src2")
-    spark.createDataFrame(pages_to_pandas(rows2)).write.parquet(src2)
-    S.ingest_batch(spark.read.parquet(src2), 1, out, rules_bc, "RRUN", src2, buckets=8)
-    assert spark.read.parquet(out + "/extracted").count() == n1 + len(rows2)
-
-
 def test_streaming_crawl_frontier_equals_batch(spark, tmp_path):
     """Sitemap discoveries arriving as a STREAM maintain the same frontier
     a batch pass computes: each foreachBatch increment anti-joins its locs
