@@ -4,12 +4,11 @@ P1: ``url_bucket = pmod(xxhash64(url), B)`` — the Iceberg ``bucket(B, url)``
 transform emulated with Spark built-ins (no Iceberg jars offline, SURVEY
 §0.1); swap-in point for real Iceberg DDL is sources.io.TableFormat.
 
-P2: hot hosts (by row share) get a salt column so one mega-host fans out
-across S kernel tasks. AQE's skew split only rebalances shuffle *reads*;
-compute skew inside the Python kernel stage needs this explicit salt
-(BASELINE.json:6 "salted repartitioning for skewed hosts"). The hot-host set
-is found with one cheap aggregate on the (pruned) url column and broadcast
-as a literal isin() — no join on the big side.
+P2: every url gets a salt ∈ [0, S) hashed from the full url, so one
+mega-host fans out across S kernel tasks without first being found. AQE's
+skew split only rebalances shuffle *reads*; compute skew inside the Python
+kernel stage needs this explicit salt (BASELINE.json:6 "salted
+repartitioning for skewed hosts"). No pipeline looks for hot hosts.
 """
 
 from __future__ import annotations
@@ -30,6 +29,7 @@ def with_url_bucket(df: DataFrame, b: int = DEFAULT_BUCKETS, url_col: str = "url
     )
 
 
+# Called by no pipeline; kept because perfbench/layers.py imports it.
 def hot_hosts(pages: DataFrame, hot_frac: float = 0.05, max_hosts: int = 64) -> List[str]:
     """Hosts owning more than ``hot_frac`` of rows. ONE job over the pruned
     url column: per-host counts plus the grand total via a window over the
@@ -54,7 +54,7 @@ def hot_hosts(pages: DataFrame, hot_frac: float = 0.05, max_hosts: int = 64) -> 
 
 def with_salt(
     df: DataFrame,
-    hot: Optional[List[str]] = None,
+    hot: Optional[List[str]] = None,  # unused; perfbench/layers.py passes it positionally
     s: int = DEFAULT_SALT,
     url_col: str = "url",
 ) -> DataFrame:
@@ -65,8 +65,8 @@ def with_salt(
     the kernel shuffle gets B×S keys instead of B — with keys ≫ partitions,
     key→partition hash collisions average out (Poisson balance ±1/√(keys/P))
     instead of producing the 2-3×-loaded straggler partitions measured with
-    keys == partitions. The ``hot`` list is retained for lineage/reporting;
-    s <= 1 disables salting (the skew-equivalence test's control arm)."""
+    keys == partitions. ``hot`` is ignored: every url is salted. s <= 1
+    disables salting (the skew-equivalence test's control arm)."""
     if s <= 1:
         return df.withColumn("salt", F.lit(0))
     salt = F.pmod(F.xxhash64(F.col(url_col), F.lit("salt-seed-1")), F.lit(s)).cast("int")

@@ -11,7 +11,8 @@ Plan shape (one Python stage by design, SURVEY §4):
 
 Resume (§3.3): completed buckets are read from lineage and excluded with a
 literal NOT isin() filter, which prunes bucket directories at scan time when
-the input is bucket-partitioned.
+the input is bucket-partitioned. The lineage rollup prunes the buckets a
+snapshot of the run already covers from its scan the same way.
 
 The incremental merge (plans/merge_pipeline.py) runs the same path: both
 pipelines read their input with ``scan_input``, extract it with
@@ -39,7 +40,6 @@ from corsearch_project_spark.operators.kernel import (
 from corsearch_project_spark.operators.partitioning import (
     DEFAULT_BUCKETS,
     DEFAULT_SALT,
-    hot_hosts,
     with_salt,
     with_url_bucket,
 )
@@ -52,6 +52,10 @@ from corsearch_project_spark.sources.io import (
 )
 from corsearch_project_spark.sources.lineage import LINEAGE_INPUT_SCHEMA, lineage_rows
 from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
+
+# Never called here: re-imported only so that the name perfbench/spans.py
+# wraps resolves (tests/test_pipeline.py::test_bench_tracer_targets_resolve).
+from corsearch_project_spark.operators.partitioning import hot_hosts  # noqa: F401
 
 
 class TableRoot:
@@ -82,7 +86,7 @@ class ExtractConfig(TableRoot):
     input_format: str = "pages"  # 'pages' (parquet table) | 'warc' (raw dumps)
     buckets: int = DEFAULT_BUCKETS
     salt: int = DEFAULT_SALT
-    hot_frac: float = 0.05
+    hot_frac: float = 0.05  # read only by perfbench/layers.py
     resume: bool = False
     kernel_partitions: Optional[int] = None
     bucket_whitelist: Optional[Sequence[int]] = None  # test hook: simulate partial run
@@ -136,13 +140,15 @@ def dedupe_latest(pages: DataFrame) -> DataFrame:
     declarative max gets map-side PARTIAL aggregation — each input split
     reduces its local replicas before the shuffle and nothing is sorted —
     which at 10^12 rows means the exchange carries ~unique urls instead of
-    every replica plus a full-partition sort."""
+    every replica plus a full-partition sort. The struct packs each column
+    once — (warc_ts, length(html), text, the other columns) — so the
+    ordering keys warc_ts and text are not carried twice."""
     payload = [c for c in pages.columns if c != "url"]
     packed = F.struct(
-        F.col("warc_ts").alias("_k1"),
+        "warc_ts",
         F.length("html").alias("_k2"),
-        F.col("text").alias("_k3"),
-        *[F.col(c).alias(c) for c in payload],
+        "text",
+        *[c for c in payload if c not in ("warc_ts", "text")],
     )
     picked = pages.groupBy("url").agg(F.max(packed).alias("_m"))
     return picked.select("url", *[F.col(f"_m.{c}").alias(c) for c in payload]).select(
@@ -265,9 +271,11 @@ def commit_run(
     file is then removed, so a retry (``--resume``) of the run redoes its
     buckets instead of skipping them.
 
-    An earlier attempt that crashed between its lineage and snapshot
-    files left ``skip`` buckets that no snapshot of the run covers
-    (``snapshots.run_buckets``, read on the driver). The snapshot
+    ``skip`` buckets that a snapshot of the run covers
+    (``snapshots.run_buckets``, read on the driver) are pruned from the
+    scan, so a resume reads only the buckets it commits. An earlier
+    attempt that crashed between its lineage and snapshot files left
+    ``skip`` buckets that no snapshot of the run covers. The snapshot
     committed here covers them too, with their rows from the same job
     over the committed table — one row per bucket, whatever number of
     crashed attempts wrote lineage for it — so a resume that skips every
@@ -275,12 +283,15 @@ def commit_run(
     the table paths. Returns (lineage rows, snapshot); nothing is
     appended and the snapshot is None when no new or uncovered rows
     remain."""
-    committed = fmt.read_extracted(spark, cfg.extracted_path, LINEAGE_INPUT_SCHEMA)
-    lin = lineage_rows(committed, cfg.run_id, input_split, buckets=buckets).collect()
     skipped = set(skip)
     covered = snapshots.run_buckets(cfg.snapshots_path, cfg.run_id, fs) if skipped else set()
+    committed = fmt.read_extracted(spark, cfg.extracted_path, LINEAGE_INPUT_SCHEMA)
+    done = skipped & covered
+    if done:
+        committed = committed.where(~F.col("url_bucket").isin(sorted(done)))
+    lin = lineage_rows(committed, cfg.run_id, input_split, buckets=buckets).collect()
     rows = [r for r in lin if r["url_bucket"] not in skipped]
-    orphans = [r for r in lin if r["url_bucket"] in skipped - covered]
+    orphans = [r for r in lin if r["url_bucket"] in skipped]
     if not rows and not orphans:
         return rows, None
     lin_file = fmt.append_lineage(rows, cfg.lineage_path, fs=fs)
@@ -327,14 +338,8 @@ def run_extract(
     if cfg.bucket_whitelist is not None:
         pages = pages.where(F.col("url_bucket").isin(list(cfg.bucket_whitelist)))
 
-    # Reported only: with_salt salts every url, so the hot hosts steer
-    # nothing. Counted on the pre-dedupe `url` column alone, which Parquet
-    # reads without the fat `html` column; re-crawl duplicates inflate the
-    # per-host counts slightly.
-    hot = hot_hosts(pages.select("url"), cfg.hot_frac)
     ext = extract_pages(spark, pages, cfg, rules, cfg.with_markdown)
     extracted, pages = ext.extracted, ext.pages
-    phases.mark("hot_hosts")
 
     # Write-clustering exchange: the kernel ran on fine-grained (bucket,
     # salt) partitions for CPU balance; regroup rows by bucket before the
@@ -374,7 +379,6 @@ def run_extract(
         "phase_wall_s": phases,
         "buckets_written": sorted(r["url_bucket"] for r in new_rows),
         "buckets_skipped": skipped,
-        "hot_hosts": hot,
         "kernel_tasks": ext.kernel_tasks,
         "docs_out": sum(r["doc_count"] for r in new_rows),
         "extracted_path": cfg.extracted_path,

@@ -78,7 +78,7 @@ class ParquetBucketedFormat:
 
     def write_extracted(self, df: DataFrame, path: str) -> None:
         """S3: bucketed sink. Rows arrive already repartitioned on
-        (url_bucket, salt); sortWithinPartitions('url') clusters files for
+        url_bucket; sortWithinPartitions('url') clusters files for
         url range-lookup; dynamic partition overwrite makes resume reruns
         idempotent (only pending buckets are replaced).
 

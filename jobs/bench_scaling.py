@@ -123,7 +123,6 @@ def run_once(master: str, zip_path: str, input_path: str, workdir: str, rep: int
         "--output", out,
         "--run-id", f"S{rep}",
         "--buckets", "64",
-        "--salt", "64",
         "--kernel-partitions", str(kernel_partitions),
         "--shuffle-partitions", "32",  # held constant across both levels
         "--master", master,

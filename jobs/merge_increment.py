@@ -32,7 +32,6 @@ def main(argv=None) -> int:
     ap.add_argument("--output", required=True, help="existing table root")
     ap.add_argument("--run-id", default="")
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--kernel-partitions", type=int, default=None)
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
@@ -64,7 +63,6 @@ def main(argv=None) -> int:
         run_id=args.run_id,
         input_format=args.input_format,
         buckets=args.buckets,
-        salt=args.salt,
         kernel_partitions=args.kernel_partitions,
     )
     import time

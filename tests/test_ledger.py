@@ -8,6 +8,7 @@ ledger files keep committing, and a root the ledger cannot reach fails
 before the data job."""
 
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -205,6 +206,37 @@ def test_resume_commits_the_snapshot_a_crash_left_out(spark, tmp_path, monkeypat
 
     assert run_extract(spark, cfg)["snapshot"] is None
     assert len(S.read_snapshots(spark, snap_path).collect()) == 2
+
+
+def test_resume_lineage_reads_only_the_buckets_it_commits(spark, tmp_path, monkeypatch):
+    """A --resume of a partial backfill prunes the buckets its run's
+    snapshot already covers from the lineage rollup's scan of the
+    committed table, and still commits every other bucket."""
+    from corsearch_project_spark.plans import extract_pipeline
+
+    src = str(tmp_path / "part.parquet")
+    _write_pages(gen_pages(60, seed=96, dup_frac=0.0), src)
+    out = str(tmp_path / "part")
+    cfg = ExtractConfig(src, out, run_id="R-part", buckets=BUCKETS,
+                        bucket_whitelist=[0, 1, 2, 3])
+    assert run_extract(spark, cfg)["buckets_written"] == [0, 1, 2, 3]
+
+    scanned = []
+    real = extract_pipeline.lineage_rows
+
+    def recording(extracted, *args, **kwargs):
+        scanned.append(extracted)
+        return real(extracted, *args, **kwargs)
+
+    monkeypatch.setattr(extract_pipeline, "lineage_rows", recording)
+    cfg.bucket_whitelist, cfg.resume = None, True
+    rep = run_extract(spark, cfg)
+    assert rep["buckets_skipped"] == [0, 1, 2, 3]
+    assert rep["buckets_written"] == [4, 5, 6, 7]
+    assert rep["snapshot"]["buckets"] == [4, 5, 6, 7]
+    (committed,) = scanned
+    plan = re.sub(r"#\d+", "", committed._jdf.queryExecution().executedPlan().toString())
+    assert "PartitionFilters: [NOT url_bucket IN (0,1,2,3)]" in plan, plan
 
 
 def test_done_buckets_reads_only_the_runs_lineage_files(tmp_path):

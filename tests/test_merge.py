@@ -3,7 +3,6 @@ semantics over the bucketed table — full-run equivalence, no-op increments,
 untouched buckets physically preserved, post-merge validation."""
 
 import os
-import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -142,16 +141,21 @@ def test_merge_keeps_markdown_columns(spark, tmp_path):
 
 
 def test_merge_computes_no_hot_hosts(spark, tmp_path, monkeypatch):
-    """The merge never asks for hot hosts: with hot_hosts raising, it
-    commits the same counts and table as an unpatched merge."""
+    """Neither the backfill nor the merge asks for hot hosts: with
+    hot_hosts raising, each commits the same table (the backfill the same
+    lineage rollups, the merge the same counts) as an unpatched run."""
+    from corsearch_project_spark.operators import partitioning
     from corsearch_project_spark.plans import extract_pipeline, merge_pipeline
 
     base = gen_pages(60, seed=98, dup_frac=0.0)
-    out = _extract_all(spark, tmp_path, base, "hot")
-    out_patched = str(tmp_path / "hot_patched")
-    shutil.copytree(out, out_patched)
     inc_src = str(tmp_path / "hot_inc.parquet")
     _write_pages(_new_and_updated(base, 20, seed=99), inc_src)
+
+    def backfill(name):
+        root = _extract_all(spark, tmp_path, base, name)
+        lin = spark.read.parquet(os.path.join(root, "lineage")).collect()
+        rollups = {(r["url_bucket"], r["doc_count"], r["sha256_rollup"]) for r in lin}
+        return root, (_table_state(spark, root), rollups)
 
     def merge(root):
         return run_merge(
@@ -161,13 +165,16 @@ def test_merge_computes_no_hot_hosts(spark, tmp_path, monkeypatch):
             default_rules(),
         )
 
+    out, backfilled = backfill("hot")
     plain = merge(out)
 
     def refuse(*args, **kwargs):
-        raise AssertionError("the merge must not compute hot hosts")
+        raise AssertionError("no pipeline may compute hot hosts")
 
-    for mod in (extract_pipeline, merge_pipeline):
+    for mod in (partitioning, extract_pipeline, merge_pipeline):
         monkeypatch.setattr(mod, "hot_hosts", refuse)
+    out_patched, backfilled_patched = backfill("hot_patched")
+    assert backfilled_patched == backfilled
     patched = merge(out_patched)
     keys = ("docs_added", "docs_updated", "docs_unchanged", "buckets_rewritten")
     assert [patched[k] for k in keys] == [plain[k] for k in keys]
