@@ -2,12 +2,13 @@
 ``rewrite_data_files`` maintenance action emulated over the bucketed Parquet
 layout.
 
-Small files accumulate from resume reruns (each rerun rewrites only its
-pending buckets) and from salt-fanned kernel tasks. Compaction reads the
-table, regroups rows by bucket so each bucket lands in exactly one task
-(→ one file per ``target_records`` rows), rewrites into a fresh directory
-and atomically swaps it in. At cluster scale the same job runs per-bucket
-(partition-pruned) rather than whole-table.
+Small files accumulate from the ``maxRecordsPerFile`` split, which leaves a
+small remainder file per bucket, and in tables written before the bucketed
+sink grouped each bucket into one task (a file per kernel task per bucket).
+Compaction reads the table, regroups rows by bucket so each bucket lands in
+exactly one task (→ one file per ``target_records`` rows), rewrites into a
+fresh directory and atomically swaps it in. At cluster scale the same job
+runs per-bucket (partition-pruned) rather than whole-table.
 """
 
 from __future__ import annotations

@@ -89,7 +89,6 @@ class ExtractConfig(TableRoot):
     hot_frac: float = 0.05  # read only by perfbench/layers.py
     resume: bool = False
     kernel_partitions: Optional[int] = None
-    bucket_whitelist: Optional[Sequence[int]] = None  # test hook: simulate partial run
     max_records_per_file: int = 50_000
     # Opt-in markdown column: the fused dual-emit kernel parses each HTML
     # document ONCE and serializes twice, adding (extracted_md, md_sha256)
@@ -335,37 +334,21 @@ def run_extract(
         skipped = done_buckets(cfg.lineage_path, cfg.run_id, fs)
     if skipped:
         pages = pages.where(~F.col("url_bucket").isin(skipped))
-    if cfg.bucket_whitelist is not None:
-        pages = pages.where(F.col("url_bucket").isin(list(cfg.bucket_whitelist)))
 
     ext = extract_pages(spark, pages, cfg, rules, cfg.with_markdown)
-    extracted, pages = ext.extracted, ext.pages
-
-    # Write-clustering exchange: the kernel ran on fine-grained (bucket,
-    # salt) partitions for CPU balance; regroup rows by bucket before the
-    # partitionBy write so each bucket lands in ~1 task → ~1 file (without
-    # this, files = tasks × buckets — small-file explosion that made the
-    # lineage read-back the slowest stage). Same shape as Iceberg's
-    # pre-write distribution ("hash" write.distribution-mode).
-    fmt.write_extracted(extracted.repartition(cfg.buckets, "url_bucket"), cfg.extracted_path)
+    fmt.write_extracted(ext.extracted, cfg.extracted_path)
     phases.mark("kernel_and_write")
 
+    # over the deduped pages (the rows the main kernel saw); the JVM
+    # pre-filter keeps non-document bytes out of the Python stage
     if cfg.with_doc_assets:
-        # over the deduped pages relation (same rows the main kernel saw);
-        # the JVM pre-filter keeps non-document bytes out of the Python stage
-        assets = run_doc_assets_kernel(pages.select("url", "html"))
-        assets = with_url_bucket(assets, cfg.buckets)
-        fmt.write_extracted(
-            assets.repartition(cfg.buckets, "url_bucket"), cfg.doc_assets_path
-        )
+        assets = run_doc_assets_kernel(ext.pages.select("url", "html"))
+        fmt.write_extracted(with_url_bucket(assets, cfg.buckets), cfg.doc_assets_path)
         phases.mark("doc_assets")
 
     if cfg.with_doc_tables:
-        tables = run_doc_tables_kernel(pages.select("url", "html"))
-        tables = with_url_bucket(tables, cfg.buckets)
-        fmt.write_extracted(
-            tables.repartition(cfg.buckets, "url_bucket"), cfg.doc_tables_path
-        )
+        tables = run_doc_tables_kernel(ext.pages.select("url", "html"))
+        fmt.write_extracted(with_url_bucket(tables, cfg.buckets), cfg.doc_tables_path)
         phases.mark("doc_tables")
 
     operation = "resume-append" if cfg.resume else "overwrite"

@@ -38,12 +38,13 @@ table.
 
 from __future__ import annotations
 
+import re
 import uuid
 from collections import Counter
 from dataclasses import dataclass
 from typing import Dict, Optional
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from corsearch_project_spark.plans.extract_pipeline import (
     DEFAULT_BUCKETS,
@@ -90,6 +91,33 @@ class MergeConfig(TableRoot):
             self.run_id = "m" + uuid.uuid4().hex[:11]
 
 
+_BUCKET_DIR = re.compile(r"/url_bucket=(\d+)/")
+
+
+def check_bucket_count(existing: DataFrame, buckets: int, path: str) -> None:
+    """Raise ValueError, naming both counts, when the table at ``path``
+    was written with another bucket count than ``buckets``: a committed
+    ``url_bucket=<k>`` has k >= ``buckets`` (from the read's file
+    listing), or one of 64 sampled committed rows (one ``limit`` job) is
+    not in bucket ``pmod(xxhash64(url), buckets)``. Merged at another
+    count, a re-crawled url would get a second row in another bucket."""
+    high = max(
+        (int(m.group(1)) for m in map(_BUCKET_DIR.search, existing.inputFiles()) if m),
+        default=-1,
+    )
+    sample = existing.select(F.xxhash64("url").alias("h"), "url_bucket").limit(64).collect()
+
+    def fits(b: int) -> bool:  # Python's % of a positive divisor is Spark's pmod
+        return all(h % b == k for h, k in sample)
+
+    if high < buckets and fits(buckets):
+        return
+    written = next((b for b in range(high + 1, 1 << 16) if fits(b)), "another number of")
+    raise ValueError(
+        f"table {path} was written with {written} buckets; the merge was given buckets={buckets}"
+    )
+
+
 def run_merge(
     spark: SparkSession,
     cfg: MergeConfig,
@@ -100,6 +128,7 @@ def run_merge(
     phases = Phases()
     fmt = ParquetBucketedFormat(cfg.max_records_per_file)
     existing = fmt.read_extracted(spark, cfg.extracted_path)
+    check_bucket_count(existing, cfg.buckets, cfg.extracted_path)
     inc = scan_input(spark, cfg.increment_path, cfg.input_format, cfg.buckets)
     # The increment is extracted into the table's own columns: with the
     # markdown arm exactly when the table carries it.
@@ -152,10 +181,9 @@ def run_merge(
             keep = existing.where(F.col("url_bucket").isin(ch_buckets)).join(
                 changed.select("url"), "url", "left_anti"
             )
-            merged = keep.unionByName(changed).repartition(len(ch_buckets), "url_bucket")
             # Dynamic partition overwrite: only the url_bucket partitions
-            # present in `merged` (= ch_buckets) are replaced on disk.
-            fmt.write_extracted(merged, cfg.extracted_path)
+            # present in the union (= ch_buckets) are replaced on disk.
+            fmt.write_extracted(keep.unionByName(changed), cfg.extracted_path)
             phases.mark("rewrite_buckets")
 
             snap = commit_run(

@@ -343,9 +343,7 @@ def q_manifest_lookup(spark, sf_dir):
         )
         for i in range(60)
     ]
-    df = spark.createDataFrame(rows, EXTRACTED_SCHEMA).repartition(
-        8, F.col("url_bucket")
-    )
+    df = spark.createDataFrame(rows, EXTRACTED_SCHEMA)
     ParquetBucketedFormat(max_records_per_file=4).write_extracted(df, ext)
     man = os.path.join(root, "manifest")
     write_manifest(build_file_manifest(spark, ext), man)

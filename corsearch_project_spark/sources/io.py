@@ -77,16 +77,23 @@ class ParquetBucketedFormat:
         self.max_records_per_file = max_records_per_file
 
     def write_extracted(self, df: DataFrame, path: str) -> None:
-        """S3: bucketed sink. Rows arrive already repartitioned on
-        url_bucket; sortWithinPartitions('url') clusters files for
-        url range-lookup; dynamic partition overwrite makes resume reruns
-        idempotent (only pending buckets are replaced).
+        """S3: bucketed sink; callers pass rows in any partitioning. Like
+        Iceberg's ``write.distribution-mode=hash``, it hashes rows on
+        url_bucket into one task per slot (``defaultParallelism``: each
+        task pays a fixed cost), so each bucket lands in one task → one
+        file, not one per upstream task (the small-file explosion that
+        made the lineage read-back the slowest stage).
+        sortWithinPartitions('url') clusters files for url range-lookup;
+        dynamic partition overwrite makes resume reruns idempotent (only
+        pending buckets are replaced).
 
         partitionOverwriteMode is pinned HERE, writer-level (overrides any
         session conf): with the session default (static), mode('overwrite')
         .partitionBy(...) clears the whole table root, so calling run_merge
         from a default-conf SparkSession would silently delete every
         untouched bucket (round-2 ADVICE — data loss, not an error)."""
+        # An explicit count: AQE may coalesce a column-only repartition.
+        slots = df.sparkSession.sparkContext.defaultParallelism
         # url_bucket leads the sort so the partitionBy writer's required
         # ordering is already satisfied — otherwise it inserts its own
         # url_bucket sort AFTER this one and the per-file url clustering
@@ -94,7 +101,8 @@ class ParquetBucketedFormat:
         # survives only by sort-stability luck whenever a task holds more
         # than one bucket.
         (
-            df.sortWithinPartitions("url_bucket", "url")
+            df.repartition(slots, "url_bucket")
+            .sortWithinPartitions("url_bucket", "url")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .option("maxRecordsPerFile", self.max_records_per_file)

@@ -9,8 +9,6 @@ per-COMMIT ledger on top of it:
   * one row per run_extract commit: run_id, sequence number, operation
     (append | overwrite | resume-append), buckets touched, doc/byte totals
     and the order-insensitive digest-of-digests across those buckets;
-  * `read_snapshots` lists table history in sequence order (the
-    `SELECT * FROM db.tbl.snapshots` analogue);
   * each commit is ONE Parquet file named by its sequence number,
     ``seq-<012d>.parquet``, written from the driver (`write_ledger_file`,
     no Spark job). The next seq is 1 + the highest seq among the file
@@ -42,7 +40,7 @@ from typing import Dict, List, Optional, Sequence, Set
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from corsearch_project_spark.sources.fs import LOCAL_FS
@@ -193,20 +191,3 @@ def append_snapshot(
         ) from e
     return snap
 
-
-def read_snapshots(spark: SparkSession, path: str) -> Optional[DataFrame]:
-    """Table history in commit order, or None when no snapshot exists.
-
-    Only the missing-path case maps to None (first commit of a fresh
-    table); a corrupted or unreadable snapshots table must PROPAGATE —
-    swallowing it would silently restart seq at 0 and write a conflicting
-    ledger row."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(SNAPSHOT_SCHEMA).parquet(path).orderBy("seq")
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise

@@ -7,7 +7,8 @@
 
 On a real multi-executor cluster the same program runs unchanged; only
 --master / executor confs differ (the pipeline contains no local-mode
-assumptions: all parallelism flows from partitioning on (url_bucket, salt)).
+assumptions: the kernel and the bucketed write each run one task per slot,
+``defaultParallelism``, of whatever master runs them).
 """
 
 from __future__ import annotations

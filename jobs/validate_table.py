@@ -12,8 +12,7 @@ declared columns, so no job infers the schema:
      rollup, exactly as the commit does. From it, on the driver:
      * bucket completeness — every bucket the lineage ledger records as
        done for this run is present in the data (NOT all of 0..B-1: a
-       bucket no url hashes into — small runs, bucket_whitelist — is
-       legitimate);
+       bucket that no url of a small run hashes into is legitimate);
      * lineage reconciliation — each bucket's recomputed doc_count and
        rollup equal its current lineage rows
        (``maintenance.current_lineage``): the rows of the bucket's
@@ -33,7 +32,7 @@ Exit 0 with a JSON report when all pass; exit 2 listing failures.
 
     spark-submit --py-files csp.zip jobs/validate_table.py \
         --extracted /data/out/extracted --lineage /data/out/lineage \
-        --run-id R1 --buckets 4096
+        --run-id R1
 """
 
 from __future__ import annotations
@@ -67,8 +66,7 @@ def _rows(path: str, columns, fs) -> list:
 
 
 def validate_table(spark, extracted_path: str, lineage_path: str, run_id: str,
-                   buckets: int, snapshots_path: str | None = None, *,
-                   fs=LOCAL_FS) -> dict:
+                   snapshots_path: str | None = None, *, fs=LOCAL_FS) -> dict:
     lin = _rows(
         lineage_path,
         ("run_id", "url_bucket", "status", "doc_count", "sha256_rollup"),
@@ -83,7 +81,7 @@ def validate_table(spark, extracted_path: str, lineage_path: str, run_id: str,
     # the same per-bucket rollup the commit writes, recomputed from the data
     ext = spark.read.schema(LINEAGE_INPUT_SCHEMA).parquet(extracted_path)
     recomputed = {r["url_bucket"]: r for r in lineage_rows(ext, run_id, "").collect()}
-    # Completeness is judged against the ledger, not range(buckets): an
+    # Completeness is judged against the ledger, not every bucket id: an
     # empty bucket is valid, but a ledger-done bucket absent from the data
     # means committed rows were lost.
     expected = {
@@ -140,7 +138,6 @@ def validate_table(spark, extracted_path: str, lineage_path: str, run_id: str,
 
     return {
         "run_id": run_id,
-        "buckets_expected": buckets,
         "buckets_present": len(recomputed),
         "docs": sum(r["doc_count"] for r in recomputed.values()),
         "ok": not failures,
@@ -153,7 +150,6 @@ def main(argv=None) -> int:
     ap.add_argument("--extracted", required=True)
     ap.add_argument("--lineage", required=True)
     ap.add_argument("--run-id", required=True)
-    ap.add_argument("--buckets", type=int, required=True)
     ap.add_argument("--snapshots", default=None,
                     help="snapshots table path (default: sibling of --lineage)")
     ap.add_argument("--master", default=None)
@@ -164,7 +160,7 @@ def main(argv=None) -> int:
     )
     spark = build_session("validate_table", master=args.master)
     report = validate_table(spark, args.extracted, args.lineage, args.run_id,
-                            args.buckets, snapshots_path=snapshots)
+                            snapshots_path=snapshots)
     print(json.dumps(report))
     return 0 if report["ok"] else 2
 

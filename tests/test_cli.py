@@ -108,7 +108,7 @@ def test_validate_table_pass_and_fail(spark, pages_src, tmp_path, capsys):
     out = os.path.join(str(tmp_path), "vout")
     run_extract(spark, ExtractConfig(input_path=pages_src, output_path=out, run_id="VT", buckets=8))
     rep = V.validate_table(
-        spark, os.path.join(out, "extracted"), os.path.join(out, "lineage"), "VT", 8
+        spark, os.path.join(out, "extracted"), os.path.join(out, "lineage"), "VT"
     )
     assert rep["ok"] and rep["buckets_present"] == 8 and rep["docs"] == 60
 
@@ -122,7 +122,7 @@ def test_validate_table_pass_and_fail(spark, pages_src, tmp_path, capsys):
         os.path.join(out, "extracted")
     )
     rep2 = V.validate_table(
-        spark, os.path.join(out, "extracted"), os.path.join(out, "lineage"), "VT", 8
+        spark, os.path.join(out, "extracted"), os.path.join(out, "lineage"), "VT"
     )
     assert not rep2["ok"]
     checks = {f["check"] for f in rep2["failures"]}

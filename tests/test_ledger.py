@@ -39,9 +39,16 @@ from corsearch_project_spark.sources.io import (
 from corsearch_project_spark.sources.maintenance import vacuum_staging
 from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
 
-from test_merge import BUCKETS, _extract_all, _write_pages
+from test_merge import BUCKETS, _extract_all, _in_buckets, _write_pages
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _history(snap_path):
+    """The snapshot rows under ``snap_path`` in seq order, read on the
+    driver as every program read of the ledger is."""
+    files = S.read_ledger(S.ledger_files(snap_path), S.SNAPSHOT_SCHEMA.fieldNames())
+    return sorted((r for rs in files.values() for r in rs), key=lambda r: r["seq"])
 
 
 def _lineage(run_id, k):
@@ -92,7 +99,7 @@ def test_racing_writers_never_share_a_seq(spark, tmp_path, monkeypatch):
     assert len(won) == 1, results
     assert won[0]["seq"] == 1
 
-    rows = [r.asDict() for r in S.read_snapshots(spark, snap).collect()]
+    rows = _history(snap)
     assert [r["seq"] for r in rows] == [0, 1]
     assert rows == [first, won[0]]
     assert sorted(pq.read_table(snap).column("seq").to_pylist()) == [0, 1]
@@ -125,16 +132,16 @@ def test_crash_between_lineage_and_snapshot_file_leaves_committable_table(
     written = done_buckets(lin_path, "R-crash")
     assert written
     assert done_buckets(lin_path, "R-dead") == written  # lineage landed
-    hist = S.read_snapshots(spark, snap_path).collect()
+    hist = _history(snap_path)
     assert [r["run_id"] for r in hist] == ["R-crash"]
 
     rep = run_extract(spark, ExtractConfig(src, out, run_id="R-next", buckets=BUCKETS))
     assert rep["snapshot"]["seq"] == 1
-    hist = S.read_snapshots(spark, snap_path).collect()
+    hist = _history(snap_path)
     assert [(r["seq"], r["run_id"]) for r in hist] == [(0, "R-crash"), (1, "R-next")]
     assert done_buckets(lin_path, "R-next") == written
     v = validate_table(
-        spark, os.path.join(out, "extracted"), lin_path, "R-next", BUCKETS,
+        spark, os.path.join(out, "extracted"), lin_path, "R-next",
         snapshots_path=snap_path,
     )
     assert v["ok"], v
@@ -171,7 +178,7 @@ def test_resume_commits_the_snapshot_a_crash_left_out(spark, tmp_path, monkeypat
     for _ in range(2):
         with pytest.raises(_Crash):
             run_extract(spark, cfg)
-    assert [r["run_id"] for r in S.read_snapshots(spark, snap_path).collect()] == ["R-orphan"]
+    assert [r["run_id"] for r in _history(snap_path)] == ["R-orphan"]
     lin_rows = (
         spark.read.schema(LINEAGE_SCHEMA).parquet(lin_path)
         .where("run_id = 'R-torn'").collect()
@@ -196,16 +203,16 @@ def test_resume_commits_the_snapshot_a_crash_left_out(spark, tmp_path, monkeypat
     assert snap["doc_count"] == sum(d for d, _, _ in lin) == len(base)
     assert snap["bytes_in"] == sum(b for _, b, _ in lin)
     assert snap["rollup_xor"] == S._xor_hex([h for _, _, h in lin])
-    hist = [r.asDict() for r in S.read_snapshots(spark, snap_path).collect()]
+    hist = _history(snap_path)
     assert [h for h in hist if h["run_id"] == "R-torn"] == [snap]
     v = validate_table(
-        spark, os.path.join(out, "extracted"), lin_path, "R-torn", BUCKETS,
+        spark, os.path.join(out, "extracted"), lin_path, "R-torn",
         snapshots_path=snap_path,
     )
     assert v["ok"], v
 
     assert run_extract(spark, cfg)["snapshot"] is None
-    assert len(S.read_snapshots(spark, snap_path).collect()) == 2
+    assert len(_history(snap_path)) == 2
 
 
 def test_resume_lineage_reads_only_the_buckets_it_commits(spark, tmp_path, monkeypatch):
@@ -215,10 +222,12 @@ def test_resume_lineage_reads_only_the_buckets_it_commits(spark, tmp_path, monke
     from corsearch_project_spark.plans import extract_pipeline
 
     src = str(tmp_path / "part.parquet")
-    _write_pages(gen_pages(60, seed=96, dup_frac=0.0), src)
+    base = gen_pages(60, seed=96, dup_frac=0.0)
+    _write_pages(base, src)
     out = str(tmp_path / "part")
-    cfg = ExtractConfig(src, out, run_id="R-part", buckets=BUCKETS,
-                        bucket_whitelist=[0, 1, 2, 3])
+    part = str(tmp_path / "part0-3.parquet")
+    _write_pages(_in_buckets(spark, base, BUCKETS, {0, 1, 2, 3}), part)
+    cfg = ExtractConfig(part, out, run_id="R-part", buckets=BUCKETS)
     assert run_extract(spark, cfg)["buckets_written"] == [0, 1, 2, 3]
 
     scanned = []
@@ -229,7 +238,7 @@ def test_resume_lineage_reads_only_the_buckets_it_commits(spark, tmp_path, monke
         return real(extracted, *args, **kwargs)
 
     monkeypatch.setattr(extract_pipeline, "lineage_rows", recording)
-    cfg.bucket_whitelist, cfg.resume = None, True
+    cfg.input_path, cfg.resume = src, True
     rep = run_extract(spark, cfg)
     assert rep["buckets_skipped"] == [0, 1, 2, 3]
     assert rep["buckets_written"] == [4, 5, 6, 7]
@@ -326,7 +335,7 @@ def test_killed_writer_leftover_is_invisible_and_vacuumed(spark, tmp_path):
     tmp = [n for n in os.listdir(snap) if n.endswith(".tmp")]
     assert len(tmp) == 1 and tmp[0].startswith(".seq-000000000001.parquet.")
 
-    assert [r["run_id"] for r in S.read_snapshots(spark, snap).collect()] == ["R-kill"]
+    assert [r["run_id"] for r in _history(snap)] == ["R-kill"]
     assert pq.read_table(snap).column("run_id").to_pylist() == ["R-kill"]
     assert S.latest_seq(snap) == 0
 
@@ -380,7 +389,7 @@ def test_legacy_spark_named_ledger_keeps_committing(spark, tmp_path):
     rep = run_extract(spark, ExtractConfig(src, out, run_id="R-new", buckets=BUCKETS))
     assert rep["snapshot"]["seq"] == 2
     assert "seq-000000000002.parquet" in os.listdir(snap)
-    hist = S.read_snapshots(spark, snap).collect()
+    hist = _history(snap)
     assert [(r["seq"], r["run_id"]) for r in hist] == [
         (0, "R-legacy"), (1, "R-legacy-2"), (2, "R-new")
     ]
@@ -425,7 +434,7 @@ def test_uri_table_root_commits_or_fails_before_the_data_job(
         spark, ExtractConfig(src, "file://" + out, run_id="R-uri", buckets=BUCKETS)
     )
     assert rep["snapshot"]["seq"] == 0
-    assert [r["run_id"] for r in S.read_snapshots(spark, out + "/snapshots").collect()] == ["R-uri"]
+    assert [r["run_id"] for r in _history(out + "/snapshots")] == ["R-uri"]
     for d, schema in (("lineage", LINEAGE_SCHEMA), ("snapshots", S.SNAPSHOT_SCHEMA)):
         (name,) = os.listdir(os.path.join(out, d))
         rows = spark.read.schema(schema).parquet(os.path.join(out, d, name)).collect()
@@ -500,7 +509,7 @@ def test_seq_race_loser_removes_its_lineage_file(spark, tmp_path, monkeypatch):
     for k in results:
         if k not in won:
             assert done_buckets(lin, f"W{k}") == []
-    hist = S.read_snapshots(spark, os.path.join(out, "snapshots")).collect()
+    hist = _history(os.path.join(out, "snapshots"))
     assert [(r["seq"], r["run_id"]) for r in hist] == [(0, "R-race"), (1, f"W{won[0]}")]
 
 

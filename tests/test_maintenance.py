@@ -29,8 +29,9 @@ from corsearch_project_spark.sources.maintenance import (
     vacuum_staging,
 )
 from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
-from corsearch_project_spark.sources.snapshots import append_snapshot, read_snapshots
+from corsearch_project_spark.sources.snapshots import append_snapshot
 
+from test_ledger import _history
 from test_merge import BUCKETS, _extract_all, _table_state, _write_pages
 
 
@@ -86,14 +87,12 @@ def _validate(spark, out, run_id):
         os.path.join(out, "extracted"),
         os.path.join(out, "lineage"),
         run_id,
-        BUCKETS,
         snapshots_path=os.path.join(out, "snapshots"),
     )
 
 
 def _runs(spark, out):
-    return {r["run_id"] for r in
-            read_snapshots(spark, os.path.join(out, "snapshots")).collect()}
+    return {r["run_id"] for r in _history(os.path.join(out, "snapshots"))}
 
 
 def test_expire_preserves_validation_and_data(spark, tmp_path):
@@ -118,7 +117,6 @@ def test_expire_preserves_validation_and_data(spark, tmp_path):
         os.path.join(out, "extracted"),
         os.path.join(out, "lineage"),
         "M2",
-        BUCKETS,
         snapshots_path=os.path.join(out, "snapshots"),
     )
     assert v["ok"], v
@@ -145,12 +143,12 @@ def test_expire_drops_fully_superseded_run(spark, tmp_path):
     before = _ledger_files(out)
     report = expire_snapshots(out, keep_last=1)
     assert "M-all" in report["expired_runs"]
-    snaps = read_snapshots(spark, os.path.join(out, "snapshots"))
-    assert "M-all" not in {r["run_id"] for r in snaps.collect()}
+    snaps = _history(os.path.join(out, "snapshots"))
+    assert "M-all" not in {r["run_id"] for r in snaps}
     lin = spark.read.parquet(os.path.join(out, "lineage"))
     assert lin.where(lin.run_id == "M-all").count() == 0
     # kept seqs unchanged (no renumbering): next commit continues the chain
-    kept_seqs = sorted(r["seq"] for r in snaps.collect())
+    kept_seqs = [r["seq"] for r in snaps]
     assert kept_seqs == sorted(set(kept_seqs))
     assert max(kept_seqs) == 2
     # each ledger dir holds exactly the kept run's own files, untouched
@@ -276,7 +274,6 @@ def test_expire_through_injected_object_store_fs(spark, tmp_path):
         os.path.join(out, "extracted"),
         os.path.join(out, "lineage"),
         "O2",
-        BUCKETS,
         snapshots_path=os.path.join(out, "snapshots"),
     )
     assert v["ok"], v

@@ -6,6 +6,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from corsearch_project_spark.fixtures.gen_pages import (
@@ -13,6 +14,7 @@ from corsearch_project_spark.fixtures.gen_pages import (
     gen_pages,
     pages_to_pandas,
 )
+from corsearch_project_spark.operators.partitioning import with_url_bucket
 from corsearch_project_spark.plans.extract_pipeline import ExtractConfig, run_extract
 from corsearch_project_spark.plans.merge_pipeline import MergeConfig, run_merge
 
@@ -26,6 +28,37 @@ def _write_pages(rows, path):
         coerce_timestamps="us",
         allow_truncated_timestamps=True,
     )
+
+
+def _in_buckets(spark, rows, buckets, keep):
+    """The ``rows`` whose url hashes into one of the ``keep`` buckets."""
+    urls = spark.createDataFrame([(r["url"],) for r in rows], "url string")
+    bucket = {r["url"]: r["url_bucket"] for r in with_url_bucket(urls, buckets).collect()}
+    return [r for r in rows if bucket[r["url"]] in keep]
+
+
+def _record_write_tasks(spark, monkeypatch):
+    """Patch ``ParquetBucketedFormat.write_extracted`` to record, per
+    call, the tasks of its write stage: the last Spark job of the call
+    (with AQE every shuffle stage before it runs as its own job)."""
+    from corsearch_project_spark.sources.io import ParquetBucketedFormat
+
+    real, sc, tasks = ParquetBucketedFormat.write_extracted, spark.sparkContext, []
+
+    def recording(self, df, path):
+        group = f"write-extracted-{len(tasks)}"
+        sc.setJobGroup(group, path)
+        try:
+            real(self, df, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        last = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+        stages = [tracker.getStageInfo(s) for s in last.stageIds]
+        tasks.append(sum(s.numCompletedTasks for s in stages if s is not None))
+
+    monkeypatch.setattr(ParquetBucketedFormat, "write_extracted", recording)
+    return tasks
 
 
 def _table_state(spark, root):
@@ -286,7 +319,6 @@ def test_validate_table_passes_after_merge(spark, tmp_path):
         os.path.join(out, "extracted"),
         os.path.join(out, "lineage"),
         "M3",
-        BUCKETS,
         snapshots_path=os.path.join(out, "snapshots"),
     )
     assert report["ok"], report["failures"]
@@ -297,7 +329,6 @@ def test_validate_table_passes_after_merge(spark, tmp_path):
         os.path.join(out, "extracted"),
         os.path.join(out, "lineage"),
         "R-val",
-        BUCKETS,
         snapshots_path=os.path.join(out, "snapshots"),
     )
     assert report0["ok"], report0["failures"]
@@ -329,3 +360,57 @@ def test_write_extracted_dynamic_overwrite_is_config_independent(spark, tmp_path
         for r in spark.read.parquet(path).collect()
     }
     assert got == {("u0", 0, "a"), ("u1", 1, "b2")}
+
+
+def test_merge_rewrite_runs_one_write_task_per_slot(spark, tmp_path, monkeypatch):
+    """The rewrite of the changed buckets runs defaultParallelism write
+    tasks, whatever the number of buckets it rewrites."""
+    base = gen_pages(60, seed=90, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "slots")
+    inc_src = str(tmp_path / "slots_inc.parquet")
+    _write_pages(_new_and_updated(base, 5, seed=89), inc_src)
+    tasks = _record_write_tasks(spark, monkeypatch)
+    rep = run_merge(
+        spark,
+        MergeConfig(increment_path=inc_src, output_path=out, run_id="M-slots",
+                    buckets=BUCKETS),
+        default_rules(),
+    )
+    assert rep["buckets_rewritten"]
+    assert tasks == [spark.sparkContext.defaultParallelism]
+
+
+def _files(root):
+    """{relative path: mtime_ns} of every file under the table root."""
+    return {
+        os.path.relpath(os.path.join(d, n), root): os.stat(os.path.join(d, n)).st_mtime_ns
+        for d, _, names in os.walk(root)
+        for n in names
+    }
+
+
+@pytest.mark.parametrize("table_buckets, merge_buckets", [(16, 8), (8, 16)])
+def test_merge_refuses_another_bucket_count(spark, tmp_path, table_buckets, merge_buckets):
+    """A merge at a bucket count the table was not written with would
+    place re-crawled urls under another bucket than their committed rows
+    (16 -> 8 left 70 rows for 65 urls). It raises, naming both counts,
+    before anything is written: (16, 8) from a committed bucket >= 8,
+    (8, 16) from committed rows that 16 buckets place elsewhere."""
+    base = gen_pages(60, seed=88, dup_frac=0.0)
+    src = str(tmp_path / "base.parquet")
+    _write_pages(base, src)
+    out = str(tmp_path / "table")
+    run_extract(
+        spark, ExtractConfig(src, out, run_id="R-b", buckets=table_buckets), default_rules()
+    )
+    inc_src = str(tmp_path / "inc.parquet")
+    _write_pages(_new_and_updated(base, 5, seed=87), inc_src)
+    before = _files(out)
+    with pytest.raises(ValueError) as err:
+        run_merge(
+            spark, MergeConfig(inc_src, out, run_id="M-b", buckets=merge_buckets),
+            default_rules(),
+        )
+    assert f"written with {table_buckets} buckets" in str(err.value)
+    assert f"buckets={merge_buckets}" in str(err.value)
+    assert _files(out) == before

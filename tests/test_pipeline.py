@@ -16,6 +16,8 @@ from corsearch_project_spark.plans.extract_pipeline import ExtractConfig, run_ex
 from corsearch_project_spark.webextract.extract import extract_document
 from corsearch_project_spark.webextract.rules import rule_for_url
 
+from test_merge import _in_buckets, _record_write_tasks
+
 
 def _golden_digests(rows, rules):
     """Single-process oracle: latest-wins dedupe then extract per url."""
@@ -102,8 +104,10 @@ def test_resume_skips_done_buckets_and_matches_full_run(spark, tmp_path, smoke_c
 
     # interrupted run: only buckets 0..3 complete
     out = os.path.join(str(tmp_path), "resumed")
-    part1 = ExtractConfig(input_path=inp, output_path=out, run_id="R", buckets=8,
-                          bucket_whitelist=[0, 1, 2, 3])
+    part = _write_pages(
+        spark, tmp_path, _in_buckets(spark, smoke_corpus, 8, {0, 1, 2, 3}), "pages_part"
+    )
+    part1 = ExtractConfig(input_path=part, output_path=out, run_id="R", buckets=8)
     rep1 = run_extract(spark, part1, rules)
     assert set(rep1["buckets_written"]) <= {0, 1, 2, 3}
     lin1 = {r["url_bucket"]: r["wall_ms"] for r in spark.read.parquet(part1.lineage_path).collect()}
@@ -167,6 +171,48 @@ def test_backfill_runs_six_spark_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("backfill-jobs")
     assert 0 < len(jobs) <= 6, len(jobs)
+
+
+def test_backfill_writes_one_task_per_slot_and_one_file_per_bucket(
+    spark, tmp_path, monkeypatch
+):
+    """write_extracted owns the write distribution: a 16-bucket backfill
+    writes in defaultParallelism tasks (8 on the test session), through
+    exactly one url_bucket hash exchange, and leaves one file per
+    non-empty bucket with its rows sorted by url."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    inp = _write_pages(spark, tmp_path, gen_pages(200, seed=97), "pages_slots")
+    cfg = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "slots"),
+                        run_id="R-slots", buckets=16)
+    tasks = _record_write_tasks(spark, monkeypatch)
+    mode = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
+    try:
+        rep = run_extract(spark, cfg, default_rules())
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", mode)
+    assert tasks == [spark.sparkContext.defaultParallelism] == [8]
+
+    # the final plan of the write, from the SQL status store
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    (plan,) = [
+        p for p in (runs.apply(i).physicalPlanDescription() for i in range(runs.size()))
+        if "InsertIntoHadoopFsRelationCommand" in p and cfg.extracted_path in p
+    ]
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"Exchange hashpartitioning\(url_bucket#\d+, \d+\)", final)) == 1, plan
+
+    buckets = [n for n in os.listdir(cfg.extracted_path) if n.startswith("url_bucket=")]
+    assert sorted(buckets) == sorted(f"url_bucket={b}" for b in rep["buckets_written"])
+    for b in buckets:
+        files = [n for n in os.listdir(os.path.join(cfg.extracted_path, b))
+                 if n.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+        urls = pq.read_table(os.path.join(cfg.extracted_path, b, files[0])).column("url")
+        assert urls.to_pylist() == sorted(urls.to_pylist())
 
 
 @pytest.mark.parametrize(
@@ -262,7 +308,7 @@ def test_snapshot_ledger_grows_and_reconciles(spark, tmp_path, pages_parquet=Non
 
     from corsearch_project_spark.fixtures.gen_pages import gen_pages, pages_to_pandas
     from corsearch_project_spark.plans.extract_pipeline import ExtractConfig, run_extract
-    from corsearch_project_spark.sources.snapshots import read_snapshots
+    from test_ledger import _history
 
     src = _os.path.join(str(tmp_path), "p.parquet")
     pq.write_table(
@@ -285,25 +331,7 @@ def test_snapshot_ledger_grows_and_reconciles(spark, tmp_path, pages_parquet=Non
     rep3 = run_extract(spark, ExtractConfig(input_path=src, output_path=out, run_id="S2", buckets=8))
     assert rep3["snapshot"]["seq"] == 1
 
-    hist = read_snapshots(spark, _os.path.join(out, "snapshots")).collect()
+    hist = _history(_os.path.join(out, "snapshots"))
     assert [r["seq"] for r in hist] == [0, 1]
     assert all(r["n_buckets"] == 8 for r in hist)
 
-
-def test_read_snapshots_missing_vs_corrupt(spark, tmp_path):
-    """Missing path -> None (fresh table); a CORRUPT snapshots table must
-    raise, not silently restart seq at 0 with a conflicting ledger row
-    (ADVICE r1: only the path-not-found AnalysisException maps to None)."""
-    import pytest as _pytest
-
-    from corsearch_project_spark.sources.snapshots import read_snapshots
-
-    assert read_snapshots(spark, str(tmp_path / "nope")) is None
-
-    bad = tmp_path / "snapcorrupt"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(b"PAR1 this is not parquet")
-    with _pytest.raises(Exception):
-        df = read_snapshots(spark, str(bad))
-        assert df is not None  # must not be swallowed into the None arm
-        df.collect()  # corruption surfaces at scan time at the latest

@@ -18,13 +18,12 @@ sys.path.insert(
 from validate_table import validate_table
 
 from corsearch_project_spark.fixtures.gen_pages import default_rules, gen_pages
-from corsearch_project_spark.operators.partitioning import with_url_bucket
 from corsearch_project_spark.plans.extract_pipeline import ExtractConfig, run_extract
 from corsearch_project_spark.plans.merge_pipeline import MergeConfig, run_merge
 from corsearch_project_spark.sources.maintenance import latest_writers
-from corsearch_project_spark.sources.snapshots import read_snapshots
 
-from test_merge import BUCKETS, _write_pages
+from test_ledger import _history
+from test_merge import BUCKETS, _in_buckets, _write_pages
 
 
 def _validate(spark, out, run_id):
@@ -33,37 +32,30 @@ def _validate(spark, out, run_id):
         os.path.join(out, "extracted"),
         os.path.join(out, "lineage"),
         run_id,
-        BUCKETS,
         snapshots_path=os.path.join(out, "snapshots"),
     )
 
 
 @pytest.fixture(scope="module")
 def resumed_after_merge(spark, tmp_path_factory):
-    """A partial backfill R of buckets 0-3 (seq 0), a merge M of new urls
-    that rewrites buckets 0-2 (seq 1), then R's --resume, which writes
-    buckets 4-7 (seq 2): R has two snapshots, and M is the latest writer
-    of buckets 0-2."""
+    """A partial backfill R over the base urls of buckets 0-3 (seq 0), a
+    merge M of new urls that rewrites buckets 0-2 (seq 1), then R's
+    --resume over all of base, which writes buckets 4-7 (seq 2): R has
+    two snapshots, and M is the latest writer of buckets 0-2."""
     tmp = tmp_path_factory.mktemp("resume_after_merge")
     base = gen_pages(60, seed=71, dup_frac=0.0)
     src = str(tmp / "base.parquet")
     _write_pages(base, src)
     out = str(tmp / "table")
-    cfg = ExtractConfig(src, out, run_id="R", buckets=BUCKETS,
-                        bucket_whitelist=[0, 1, 2, 3])
+    part = str(tmp / "part.parquet")
+    _write_pages(_in_buckets(spark, base, BUCKETS, {0, 1, 2, 3}), part)
+    cfg = ExtractConfig(part, out, run_id="R", buckets=BUCKETS)
     assert run_extract(spark, cfg, default_rules())["buckets_written"] == [0, 1, 2, 3]
 
     fresh = gen_pages(40, seed=72, dup_frac=0.0)
     for r in fresh:
         r["url"] = r["url"].replace("https://", "https://inc-")
-    bucket = {
-        r["url"]: r["url_bucket"]
-        for r in with_url_bucket(
-            spark.createDataFrame([(r["url"],) for r in fresh], "url string"), BUCKETS
-        ).collect()
-    }
-    inc = [r for r in fresh if bucket[r["url"]] < 3]
-    assert {bucket[r["url"]] for r in inc} == {0, 1, 2}
+    inc = _in_buckets(spark, fresh, BUCKETS, {0, 1, 2})
     inc_src = str(tmp / "inc.parquet")
     _write_pages(inc, inc_src)
     rep = run_merge(
@@ -71,12 +63,9 @@ def resumed_after_merge(spark, tmp_path_factory):
     )
     assert rep["buckets_rewritten"] == [0, 1, 2]
 
-    cfg.bucket_whitelist, cfg.resume = None, True
+    cfg.input_path, cfg.resume = src, True
     assert run_extract(spark, cfg, default_rules())["buckets_written"] == [4, 5, 6, 7]
-    hist = [
-        r.asDict()
-        for r in read_snapshots(spark, os.path.join(out, "snapshots")).collect()
-    ]
+    hist = _history(os.path.join(out, "snapshots"))
     assert [(h["seq"], h["run_id"]) for h in hist] == [(0, "R"), (1, "M"), (2, "R")]
     assert latest_writers(hist) == {0: "M", 1: "M", 2: "M", 3: "R",
                                     4: "R", 5: "R", 6: "R", 7: "R"}
