@@ -10,7 +10,7 @@ re-architected for Spark (spec: /root/repo/BASELINE.json:6,14,15):
   reference scripts' output: it runs single-process to produce golden digests
   and executor-side inside the Arrow kernel, and the two must be byte-identical.
 - ``operators/``   Spark-side operators: the mapInArrow extraction kernel,
-  url-hash bucketing + salted repartitioning, dedup / similarity / text-stats.
+  url-hash bucketing, dedup / similarity / text-stats.
 - ``sources/``     schemas and Iceberg-style bucketed Parquet IO (scan, sink,
   lineage, resume).
 - ``functions/``   reusable Column expression helpers (JVM-side, no Python UDFs).

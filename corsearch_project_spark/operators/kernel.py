@@ -1,21 +1,29 @@
 """The extraction kernel (SURVEY.md §2.2 E17): ONE vectorized Arrow stage.
 
-Every Python stage of the engine is ``df.mapInArrow(arrow_kernel(...),
-schema)`` in its iterator-of-batches form, so per-task setup (broadcast
-rule decode, module import) happens once per task, then every batch
-crosses the JVM↔Python boundary as a single Arrow RecordBatch
-(BASELINE.json:15: "vectorized pandas/Arrow UDFs with zero per-row Python"
-— zero per-row *boundary crossings*; the per-document parse loop inside
-the batch is the irreducible row-oriented part of extraction, SURVEY.md
-§1.2). ``arrow_kernel`` is that loop, written once: it hands each document
-to a per-doc function returning the document's output rows, and derives
-the batch's Arrow schema from the declared Spark schema
-(sources/schemas.py). Four kernels are calls to it:
+Every Python stage of the engine is a ``mapInArrow`` in its
+iterator-of-batches form, so per-task setup (broadcast rule decode, module
+import) happens once per task, then every batch crosses the JVM→Python
+boundary as a single Arrow RecordBatch (BASELINE.json:15: "vectorized
+pandas/Arrow UDFs with zero per-row Python" — zero per-row *boundary
+crossings*; the per-document parse loop inside the batch is the
+irreducible row-oriented part of extraction, SURVEY.md §1.2).
+``arrow_kernel`` is that loop, written once: it hands each document to a
+per-doc function returning the document's output rows, and derives the
+batch's Arrow schema from the declared Spark schema (sources/schemas.py).
+The per-doc functions:
 
-* ``run_kernel`` — the text arm (``text_rows``);
-* ``run_dual_kernel`` — text plus markdown from one parse (``dual_rows``);
-* ``run_doc_assets_kernel`` / ``run_doc_tables_kernel`` — document
-  catalogs over the rows that pass the JVM document pre-filter.
+* ``text_rows`` — the text arm;
+* ``dual_rows`` — text plus markdown from one parse;
+* ``asset_rows`` / ``table_rows`` — document catalogs over the rows that
+  pass the JVM document pre-filter (``document_rows``).
+
+The pipelines run the kernel inside the write stage
+(``io.ParquetBucketedFormat.write_extracted`` with ``bucketed_kernel``'s
+function): the kernel's output batches go straight into the bucket's
+Parquet files and never cross back to the JVM. ``run_kernel``,
+``run_dual_kernel``, ``run_doc_assets_kernel`` and
+``run_doc_tables_kernel`` are the same kernels as DataFrames, for queries,
+the streaming ingest and the benchmarks.
 
 The per-url digest used by the byte-identity pytest gate is computed here in
 Python (hashlib) AND re-derivable JVM-side via F.sha2 (E18) — the test suite
@@ -37,6 +45,7 @@ from corsearch_project_spark.sources.schemas import (
     DOC_TABLES_SCHEMA,
     DUAL_KERNEL_SCHEMA,
     EXTRACTED_KERNEL_SCHEMA,
+    EXTRACTED_SCHEMA,
 )
 from corsearch_project_spark.webextract.docxx import docx_assets_probe, docx_tables
 from corsearch_project_spark.webextract.extract import (
@@ -73,10 +82,14 @@ def arrow_kernel(doc_rows: DocRows, schema: StructType, rules_bc=None):
 
     Input batches carry ``url`` and ``html`` (and ``text`` when present);
     each output batch holds the rows ``doc_rows`` returned for the input
-    batch's documents — none, one or many per document. rules_bc is a
-    SparkContext.broadcast of the plain-dict rules config (E5), a plain
-    dict (single-process mode) or None."""
+    batch's documents — none, one or many per document. When ``schema``
+    has a url_bucket field (``bucketed_kernel``), every output row carries
+    its document's url_bucket from the input batch, so no bucket is
+    re-derived downstream. rules_bc is a SparkContext.broadcast of the
+    plain-dict rules config (E5), a plain dict (single-process mode) or
+    None."""
     arrow_schema = to_arrow_schema(schema)
+    carry = "url_bucket" in schema.fieldNames()
 
     def kernel(batches):
         plain = rules_bc.value if hasattr(rules_bc, "value") else (rules_bc or {})
@@ -89,9 +102,12 @@ def arrow_kernel(doc_rows: DocRows, schema: StructType, rules_bc=None):
                 if "text" in rb.schema.names
                 else [None] * rb.num_rows
             )
+            buckets = rb.column("url_bucket").to_pylist() if carry else None
             cols: List[list] = [[] for _ in arrow_schema]
-            for url, data, fb in zip(urls, datas, texts):
+            for i, (url, data, fb) in enumerate(zip(urls, datas, texts)):
                 for row in doc_rows(url, data or b"", fb, rule_for_url(url, rules)):
+                    if carry:
+                        row = (*row, buckets[i])
                     for col, value in zip(cols, row):
                         col.append(value)
             yield pa.RecordBatch.from_arrays(
@@ -100,6 +116,15 @@ def arrow_kernel(doc_rows: DocRows, schema: StructType, rules_bc=None):
             )
 
     return kernel
+
+
+def bucketed_kernel(doc_rows: DocRows, schema: StructType, rules_bc=None):
+    """``arrow_kernel`` over bucketed pages, as the pipelines run it inside
+    the write stage (``io.ParquetBucketedFormat.write_extracted``): its
+    function and its output schema, ``schema`` plus the url_bucket
+    carried from the input."""
+    schema = StructType(schema.fields + [EXTRACTED_SCHEMA["url_bucket"]])
+    return arrow_kernel(doc_rows, schema, rules_bc), schema
 
 
 def _map_docs(pages: DataFrame, doc_rows: DocRows, schema: StructType, rules_bc=None):
@@ -164,7 +189,7 @@ def run_kernel(pages: DataFrame, rules_bc) -> DataFrame:
 
 def run_dual_kernel(pages: DataFrame, rules_bc) -> DataFrame:
     """pages -> plain kernel schema + (extracted_md, md_sha256) in ONE
-    mapInArrow stage; the pipeline's --with-markdown path."""
+    mapInArrow stage; the --with-markdown kernel as a DataFrame."""
     inp = pages.select(*KERNEL_INPUT_COLS)
     return _map_docs(inp, dual_rows, DUAL_KERNEL_SCHEMA, rules_bc)
 
@@ -174,11 +199,13 @@ def run_dual_kernel(pages: DataFrame, rules_bc) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _document_rows(pages: DataFrame) -> DataFrame:
-    return pages.select("url", "html").where(F.expr(_DOCUMENT_ROWS))
+def document_rows(pages: DataFrame, *carry: str) -> DataFrame:
+    """The rows that pass the JVM document pre-filter: url and html, plus
+    the ``carry`` columns."""
+    return pages.select("url", "html", *carry).where(F.expr(_DOCUMENT_ROWS))
 
 
-def _asset_rows(url: str, data: bytes, fb, rule) -> List[tuple]:
+def asset_rows(url: str, data: bytes, fb, rule) -> List[tuple]:
     """PDF rows run ``pdfx.extract_pdf_assets`` (Info + links + outline);
     DOCX rows run ``docxx.docx_assets_probe`` (Dublin-Core core.xml;
     links/outline empty). Total over its input — parse failures and
@@ -205,10 +232,10 @@ def _asset_rows(url: str, data: bytes, fb, rule) -> List[tuple]:
 def run_doc_assets_kernel(pages: DataFrame) -> DataFrame:
     """pages(url, html, ...) -> DOC_ASSETS_SCHEMA rows for document rows
     (PDF + DOCX), so the assets table holds exactly the document rows."""
-    return _map_docs(_document_rows(pages), _asset_rows, DOC_ASSETS_SCHEMA)
+    return _map_docs(document_rows(pages), asset_rows, DOC_ASSETS_SCHEMA)
 
 
-def _table_rows(url: str, data: bytes, fb, rule) -> List[tuple]:
+def table_rows(url: str, data: bytes, fb, rule) -> List[tuple]:
     # re-sniff before parsing (same discipline as the assets kernel): the
     # loose JVM pre-filter passes e.g. an HTML page QUOTING "%PDF-", and
     # running the full PdfDoc parse-and-fail on every such false positive
@@ -249,4 +276,4 @@ def run_doc_tables_kernel(pages: DataFrame) -> DataFrame:
     the recovery-oriented PdfDoc scan could parse it: a table catalog
     must not disagree with the extracted table about what a url is
     (cross-kernel agreement pinned in tests/test_pdftables.py)."""
-    return _map_docs(_document_rows(pages), _table_rows, DOC_TABLES_SCHEMA)
+    return _map_docs(document_rows(pages), table_rows, DOC_TABLES_SCHEMA)

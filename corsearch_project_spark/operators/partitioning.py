@@ -1,14 +1,17 @@
-"""URL-hash bucketing and skew-aware salted repartitioning (SURVEY §2.3).
+"""URL-hash bucketing (SURVEY §2.3), and the salt the pipelines no longer use.
 
 P1: ``url_bucket = pmod(xxhash64(url), B)`` — the Iceberg ``bucket(B, url)``
 transform emulated with Spark built-ins (no Iceberg jars offline, SURVEY
 §0.1); swap-in point for real Iceberg DDL is sources.io.TableFormat.
 
-P2: every url gets a salt ∈ [0, S) hashed from the full url, so one
-mega-host fans out across S kernel tasks without first being found. AQE's
-skew split only rebalances shuffle *reads*; compute skew inside the Python
-kernel stage needs this explicit salt (BASELINE.json:6 "salted
-repartitioning for skewed hosts"). No pipeline looks for hot hosts.
+P2: the kernel runs in the write stage, over the write's distribution:
+each task owns whole buckets (``io.ParquetBucketedFormat.distribute``).
+The url hash already spreads a mega-host over all B buckets, so the
+buckets balance the kernel's compute as the url-derived salt did, and a
+salted kernel exchange would only add a shuffle and a second Python→JVM
+crossing of every output row. AQE's skew split rebalances shuffle reads
+only, as before. No pipeline salts or looks for hot hosts: ``with_salt``
+and ``hot_hosts`` stay for perfbench/layers.py.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from pyspark.sql import DataFrame, functions as F
 from corsearch_project_spark.functions.sql import host_of
 
 DEFAULT_BUCKETS = 64
-DEFAULT_SALT = 64  # kernel shuffle keys = B×S; keys ≫ partitions => balance
+DEFAULT_SALT = 64  # ExtractConfig.salt's default; read only by perfbench/layers.py
 
 
 def with_url_bucket(df: DataFrame, b: int = DEFAULT_BUCKETS, url_col: str = "url") -> DataFrame:
@@ -29,7 +32,7 @@ def with_url_bucket(df: DataFrame, b: int = DEFAULT_BUCKETS, url_col: str = "url
     )
 
 
-# Called by no pipeline; kept because perfbench/layers.py imports it.
+# Called by no pipeline; kept because perfbench/layers.py calls it.
 def hot_hosts(pages: DataFrame, hot_frac: float = 0.05, max_hosts: int = 64) -> List[str]:
     """Hosts owning more than ``hot_frac`` of rows. ONE job over the pruned
     url column: per-host counts plus the grand total via a window over the
@@ -52,6 +55,7 @@ def hot_hosts(pages: DataFrame, hot_frac: float = 0.05, max_hosts: int = 64) -> 
     return [r["host"] for r in rows if r["host"]]
 
 
+# Called by no pipeline; kept because perfbench/layers.py calls it.
 def with_salt(
     df: DataFrame,
     hot: Optional[List[str]] = None,  # unused; perfbench/layers.py passes it positionally
@@ -66,7 +70,7 @@ def with_salt(
     key→partition hash collisions average out (Poisson balance ±1/√(keys/P))
     instead of producing the 2-3×-loaded straggler partitions measured with
     keys == partitions. ``hot`` is ignored: every url is salted. s <= 1
-    disables salting (the skew-equivalence test's control arm)."""
+    disables salting."""
     if s <= 1:
         return df.withColumn("salt", F.lit(0))
     salt = F.pmod(F.xxhash64(F.col(url_col), F.lit("salt-seed-1")), F.lit(s)).cast("int")

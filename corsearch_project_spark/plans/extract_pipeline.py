@@ -3,16 +3,21 @@
 Plan shape (one Python stage by design, SURVEY §4):
 
   scan(pages | WARC dumps via sources.warc) ──filter (pushed to Parquet)──▶
-  dedupe latest-wins (partial-agg max(struct)) ──▶ bucket P1 + salt P2 ──▶
-  shuffle on (url_bucket, salt) ──▶ mapInArrow kernel E17 ──▶
-  re-derive url_bucket (JVM) ──▶ bucketed dynamic-overwrite write S3 ──▶
-  lineage rollup from the committed table ──▶ driver-written lineage S4 +
+  bucket P1 ──▶ dedupe latest-wins (partial-agg max(struct)) ──▶
+  repartitionById(url_bucket) + sort (url_bucket, url) ──▶ ONE mapInArrow
+  stage: kernel E17 and the bucket's Parquet files S3, in the same task ──▶
+  per-bucket rows (files, counts, lineage totals) collected ──▶ bucket
+  directories committed on the driver ──▶ driver-written lineage S4 +
   snapshot files
+
+A backfill is 3 Spark jobs: the dedupe's partial aggregate, its final
+aggregate with the bucket exchange, and the fused kernel-and-write stage.
+No row crosses back from Python to the JVM, and nothing reads the written
+table back: the lineage rows come from the writer's per-bucket rows.
 
 Resume (§3.3): completed buckets are read from lineage and excluded with a
 literal NOT isin() filter, which prunes bucket directories at scan time when
-the input is bucket-partitioned. The lineage rollup prunes the buckets a
-snapshot of the run already covers from its scan the same way.
+the input is bucket-partitioned.
 
 The incremental merge (plans/merge_pipeline.py) runs the same path: both
 pipelines read their input with ``scan_input``, extract it with
@@ -23,24 +28,28 @@ those names (perfbench/spans.py) sees the calls of both pipelines.
 
 from __future__ import annotations
 
+import re
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple
+from functools import reduce
+from math import gcd
+from typing import Callable, Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from corsearch_project_spark.operators.kernel import (
-    run_doc_assets_kernel,
-    run_doc_tables_kernel,
-    run_dual_kernel,
-    run_kernel,
+    asset_rows,
+    bucketed_kernel,
+    document_rows,
+    dual_rows,
+    table_rows,
+    text_rows,
 )
 from corsearch_project_spark.operators.partitioning import (
     DEFAULT_BUCKETS,
     DEFAULT_SALT,
-    with_salt,
     with_url_bucket,
 )
 from corsearch_project_spark.sources import snapshots
@@ -48,19 +57,33 @@ from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources.io import (
     ParquetBucketedFormat,
     done_buckets,
+    run_lineage,
     scan_pages,
 )
-from corsearch_project_spark.sources.lineage import LINEAGE_INPUT_SCHEMA, lineage_rows
+from corsearch_project_spark.sources.lineage import written_lineage
+from corsearch_project_spark.sources.schemas import (
+    DOC_ASSETS_SCHEMA,
+    DOC_TABLES_SCHEMA,
+    DUAL_KERNEL_SCHEMA,
+    EXTRACTED_KERNEL_SCHEMA,
+)
 from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
 
-# Never called here: re-imported only so that the name perfbench/spans.py
-# wraps resolves (tests/test_pipeline.py::test_bench_tracer_targets_resolve).
+# Never called here: re-imported only so that the names perfbench/spans.py
+# wraps resolve (tests/test_pipeline.py::test_bench_tracer_targets_resolve).
+from corsearch_project_spark.operators.kernel import run_kernel  # noqa: F401
 from corsearch_project_spark.operators.partitioning import hot_hosts  # noqa: F401
+from corsearch_project_spark.operators.partitioning import with_salt  # noqa: F401
+from corsearch_project_spark.sources.lineage import lineage_rows  # noqa: F401
+
+
+_BUCKET_DIR = re.compile(r"/url_bucket=(\d+)/")
 
 
 class TableRoot:
-    """Relations under a table root (the ``output_path`` field of the
-    config dataclasses that derive from it)."""
+    """Relations under a table root, and the table's format (the
+    ``output_path``, ``max_records_per_file`` and ``kernel_partitions``
+    fields of the config dataclasses that derive from it)."""
 
     def _under(self, name: str) -> str:
         return self.output_path.rstrip("/") + "/" + name
@@ -77,6 +100,11 @@ class TableRoot:
     def snapshots_path(self) -> str:
         return self._under("snapshots")
 
+    def table_format(self) -> ParquetBucketedFormat:
+        """The table's format, with the config's file size and task count
+        (``max_records_per_file``, ``kernel_partitions``)."""
+        return ParquetBucketedFormat(self.max_records_per_file, self.kernel_partitions)
+
 
 @dataclass
 class ExtractConfig(TableRoot):
@@ -85,7 +113,7 @@ class ExtractConfig(TableRoot):
     run_id: str = ""
     input_format: str = "pages"  # 'pages' (parquet table) | 'warc' (raw dumps)
     buckets: int = DEFAULT_BUCKETS
-    salt: int = DEFAULT_SALT
+    salt: int = DEFAULT_SALT  # read only by perfbench/layers.py; no pipeline salts
     hot_frac: float = 0.05  # read only by perfbench/layers.py
     resume: bool = False
     kernel_partitions: Optional[int] = None
@@ -196,9 +224,10 @@ def scan_input(spark: SparkSession, path: str, input_format: str, buckets: int) 
 
 
 class Extraction(NamedTuple):
-    extracted: DataFrame  # kernel output with url_bucket re-derived JVM-side
-    pages: DataFrame  # the deduped, salted pages the kernel consumed
-    kernel_tasks: int  # tasks of the kernel stage (n_kernel)
+    pages: DataFrame  # the deduped pages (url, html, text, url_bucket): the kernel's input
+    kernel: Callable  # the kernel's mapInArrow function; its rows carry url_bucket
+    extracted: DataFrame  # pages through the write's distribution and the kernel
+    kernel_tasks: int  # tasks of the kernel stage
 
 
 def extract_pages(
@@ -208,96 +237,73 @@ def extract_pages(
     rules: Optional[Dict[str, Rule]],
     with_markdown: bool = False,
 ) -> Extraction:
-    """The shared prelude: latest-wins dedupe, salt, the kernel shuffle
-    and the ONE Python stage, over bucketed ``pages``. ``cfg`` supplies
-    buckets, salt and kernel_partitions. Spark runs no job here: it is
-    plan construction only.
+    """The shared prelude: latest-wins dedupe over bucketed ``pages``, and
+    the ONE Python stage's kernel. ``cfg`` supplies the table format
+    (``TableRoot.table_format``). Spark runs no job here: it is plan
+    construction only.
 
-    The kernel stage runs one Python task per slot
-    (``defaultParallelism``); ``cfg.kernel_partitions`` overrides it."""
+    A backfill passes ``pages`` and ``kernel`` to
+    ``write_extracted``, which runs the kernel in its write stage;
+    ``extracted`` is the same kernel over the same distribution as a
+    DataFrame, which the merge classifies. The kernel stage runs one
+    Python task per slot (``defaultParallelism``);
+    ``cfg.kernel_partitions`` overrides it."""
     # Project BEFORE deduping: max(struct) packs every input column into the
     # aggregate, which defeats Catalyst's column pruning through the agg —
     # an explicit projection here is what keeps unused columns (lang) out of
     # the Parquet scan (asserted by test_plans' ReadSchema audit).
     pages = dedupe_latest(pages.select("url", "warc_ts", "html", "text", "url_bucket"))
-    pages = with_salt(pages, s=cfg.salt)
-
-    sel = pages.select("url", "html", "text", "url_bucket", "salt")
-    part_cols = [F.col("url_bucket"), F.col("salt")]
-    # ALWAYS pass an explicit partition count: a column-only repartition is
-    # an AQE rebalance hint, and AQE coalesces it by shuffle BYTES — for a
-    # CPU-bound Python kernel stage over small-but-expensive rows that
-    # collapsed the stage to 1-2 tasks regardless of cores (measured: flat
-    # scaling local[8]→local[32]). Bytes are the wrong currency here.
-    # One task per slot: every Python task pays a fixed ~0.3-0.4 s
-    # (plans/session.py), so each extra wave adds that cost. Measured on 4
-    # vCPUs at local[4], crawl-mix backfills: 8000 docs took 1.5-1.7 s of
-    # kernel stage in 4 tasks, 1.6-1.9 s in 8 and 2.6-2.7 s in 16; 24000
-    # docs 3.4-4.2 s in 4 tasks, 3.8-4.9 s in 8 and 5.2-5.9 s in 24. The
-    # bucket count is no lower bound: the salt already gives B×S shuffle
-    # keys, and the write exchange regroups rows by bucket after the kernel.
-    n_kernel = cfg.kernel_partitions or spark.sparkContext.defaultParallelism
-    shuffled = sel.repartition(n_kernel, *part_cols)
-
+    pages = pages.select("url", "html", "text", "url_bucket")
     rules_bc = spark.sparkContext.broadcast(rules_to_plain(rules or {}))
-    kernel = run_dual_kernel if with_markdown else run_kernel
-    extracted = with_url_bucket(kernel(shuffled, rules_bc), cfg.buckets)
-    return Extraction(extracted, pages, n_kernel)
+    arm = (dual_rows, DUAL_KERNEL_SCHEMA) if with_markdown else (text_rows, EXTRACTED_KERNEL_SCHEMA)
+    kernel, schema = bucketed_kernel(*arm, rules_bc)
+    fmt = cfg.table_format()
+    extracted = fmt.distribute(pages).mapInArrow(kernel, schema)
+    return Extraction(pages, kernel, extracted, fmt.task_count(spark))
 
 
 def commit_run(
-    spark: SparkSession,
     fmt: ParquetBucketedFormat,
     cfg: TableRoot,
     operation: str,
     input_split: str,
-    buckets: Optional[Sequence[int]] = None,
+    written: Sequence[dict],
     skip: Sequence[int] = (),
     fs=LOCAL_FS,
 ) -> Tuple[list, Optional[dict]]:
-    """Commit the ledger of a run whose data write has landed.
+    """Commit the ledger of a run whose data write has landed, from the
+    driver through the ``fs`` seam, with no Spark job.
 
-    ONE job over the committed table (only ``buckets`` of it when given)
-    computes the per-bucket lineage rows (B rows — tiny, collected); the
-    scan reads only the columns lineage_rows needs, under a declared
-    schema, so no job infers the schema from the file footers. Rows of
-    ``skip`` buckets, committed by an earlier attempt of the same run,
-    are dropped. The rest are written from the driver through the ``fs``
-    seam, with no Spark job: one lineage file, then one snapshot file
-    named by the next seq (sources/snapshots.py). Both are created
-    exclusively. A concurrent commit that took the same seq makes
+    ``written`` is ``write_extracted``'s per-bucket rows; their lineage
+    rows (``lineage.written_lineage``) go into one lineage file, then one
+    snapshot file named by the next seq (sources/snapshots.py). Both are
+    created exclusively. A concurrent commit that took the same seq makes
     ``append_snapshot`` raise ``SeqConflictError``; this run's lineage
     file is then removed, so a retry (``--resume``) of the run redoes its
     buckets instead of skipping them.
 
-    ``skip`` buckets that a snapshot of the run covers
-    (``snapshots.run_buckets``, read on the driver) are pruned from the
-    scan, so a resume reads only the buckets it commits. An earlier
-    attempt that crashed between its lineage and snapshot files left
-    ``skip`` buckets that no snapshot of the run covers. The snapshot
-    committed here covers them too, with their rows from the same job
-    over the committed table — one row per bucket, whatever number of
-    crashed attempts wrote lineage for it — so a resume that skips every
-    bucket still commits the run's snapshot. ``cfg`` supplies run_id and
-    the table paths. Returns (lineage rows, snapshot); nothing is
-    appended and the snapshot is None when no new or uncovered rows
-    remain."""
-    skipped = set(skip)
-    covered = snapshots.run_buckets(cfg.snapshots_path, cfg.run_id, fs) if skipped else set()
-    committed = fmt.read_extracted(spark, cfg.extracted_path, LINEAGE_INPUT_SCHEMA)
-    done = skipped & covered
-    if done:
-        committed = committed.where(~F.col("url_bucket").isin(sorted(done)))
-    lin = lineage_rows(committed, cfg.run_id, input_split, buckets=buckets).collect()
-    rows = [r for r in lin if r["url_bucket"] not in skipped]
-    orphans = [r for r in lin if r["url_bucket"] in skipped]
+    ``skip`` lists the buckets an earlier attempt of the same run
+    committed. An attempt that crashed between its lineage and snapshot
+    files left ``skip`` buckets that no snapshot of the run covers
+    (``snapshots.run_buckets``). The snapshot committed here covers them
+    too, with their rows from the run's own lineage files
+    (``io.run_lineage``) — one row per bucket, whatever number of crashed
+    attempts wrote lineage for it — so a resume that skips every bucket
+    still commits the run's snapshot. ``cfg`` supplies run_id and the
+    table paths. Returns (lineage rows, snapshot); nothing is appended
+    and the snapshot is None when no new or uncovered rows remain."""
+    rows = written_lineage(written, cfg.run_id, input_split)
+    orphans = []
+    if skip:
+        covered = snapshots.run_buckets(cfg.snapshots_path, cfg.run_id, fs)
+        done = run_lineage(cfg.lineage_path, cfg.run_id, fs)
+        orphans = [done[b] for b in sorted(set(skip) - covered) if b in done]
     if not rows and not orphans:
         return rows, None
     lin_file = fmt.append_lineage(rows, cfg.lineage_path, fs=fs)
     try:
         snap = snapshots.append_snapshot(
-            spark, cfg.snapshots_path, cfg.run_id, operation,
-            [r.asDict() for r in rows + orphans], fs=fs,
+            None, cfg.snapshots_path, cfg.run_id, operation, rows + orphans, fs=fs
         )
     except snapshots.SeqConflictError:
         if lin_file is not None:
@@ -315,6 +321,33 @@ def check_ledger_root(cfg: TableRoot, fs=LOCAL_FS) -> None:
     snapshots.latest_seq(cfg.snapshots_path, fs)
 
 
+def check_bucket_count(spark: SparkSession, path: str, buckets: int) -> None:
+    """Fail before the data job when the table at ``path`` was written
+    with another bucket count than ``buckets``: a committed
+    ``url_bucket=<k>`` has k >= ``buckets`` (from the read's file
+    listing), or one of 64 sampled committed rows (one ``limit`` job) is
+    not in bucket ``pmod(xxhash64(url), buckets)``. Written at another
+    count, a url that the table holds would get a second row in another
+    bucket. The ValueError names both counts: the table's is read as the
+    gcd of (hash - bucket) over the sample, which every count that places
+    those rows divides — at more than a few rows, the count itself."""
+    existing = spark.read.schema("url string, url_bucket int").parquet(path)
+    high = max(
+        (int(m.group(1)) for m in map(_BUCKET_DIR.search, existing.inputFiles()) if m),
+        default=-1,
+    )
+    sample = existing.select(F.xxhash64("url").alias("h"), "url_bucket").limit(64).collect()
+    # Python's % of a positive divisor is Spark's pmod: buckets places
+    # every sampled row iff it divides each h - k
+    written = reduce(gcd, (h - k for h, k in sample), 0)
+    if high < buckets and written % buckets == 0:
+        return
+    raise ValueError(
+        f"table {path} was written with {written or 'another number of'} buckets; "
+        f"the run was given buckets={buckets}"
+    )
+
+
 def run_extract(
     spark: SparkSession,
     cfg: ExtractConfig,
@@ -326,34 +359,35 @@ def run_extract(
     through (sources/fs.py)."""
     check_ledger_root(cfg, fs)
     phases = Phases()
-    fmt = ParquetBucketedFormat(cfg.max_records_per_file)
+    fmt = cfg.table_format()
     pages = scan_input(spark, cfg.input_path, cfg.input_format, cfg.buckets)
 
     skipped: List[int] = []
     if cfg.resume:
         skipped = done_buckets(cfg.lineage_path, cfg.run_id, fs)
+        if fs.exists(cfg.extracted_path):
+            check_bucket_count(spark, cfg.extracted_path, cfg.buckets)
     if skipped:
         pages = pages.where(~F.col("url_bucket").isin(skipped))
 
     ext = extract_pages(spark, pages, cfg, rules, cfg.with_markdown)
-    fmt.write_extracted(ext.extracted, cfg.extracted_path)
+    written = fmt.write_extracted(ext.pages, cfg.extracted_path, ext.kernel)
     phases.mark("kernel_and_write")
 
     # over the deduped pages (the rows the main kernel saw); the JVM
     # pre-filter keeps non-document bytes out of the Python stage
-    if cfg.with_doc_assets:
-        assets = run_doc_assets_kernel(ext.pages.select("url", "html"))
-        fmt.write_extracted(with_url_bucket(assets, cfg.buckets), cfg.doc_assets_path)
-        phases.mark("doc_assets")
-
-    if cfg.with_doc_tables:
-        tables = run_doc_tables_kernel(ext.pages.select("url", "html"))
-        fmt.write_extracted(with_url_bucket(tables, cfg.buckets), cfg.doc_tables_path)
-        phases.mark("doc_tables")
+    for enabled, doc_rows, schema, path, phase in (
+        (cfg.with_doc_assets, asset_rows, DOC_ASSETS_SCHEMA, cfg.doc_assets_path, "doc_assets"),
+        (cfg.with_doc_tables, table_rows, DOC_TABLES_SCHEMA, cfg.doc_tables_path, "doc_tables"),
+    ):
+        if enabled:
+            kernel = bucketed_kernel(doc_rows, schema)[0]
+            fmt.write_extracted(document_rows(ext.pages, "url_bucket"), path, kernel)
+            phases.mark(phase)
 
     operation = "resume-append" if cfg.resume else "overwrite"
     new_rows, snap = commit_run(
-        spark, fmt, cfg, operation, cfg.input_path, skip=skipped, fs=fs
+        fmt, cfg, operation, cfg.input_path, written, skip=skipped, fs=fs
     )
     phases.mark("lineage_append")
     return {

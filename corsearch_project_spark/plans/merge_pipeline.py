@@ -18,12 +18,14 @@ O(increment + touched buckets):
      dropped (a re-crawl of identical content must not dirty a bucket);
   3. rewrite only the buckets holding new/updated rows, in the table's
      own columns: per bucket, existing rows minus replaced urls, union
-     the fresh rows — committed via dynamic partition overwrite, so
+     the fresh rows — written by the table format's one writer
+     (``write_extracted``), which replaces only the buckets it wrote, so
      untouched buckets are never rewritten (the manual copy-on-write
      MERGE an Iceberg deployment gets from `MERGE INTO` — same
      TableFormat seam, sources/io.py);
-  4. recompute lineage rows for exactly the rewritten buckets and append
-     a `merge-increment` snapshot (extract_pipeline.commit_run), keeping
+  4. commit the lineage rows of exactly the rewritten buckets, from the
+     writer's per-bucket rows, and append a `merge-increment` snapshot
+     (extract_pipeline.commit_run), keeping
      checkpoint/validate semantics: `jobs/validate_table.py --run-id
      <merge-run>` verifies the rewritten buckets (earlier runs' lineage
      rows for those buckets describe superseded snapshots, as in any
@@ -38,31 +40,28 @@ table.
 
 from __future__ import annotations
 
-import re
 import uuid
 from collections import Counter
 from dataclasses import dataclass
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from corsearch_project_spark.plans.extract_pipeline import (
     DEFAULT_BUCKETS,
-    DEFAULT_SALT,
     Phases,
     TableRoot,
+    check_bucket_count,
     check_ledger_root,
     commit_run,
     extract_pages,
     scan_input,
 )
 from corsearch_project_spark.sources.fs import LOCAL_FS
-from corsearch_project_spark.sources.io import ParquetBucketedFormat
 from corsearch_project_spark.webextract.rules import Rule
 
-# Never called here: the merge reaches them through extract_pipeline's
-# scan_input, extract_pages and commit_run. They are re-imported only so that
-# the seven names perfbench/spans.py wraps on this module resolve
+# Never called here: re-imported only so that the seven names
+# perfbench/spans.py wraps on this module resolve
 # (tests/test_pipeline.py::test_bench_tracer_targets_resolve).
 from corsearch_project_spark.operators.kernel import run_kernel  # noqa: F401
 from corsearch_project_spark.operators.partitioning import (  # noqa: F401
@@ -82,40 +81,12 @@ class MergeConfig(TableRoot):
     run_id: str = ""
     input_format: str = "pages"  # 'pages' | 'warc'
     buckets: int = DEFAULT_BUCKETS
-    salt: int = DEFAULT_SALT
     kernel_partitions: Optional[int] = None
     max_records_per_file: int = 50_000
 
     def __post_init__(self):
         if not self.run_id:
             self.run_id = "m" + uuid.uuid4().hex[:11]
-
-
-_BUCKET_DIR = re.compile(r"/url_bucket=(\d+)/")
-
-
-def check_bucket_count(existing: DataFrame, buckets: int, path: str) -> None:
-    """Raise ValueError, naming both counts, when the table at ``path``
-    was written with another bucket count than ``buckets``: a committed
-    ``url_bucket=<k>`` has k >= ``buckets`` (from the read's file
-    listing), or one of 64 sampled committed rows (one ``limit`` job) is
-    not in bucket ``pmod(xxhash64(url), buckets)``. Merged at another
-    count, a re-crawled url would get a second row in another bucket."""
-    high = max(
-        (int(m.group(1)) for m in map(_BUCKET_DIR.search, existing.inputFiles()) if m),
-        default=-1,
-    )
-    sample = existing.select(F.xxhash64("url").alias("h"), "url_bucket").limit(64).collect()
-
-    def fits(b: int) -> bool:  # Python's % of a positive divisor is Spark's pmod
-        return all(h % b == k for h, k in sample)
-
-    if high < buckets and fits(buckets):
-        return
-    written = next((b for b in range(high + 1, 1 << 16) if fits(b)), "another number of")
-    raise ValueError(
-        f"table {path} was written with {written} buckets; the merge was given buckets={buckets}"
-    )
 
 
 def run_merge(
@@ -126,9 +97,9 @@ def run_merge(
 ) -> Dict[str, object]:
     check_ledger_root(cfg, fs)
     phases = Phases()
-    fmt = ParquetBucketedFormat(cfg.max_records_per_file)
+    fmt = cfg.table_format()
     existing = fmt.read_extracted(spark, cfg.extracted_path)
-    check_bucket_count(existing, cfg.buckets, cfg.extracted_path)
+    check_bucket_count(spark, cfg.extracted_path, cfg.buckets)
     inc = scan_input(spark, cfg.increment_path, cfg.input_format, cfg.buckets)
     # The increment is extracted into the table's own columns: with the
     # markdown arm exactly when the table carries it.
@@ -181,14 +152,13 @@ def run_merge(
             keep = existing.where(F.col("url_bucket").isin(ch_buckets)).join(
                 changed.select("url"), "url", "left_anti"
             )
-            # Dynamic partition overwrite: only the url_bucket partitions
-            # present in the union (= ch_buckets) are replaced on disk.
-            fmt.write_extracted(keep.unionByName(changed), cfg.extracted_path)
+            # Only the url_bucket partitions present in the union
+            # (= ch_buckets) are replaced on disk.
+            written = fmt.write_extracted(keep.unionByName(changed), cfg.extracted_path)
             phases.mark("rewrite_buckets")
 
             snap = commit_run(
-                spark, fmt, cfg, "merge-increment", cfg.increment_path,
-                buckets=ch_buckets, fs=fs,
+                fmt, cfg, "merge-increment", cfg.increment_path, written, fs=fs
             )[1]
             phases.mark("lineage_append")
         return {

@@ -4,7 +4,8 @@ Every conf here is a deliberate 100-TB design decision (SURVEY.md §4):
 
 - AQE on + skew split (BASELINE.json:6 mandates "explicit AQE skew-split"):
   at cluster scale one hot host can make a single shuffle partition 100×
-  median; AQE splits the read side, our explicit salt (P2) splits compute.
+  median; AQE splits the read side, and the url-hash buckets (P2) split
+  the kernel's compute.
 - arrow.maxRecordsPerBatch sized for fat binary rows: a CC page averages
   ~50-100 KB, so 1024-row batches keep Arrow buffers ~64-100 MB — large
   enough to amortize the JVM↔Python hop, small enough not to blow executor
@@ -21,7 +22,12 @@ Every conf here is a deliberate 100-TB design decision (SURVEY.md §4):
   the task header from the JVM. Disabling worker reuse, Unix domain
   sockets, the faulthandler or a larger Arrow batch did not remove the
   wait, so the kernel stage runs one task per slot instead
-  (plans/extract_pipeline.py ``n_kernel``).
+  (sources/io.py ``ParquetBucketedFormat.distribute``).
+- partitionOverwriteMode=dynamic and the v2 file committer serve the
+  Spark writers: curation, search, streaming and compaction. The
+  extracted table's own writer (sources/io.py ``write_extracted``) writes
+  its files from the kernel's tasks and commits them on the driver, so
+  neither conf applies to it.
 """
 
 from __future__ import annotations

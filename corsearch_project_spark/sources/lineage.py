@@ -1,16 +1,21 @@
 """Per-partition lineage rows + checkpoint-resume (BASELINE.json:6).
 
-Lineage is computed FROM THE COMMITTED extracted table (not from the
-in-flight DataFrame) so a lineage row's existence proves its bucket's data
-is fully visible — the commit-ordering guarantee that makes resume safe
-(SURVEY §3.1 step 5). The rollup digest is the JVM-side XOR-of-sha256
-(functions.sql.digest_xor_chunks): order-insensitive, so it is invariant
-under repartitioning/salting, and scale-safe (no per-group collect).
+Lineage is computed BY THE WRITER from the rows it wrote
+(``written_lineage`` over ``io.write_extracted``'s per-bucket rows) and
+committed AFTER the data: a lineage row's existence proves its bucket's
+data is fully visible — the commit-ordering guarantee that makes resume
+safe (SURVEY §3.1 step 5) — and no job reads the table back.
+``lineage_rows`` recomputes the same rows from a committed table:
+``jobs/validate_table.py`` reconciles the ledger with it. The rollup digest
+is the XOR-of-sha256 of the bucket's text_sha256 values, in eight 32-bit
+chunks (functions.sql.digest_xor_chunks on the JVM,
+snapshots.xor_chunks in the writer): order-insensitive, so it is invariant
+under repartitioning, and scale-safe (no per-group collect).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import List, Sequence
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -30,18 +35,30 @@ LINEAGE_INPUT_SCHEMA = T.StructType(
 )
 
 
-def lineage_rows(
-    extracted: DataFrame,
-    run_id: str,
-    input_split: str,
-    buckets: Optional[Sequence[int]] = None,
-) -> DataFrame:
+def written_lineage(written: Sequence[dict], run_id: str, input_split: str) -> List[dict]:
+    """The lineage rows (LINEAGE_SCHEMA, as dicts) of the buckets a write
+    wrote, from its per-bucket rows (``io.WRITTEN_SCHEMA``): what
+    ``lineage_rows`` computes over the same buckets of the committed
+    table, with no Spark job."""
+    return [
+        {
+            "run_id": run_id,
+            "url_bucket": w["url_bucket"],
+            "input_split": f"{input_split}#bucket={w['url_bucket']}",
+            "doc_count": w["doc_count"],
+            "sha256_rollup": w["sha256_rollup"],
+            "status": "done",
+            "wall_ms": int(w["extract_us"] / 1000),  # the JVM's double divide, cast
+            "bytes_in": w["bytes_in"],
+        }
+        for w in written
+    ]
+
+
+def lineage_rows(extracted: DataFrame, run_id: str, input_split: str) -> DataFrame:
     """extracted (committed table incl. url_bucket, bytes_in, extract_us)
     -> one lineage row per bucket (LINEAGE_SCHEMA)."""
-    df = extracted
-    if buckets is not None:
-        df = df.where(F.col("url_bucket").isin(list(buckets)))
-    agg = df.groupBy("url_bucket").agg(
+    agg = extracted.groupBy("url_bucket").agg(
         F.count(F.lit(1)).alias("doc_count"),
         F.sum("bytes_in").alias("bytes_in"),
         (F.sum("extract_us") / F.lit(1000)).cast("long").alias("wall_ms"),

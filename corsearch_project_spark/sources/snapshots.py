@@ -36,7 +36,7 @@ sources/io.py's TableFormat.
 from __future__ import annotations
 
 import re
-from typing import Dict, List, Optional, Sequence, Set
+from typing import Dict, Iterable, List, Optional, Sequence, Set
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -148,14 +148,29 @@ def latest_seq(path: str, fs=LOCAL_FS) -> Optional[int]:
     return max(seqs, default=None)
 
 
+def xor_chunks(digests: Iterable[str], acc: Optional[List[int]] = None) -> List[int]:
+    """Fold sha256 hex digests into ``acc``, their eight 32-bit chunks
+    XOR'd (updated in place; a new accumulator when None) — the JVM
+    rollup's construction (functions.sql.digest_xor_chunks), which skips
+    an empty chunk as it skips a null one."""
+    acc = [0] * 8 if acc is None else acc
+    for d in digests:
+        for k in range(8):
+            chunk = d[k * 8 : k * 8 + 8]
+            if chunk:
+                acc[k] ^= int(chunk, 16)
+    return acc
+
+
+def chunks_hex(acc: List[int]) -> str:
+    """The 64-hex-char rollup string of ``xor_chunks``' accumulator."""
+    return "".join(f"{x:08x}" for x in acc)
+
+
 def _xor_hex(digests: List[str]) -> str:
     """Order-insensitive combination of the per-bucket sha256 rollups —
     the same XOR-chunks construction lineage uses per bucket."""
-    acc = [0] * 8
-    for d in digests:
-        for k in range(8):
-            acc[k] ^= int(d[k * 8 : k * 8 + 8], 16)
-    return "".join(f"{x:08x}" for x in acc)
+    return chunks_hex(xor_chunks(digests))
 
 
 def append_snapshot(

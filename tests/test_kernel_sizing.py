@@ -1,6 +1,7 @@
-"""Kernel-stage sizing (plans/extract_pipeline.py ``n_kernel``): one
-Python task per slot (``defaultParallelism``) and an explicit ``kernel_partitions`` always wins. Backfill and merge
-share the rule and report it as ``kernel_tasks``."""
+"""Kernel-stage sizing (``ParquetBucketedFormat.distribute``): one Python
+task per slot (``defaultParallelism``) and an explicit
+``kernel_partitions`` always wins. Backfill and merge share the rule and
+report it as ``kernel_tasks``."""
 
 import re
 
@@ -14,11 +15,17 @@ from test_merge import BUCKETS, _write_pages
 
 
 def _kernel_exchange_n(df) -> int:
-    """N of the kernel shuffle's hashpartitioning(url_bucket, salt, N)."""
+    """N of the one exchange ahead of the kernel:
+    shufflepartitionidpassthrough(url_bucket, N), which nothing else
+    repartitions."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    found = set(re.findall(r"hashpartitioning\(url_bucket#\d+, salt#\d+, (\d+)\)", plan))
+    found = re.findall(
+        r"shufflepartitionidpassthrough\(direct_shuffle_partition_id\(url_bucket#\d+\), (\d+)\)",
+        plan,
+    )
     assert len(found) == 1, plan
-    return int(found.pop())
+    assert "salt" not in plan, plan
+    return int(found[0])
 
 
 def _extraction(spark, src, **cfg):

@@ -8,7 +8,6 @@ ledger files keep committing, and a root the ledger cannot reach fails
 before the data job."""
 
 import os
-import re
 import shutil
 import subprocess
 import sys
@@ -35,11 +34,13 @@ from corsearch_project_spark.sources.io import (
     ParquetBucketedFormat,
     done_buckets,
     lineage_file_name,
+    run_lineage_files,
 )
+from corsearch_project_spark.sources.lineage import LINEAGE_INPUT_SCHEMA, lineage_rows
 from corsearch_project_spark.sources.maintenance import vacuum_staging
 from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
 
-from test_merge import BUCKETS, _extract_all, _in_buckets, _write_pages
+from test_merge import BUCKETS, _extract_all, _in_buckets, _table_state, _write_pages
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,6 +50,18 @@ def _history(snap_path):
     driver as every program read of the ledger is."""
     files = S.read_ledger(S.ledger_files(snap_path), S.SNAPSHOT_SCHEMA.fieldNames())
     return sorted((r for rs in files.values() for r in rs), key=lambda r: r["seq"])
+
+
+def _written_rows(spark, out):
+    """``write_extracted``'s per-bucket rows for the table committed at
+    ``out``, recomputed from its files."""
+    ext = spark.read.schema(LINEAGE_INPUT_SCHEMA).parquet(os.path.join(out, "extracted"))
+    return [
+        {"url_bucket": r["url_bucket"], "doc_count": r["doc_count"],
+         "bytes_in": r["bytes_in"], "extract_us": 1000 * r["wall_ms"],
+         "sha256_rollup": r["sha256_rollup"]}
+        for r in lineage_rows(ext, "", "").collect()
+    ]
 
 
 def _lineage(run_id, k):
@@ -215,39 +228,6 @@ def test_resume_commits_the_snapshot_a_crash_left_out(spark, tmp_path, monkeypat
     assert len(_history(snap_path)) == 2
 
 
-def test_resume_lineage_reads_only_the_buckets_it_commits(spark, tmp_path, monkeypatch):
-    """A --resume of a partial backfill prunes the buckets its run's
-    snapshot already covers from the lineage rollup's scan of the
-    committed table, and still commits every other bucket."""
-    from corsearch_project_spark.plans import extract_pipeline
-
-    src = str(tmp_path / "part.parquet")
-    base = gen_pages(60, seed=96, dup_frac=0.0)
-    _write_pages(base, src)
-    out = str(tmp_path / "part")
-    part = str(tmp_path / "part0-3.parquet")
-    _write_pages(_in_buckets(spark, base, BUCKETS, {0, 1, 2, 3}), part)
-    cfg = ExtractConfig(part, out, run_id="R-part", buckets=BUCKETS)
-    assert run_extract(spark, cfg)["buckets_written"] == [0, 1, 2, 3]
-
-    scanned = []
-    real = extract_pipeline.lineage_rows
-
-    def recording(extracted, *args, **kwargs):
-        scanned.append(extracted)
-        return real(extracted, *args, **kwargs)
-
-    monkeypatch.setattr(extract_pipeline, "lineage_rows", recording)
-    cfg.input_path, cfg.resume = src, True
-    rep = run_extract(spark, cfg)
-    assert rep["buckets_skipped"] == [0, 1, 2, 3]
-    assert rep["buckets_written"] == [4, 5, 6, 7]
-    assert rep["snapshot"]["buckets"] == [4, 5, 6, 7]
-    (committed,) = scanned
-    plan = re.sub(r"#\d+", "", committed._jdf.queryExecution().executedPlan().toString())
-    assert "PartitionFilters: [NOT url_bucket IN (0,1,2,3)]" in plan, plan
-
-
 def test_done_buckets_reads_only_the_runs_lineage_files(tmp_path):
     """done_buckets reads, on the driver, the run's own lin-<run_id>-*
     files, the lin-compact-* file of expiry and Spark-named part-* files
@@ -290,31 +270,52 @@ def test_done_buckets_reads_only_the_runs_lineage_files(tmp_path):
     assert done_buckets(str(tmp_path / "missing"), "R-a") == []
 
 
-def test_commit_read_back_runs_no_schema_inference_job(spark, tmp_path):
-    """commit_run reads the committed table under a declared read schema
-    of the lineage columns, so none of its Spark jobs is the footer
-    inference job Spark runs for a schema-less read ("parquet at ...")."""
-    base = gen_pages(30, seed=98, dup_frac=0.0)
-    out = _extract_all(spark, tmp_path, base, "readback")
-    src = str(tmp_path / "readback.parquet")
+def test_commit_run_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """commit_run builds the lineage rows from the writer's per-bucket
+    rows, so committing a partial backfill, its --resume and a merge runs
+    no Spark job, and the resume commits exactly the buckets it wrote."""
+    from corsearch_project_spark.plans import extract_pipeline, merge_pipeline
+
     sc = spark.sparkContext
-    sc.setJobGroup("commit-read-back", "commit_run read-back")
-    try:
-        rows, snap = commit_run(
-            spark, ParquetBucketedFormat(),
-            ExtractConfig(src, out, run_id="R-rb", buckets=BUCKETS), "overwrite", src,
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert snap["doc_count"] == len(base)
+    groups = []
+
+    def recording(real):
+        def commit(*args, **kwargs):
+            group = f"commit-run-{len(groups)}"
+            groups.append(group)
+            sc.setJobGroup(group, "commit_run")
+            try:
+                return real(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return commit
+
+    for mod in (extract_pipeline, merge_pipeline):
+        monkeypatch.setattr(mod, "commit_run", recording(mod.commit_run))
+
+    src = str(tmp_path / "part.parquet")
+    base = gen_pages(60, seed=96, dup_frac=0.0)
+    _write_pages(base, src)
+    out = str(tmp_path / "part")
+    part = str(tmp_path / "part0-3.parquet")
+    _write_pages(_in_buckets(spark, base, BUCKETS, {0, 1, 2, 3}), part)
+    cfg = ExtractConfig(part, out, run_id="R-part", buckets=BUCKETS)
+    assert run_extract(spark, cfg)["buckets_written"] == [0, 1, 2, 3]
+    cfg.input_path, cfg.resume = src, True
+    rep = run_extract(spark, cfg)
+    assert rep["buckets_skipped"] == [0, 1, 2, 3]
+    assert rep["buckets_written"] == [4, 5, 6, 7]
+    assert rep["snapshot"]["buckets"] == [4, 5, 6, 7]
+
+    inc = str(tmp_path / "inc.parquet")
+    _write_pages([dict(base[0], html=base[1]["html"], text=base[1]["text"])], inc)
+    rep = run_merge(spark, MergeConfig(inc, out, run_id="M-part", buckets=BUCKETS))
+    assert len(rep["buckets_rewritten"]) == 1
+
     tracker = sc.statusTracker()
-    stages = [
-        tracker.getStageInfo(s).name
-        for j in tracker.getJobIdsForGroup("commit-read-back")
-        for s in tracker.getJobInfo(j).stageIds
-    ]
-    assert stages
-    assert not [n for n in stages if n.startswith("parquet at")], stages
+    assert len(groups) == 3
+    assert [tracker.getJobIdsForGroup(g) for g in groups] == [[], [], []]
 
 
 def test_killed_writer_leftover_is_invisible_and_vacuumed(spark, tmp_path):
@@ -347,6 +348,192 @@ def test_killed_writer_leftover_is_invisible_and_vacuumed(spark, tmp_path):
     src = str(tmp_path / "kill.parquet")
     nxt = run_extract(spark, ExtractConfig(src, out, run_id="R-after", buckets=BUCKETS))
     assert nxt["snapshot"]["seq"] == 1
+
+
+_LINEAGE_KEYS = ("doc_count", "sha256_rollup", "bytes_in", "wall_ms")
+
+
+def _assert_lineage_is_read_back(spark, out, run_id):
+    """Every lineage row ``run_id`` committed equals ``lineage_rows`` over
+    its bucket of the committed table."""
+    ext = ParquetBucketedFormat().read_extracted(
+        spark, os.path.join(out, "extracted"), LINEAGE_INPUT_SCHEMA
+    )
+    want = {
+        r["url_bucket"]: tuple(r[k] for k in _LINEAGE_KEYS)
+        for r in lineage_rows(ext, run_id, "").collect()
+    }
+    files = S.read_ledger(
+        run_lineage_files(os.path.join(out, "lineage"), run_id), LINEAGE_SCHEMA.fieldNames()
+    )
+    got = {}
+    for r in (r for rs in files.values() for r in rs if r["run_id"] == run_id):
+        got.setdefault(r["url_bucket"], set()).add(tuple(r[k] for k in _LINEAGE_KEYS))
+    assert got
+    assert got == {b: {want[b]} for b in got}
+
+
+def test_writer_lineage_equals_read_back(spark, tmp_path):
+    """The lineage rows commit_run writes from the writer's per-bucket
+    rows equal lineage_rows over the committed table, bucket by bucket:
+    after a backfill, a with_markdown backfill, a merge and a --resume."""
+    base = gen_pages(60, seed=81, dup_frac=0.1)
+    out = _extract_all(spark, tmp_path, base, "wl")
+    _assert_lineage_is_read_back(spark, out, "R-wl")
+
+    out_md = _extract_all(spark, tmp_path, base, "wlmd", with_markdown=True)
+    _assert_lineage_is_read_back(spark, out_md, "R-wlmd")
+
+    inc = gen_pages(10, seed=82, dup_frac=0.0)
+    for r in inc:
+        r["url"] = r["url"].replace("https://", "https://inc-")
+    inc += [dict(r, html=d["html"], text=d["text"]) for r, d in zip(base[:5], base[30:35])]
+    inc_src = str(tmp_path / "wl_inc.parquet")
+    _write_pages(inc, inc_src)
+    rep = run_merge(spark, MergeConfig(inc_src, out, run_id="M-wl", buckets=BUCKETS))
+    assert rep["buckets_rewritten"]
+    _assert_lineage_is_read_back(spark, out, "M-wl")
+
+    src, part = str(tmp_path / "wl_full.parquet"), str(tmp_path / "wl_part.parquet")
+    _write_pages(base, src)
+    _write_pages(_in_buckets(spark, base, BUCKETS, {0, 1, 2}), part)
+    cfg = ExtractConfig(part, str(tmp_path / "wl_resume"), run_id="R-res", buckets=BUCKETS)
+    run_extract(spark, cfg)
+    cfg.input_path, cfg.resume = src, True
+    assert run_extract(spark, cfg)["buckets_skipped"] == [0, 1, 2]
+    _assert_lineage_is_read_back(spark, cfg.output_path, "R-res")
+
+
+def test_max_records_per_file_rolls_files_and_the_rollup_covers_them(spark, tmp_path):
+    """At max_records_per_file=4 each bucket's rows roll over files of 4
+    rows (the last one shorter), url-sorted across the files, and the
+    bucket's lineage rollup covers every file."""
+    from validate_table import validate_table
+
+    base = gen_pages(60, seed=83, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "roll", max_records_per_file=4)
+    ext = os.path.join(out, "extracted")
+    total, most = 0, 0
+    for bucket in sorted(n for n in os.listdir(ext) if n.startswith("url_bucket=")):
+        files = sorted(os.listdir(os.path.join(ext, bucket)))
+        urls = [pq.read_table(os.path.join(ext, bucket, f)).column("url").to_pylist() for f in files]
+        assert [len(u) for u in urls[:-1]] == [4] * (len(urls) - 1), (bucket, urls)
+        assert 0 < len(urls[-1]) <= 4
+        flat = [u for us in urls for u in us]
+        assert flat == sorted(flat)
+        total += len(flat)
+        most = max(most, len(files))
+    assert total == len(base)
+    assert most > 1
+    _assert_lineage_is_read_back(spark, out, "R-roll")
+    v = validate_table(
+        spark, ext, os.path.join(out, "lineage"), "R-roll",
+        snapshots_path=os.path.join(out, "snapshots"),
+    )
+    assert v["ok"], v
+
+
+def _data_files(out):
+    """``_bucket_files`` without the staging leftovers readers skip."""
+    return {p: m for p, m in _bucket_files(out).items() if not p.startswith("_")}
+
+
+def test_bucket_commit_crash_keeps_the_old_table_and_resume_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A backfill whose bucket commit raises after the fused write stage
+    leaves the old table as Spark, pyarrow and validate_table see it (the
+    new files sit under _temporary); a --resume of the run commits it,
+    and vacuum_staging reaps the dead staging directory."""
+    from validate_table import validate_table
+
+    from corsearch_project_spark.sources import io
+
+    base = gen_pages(40, seed=84, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "cc")
+    ext, lin, snap = (os.path.join(out, d) for d in ("extracted", "lineage", "snapshots"))
+    before = _table_state(spark, out)
+    arrow_before = sorted(map(tuple, pq.read_table(ext, columns=["url", "text_sha256"]).to_pylist()))
+    files = _data_files(out)
+    new = [dict(r, html=d["html"], text=d["text"]) for r, d in zip(base, base[20:] + base[:20])]
+    src = str(tmp_path / "cc_new.parquet")
+    _write_pages(new, src)
+
+    class _Crash(Exception):
+        pass
+
+    def crash(*args, **kwargs):
+        raise _Crash("killed before the bucket commit")
+
+    monkeypatch.setattr(io, "commit_buckets", crash)
+    cfg = ExtractConfig(src, out, run_id="R-cc2", buckets=BUCKETS)
+    with pytest.raises(_Crash):
+        run_extract(spark, cfg)
+    monkeypatch.undo()
+
+    assert os.listdir(os.path.join(ext, "_temporary"))
+    assert _data_files(out) == files
+    assert _table_state(spark, out) == before
+    arrow = pq.read_table(ext, columns=["url", "text_sha256"]).to_pylist()
+    assert sorted(map(tuple, arrow)) == arrow_before
+    v = validate_table(spark, ext, lin, "R-cc", snapshots_path=snap)
+    assert v["ok"], v
+    assert [r["run_id"] for r in _history(snap)] == ["R-cc"]
+
+    cfg.resume = True
+    rep = run_extract(spark, cfg)
+    assert rep["buckets_skipped"] == []
+    assert rep["buckets_written"] == done_buckets(lin, "R-cc")
+    v = validate_table(spark, ext, lin, "R-cc2", snapshots_path=snap)
+    assert v["ok"], v
+    assert _table_state(spark, out) == _table_state(
+        spark, _extract_all(spark, tmp_path, new, "cc_clean")
+    )
+    rep = vacuum_staging(out)
+    assert rep["staging_dirs_removed"] == ["extracted/_temporary"]
+    assert not os.path.exists(os.path.join(ext, "_temporary"))
+
+
+def test_dead_attempt_under_temporary_is_never_committed(spark, tmp_path, monkeypatch):
+    """Only the task attempts whose rows the write stage returned are
+    committed: a dead attempt's directory planted under the run's own
+    staging directory, and one of an older dead run, never reach the
+    table; the older one stays for vacuum_staging."""
+    import pyarrow as pa
+
+    from corsearch_project_spark.sources import io
+
+    base = gen_pages(40, seed=85, dup_frac=0.0)
+    src = str(tmp_path / "att.parquet")
+    _write_pages(base, src)
+    out = str(tmp_path / "att")
+    ext = os.path.join(out, "extracted")
+    dead = pa.table({"url": ["https://dead.example/"]})
+    older = os.path.join(ext, "_temporary", "deadrun", "attempt-7", "url_bucket=0")
+    os.makedirs(older)
+    pq.write_table(dead, os.path.join(older, "part-00000-deadrun.zstd.parquet"))
+
+    real, committed = io.commit_buckets, {}
+
+    def plant_then_commit(filesystem, root, run, written):
+        for w in written:
+            d = f"{root}/_temporary/{run}/attempt-999999/url_bucket={w['url_bucket']}"
+            os.makedirs(d)
+            pq.write_table(dead, os.path.join(d, f"part-00000-{run}.zstd.parquet"))
+            committed[w["url_bucket"]] = w["files"]
+        return real(filesystem, root, run, written)
+
+    monkeypatch.setattr(io, "commit_buckets", plant_then_commit)
+    rep = run_extract(spark, ExtractConfig(src, out, run_id="R-att", buckets=BUCKETS))
+    monkeypatch.undo()
+
+    assert sorted(committed) == rep["buckets_written"]
+    for b, names in committed.items():
+        assert sorted(os.listdir(os.path.join(ext, f"url_bucket={b}"))) == sorted(names)
+    urls = {r["url"] for r in spark.read.parquet(ext).select("url").collect()}
+    assert urls == {r["url"] for r in base}
+    assert os.listdir(os.path.join(ext, "_temporary")) == ["deadrun"]
+    assert vacuum_staging(out)["staging_dirs_removed"] == ["extracted/_temporary"]
 
 
 def _bucket_files(out):
@@ -446,7 +633,8 @@ def test_uri_table_root_commits_or_fails_before_the_data_job(
 
     writes = []
     monkeypatch.setattr(
-        ParquetBucketedFormat, "write_extracted", lambda self, df, path: writes.append(path)
+        ParquetBucketedFormat, "write_extracted",
+        lambda self, df, path, kernel=None: writes.append(path),
     )
     with pytest.raises(ValueError, match="pass an fs adapter"):
         run_extract(
@@ -470,6 +658,7 @@ def test_seq_race_loser_removes_its_lineage_file(spark, tmp_path, monkeypatch):
     lin = os.path.join(out, "lineage")
     fmt = ParquetBucketedFormat()
     written = done_buckets(lin, "R-race")
+    rows = _written_rows(spark, out)
 
     n = 3
     barrier = threading.Barrier(n, timeout=120)
@@ -486,7 +675,7 @@ def test_seq_race_loser_removes_its_lineage_file(spark, tmp_path, monkeypatch):
     def commit(k):
         cfg = ExtractConfig(src, out, run_id=f"W{k}", buckets=BUCKETS)
         try:
-            results[k] = commit_run(spark, fmt, cfg, "overwrite", src)[1]
+            results[k] = commit_run(fmt, cfg, "overwrite", src, rows)[1]
         except S.SeqConflictError as e:
             results[k] = e
 

@@ -45,17 +45,18 @@ def _record_write_tasks(spark, monkeypatch):
 
     real, sc, tasks = ParquetBucketedFormat.write_extracted, spark.sparkContext, []
 
-    def recording(self, df, path):
+    def recording(self, df, path, kernel=None):
         group = f"write-extracted-{len(tasks)}"
         sc.setJobGroup(group, path)
         try:
-            real(self, df, path)
+            written = real(self, df, path, kernel)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         tracker = sc.statusTracker()
         last = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
         stages = [tracker.getStageInfo(s) for s in last.stageIds]
         tasks.append(sum(s.numCompletedTasks for s in stages if s is not None))
+        return written
 
     monkeypatch.setattr(ParquetBucketedFormat, "write_extracted", recording)
     return tasks
@@ -413,4 +414,29 @@ def test_merge_refuses_another_bucket_count(spark, tmp_path, table_buckets, merg
         )
     assert f"written with {table_buckets} buckets" in str(err.value)
     assert f"buckets={merge_buckets}" in str(err.value)
+    assert _files(out) == before
+
+
+def test_resume_refuses_another_bucket_count(spark, tmp_path):
+    """A --resume at another bucket count than its first attempt would
+    write the urls of the buckets it skips a second time, under other
+    buckets. The first attempt wrote buckets 0-3 of 8; the resume at 16
+    raises, naming both counts, before anything is written."""
+    base = gen_pages(60, seed=86, dup_frac=0.0)
+    src, part = str(tmp_path / "base.parquet"), str(tmp_path / "part.parquet")
+    _write_pages(base, src)
+    _write_pages(_in_buckets(spark, base, 8, {0, 1, 2, 3}), part)
+    out = str(tmp_path / "table")
+    first = run_extract(
+        spark, ExtractConfig(part, out, run_id="R-rb", buckets=8), default_rules()
+    )
+    assert first["buckets_written"] == [0, 1, 2, 3]
+    before = _files(out)
+    with pytest.raises(ValueError) as err:
+        run_extract(
+            spark, ExtractConfig(src, out, run_id="R-rb", buckets=16, resume=True),
+            default_rules(),
+        )
+    assert "written with 8 buckets" in str(err.value)
+    assert "buckets=16" in str(err.value)
     assert _files(out) == before

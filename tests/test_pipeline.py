@@ -131,30 +131,43 @@ def test_resume_skips_done_buckets_and_matches_full_run(spark, tmp_path, smoke_c
         assert len(rows) == 1 and rows[0]["wall_ms"] == lin1[b]
 
 
-def test_skew_salting_preserves_output(spark, tmp_path):
+def test_task_layout_preserves_output(spark, tmp_path):
+    """A heavily skewed input extracted in 3 tasks and in one per slot
+    gives the same per-url digests and per-bucket rollups."""
     rules = default_rules()
     rows = gen_pages(300, seed=7, skew="heavy", dup_frac=0.0)
     inp = _write_pages(spark, tmp_path, rows, "pages_skew")
 
-    salted = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "s1"),
-                           run_id="s1", buckets=8, salt=8, hot_frac=0.05)
-    unsalted = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "s2"),
-                             run_id="s2", buckets=8, salt=1, hot_frac=1.1)  # no host is 'hot'
-    r1 = run_extract(spark, salted, rules)
-    r2 = run_extract(spark, unsalted, rules)
+    three = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "s1"),
+                          run_id="s1", buckets=8, kernel_partitions=3)
+    per_slot = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "s2"),
+                             run_id="s2", buckets=8)
+    run_extract(spark, three, rules)
+    run_extract(spark, per_slot, rules)
 
     a = {(r["url"], r["text_sha256"])
-         for r in spark.read.parquet(salted.extracted_path).select("url", "text_sha256").collect()}
+         for r in spark.read.parquet(three.extracted_path).select("url", "text_sha256").collect()}
     b = {(r["url"], r["text_sha256"])
-         for r in spark.read.parquet(unsalted.extracted_path).select("url", "text_sha256").collect()}
+         for r in spark.read.parquet(per_slot.extracted_path).select("url", "text_sha256").collect()}
     assert a == b
 
     # rollup digest is order-insensitive: per-bucket rollups match across layouts
     la = {(r["url_bucket"], r["sha256_rollup"])
-          for r in spark.read.parquet(salted.lineage_path).collect()}
+          for r in spark.read.parquet(three.lineage_path).collect()}
     lb = {(r["url_bucket"], r["sha256_rollup"])
-          for r in spark.read.parquet(unsalted.lineage_path).collect()}
+          for r in spark.read.parquet(per_slot.lineage_path).collect()}
     assert la == lb
+
+
+def _backfill_jobs(spark, cfg):
+    sc = spark.sparkContext
+    group = f"backfill-jobs-{cfg.run_id}"
+    sc.setJobGroup(group, "run_extract")
+    try:
+        run_extract(spark, cfg, default_rules())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_backfill_runs_six_spark_jobs(spark, tmp_path):
@@ -163,14 +176,18 @@ def test_backfill_runs_six_spark_jobs(spark, tmp_path):
     inp = _write_pages(spark, tmp_path, gen_pages(60, seed=98), "pages_jobs")
     cfg = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "jobs"),
                         run_id="R-jobs", buckets=8)
-    sc = spark.sparkContext
-    sc.setJobGroup("backfill-jobs", "run_extract")
-    try:
-        run_extract(spark, cfg, default_rules())
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("backfill-jobs")
+    jobs = _backfill_jobs(spark, cfg)
     assert 0 < len(jobs) <= 6, len(jobs)
+
+
+def test_backfill_runs_three_spark_jobs(spark, tmp_path):
+    """The kernel and the bucketed write share one stage and the lineage
+    comes from the writer's rows: a backfill is the dedupe's two
+    aggregate jobs and the fused kernel-and-write job."""
+    inp = _write_pages(spark, tmp_path, gen_pages(60, seed=98), "pages_jobs3")
+    cfg = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "jobs3"),
+                        run_id="R-jobs3", buckets=8)
+    assert len(_backfill_jobs(spark, cfg)) == 3
 
 
 def test_backfill_writes_one_task_per_slot_and_one_file_per_bucket(
@@ -178,8 +195,8 @@ def test_backfill_writes_one_task_per_slot_and_one_file_per_bucket(
 ):
     """write_extracted owns the write distribution: a 16-bucket backfill
     writes in defaultParallelism tasks (8 on the test session), through
-    exactly one url_bucket hash exchange, and leaves one file per
-    non-empty bucket with its rows sorted by url."""
+    exactly one url_bucket exchange, and leaves one file per non-empty
+    bucket with its rows sorted by url."""
     import re
 
     import pyarrow.parquet as pq
@@ -196,14 +213,15 @@ def test_backfill_writes_one_task_per_slot_and_one_file_per_bucket(
         spark.conf.set("spark.sql.ui.explainMode", mode)
     assert tasks == [spark.sparkContext.defaultParallelism] == [8]
 
-    # the final plan of the write, from the SQL status store
+    # the final plan of the write stage, the last one in the SQL status store
     runs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    (plan,) = [
+    plan = [
         p for p in (runs.apply(i).physicalPlanDescription() for i in range(runs.size()))
-        if "InsertIntoHadoopFsRelationCommand" in p and cfg.extracted_path in p
-    ]
+        if "MapInArrow write_buckets(" in p
+    ][-1]
     final = plan.split("== Initial Plan ==")[0]
-    assert len(re.findall(r"Exchange hashpartitioning\(url_bucket#\d+, \d+\)", final)) == 1, plan
+    exchanges = re.findall(r"Exchange (\w+)\((?:direct_shuffle_partition_id\()?url_bucket#", final)
+    assert exchanges == ["shufflepartitionidpassthrough"], plan
 
     buckets = [n for n in os.listdir(cfg.extracted_path) if n.startswith("url_bucket=")]
     assert sorted(buckets) == sorted(f"url_bucket={b}" for b in rep["buckets_written"])
