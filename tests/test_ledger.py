@@ -270,30 +270,41 @@ def test_done_buckets_reads_only_the_runs_lineage_files(tmp_path):
     assert done_buckets(str(tmp_path / "missing"), "R-a") == []
 
 
-def test_commit_run_runs_no_spark_job(spark, tmp_path, monkeypatch):
-    """commit_run builds the lineage rows from the writer's per-bucket
-    rows, so committing a partial backfill, its --resume and a merge runs
-    no Spark job, and the resume commits exactly the buckets it wrote."""
+def _record_commit_runs(spark, monkeypatch):
+    """Run every commit_run of the pipelines in a job group of its own;
+    returns the list of (group, lineage rows, snapshot) it fills."""
     from corsearch_project_spark.plans import extract_pipeline, merge_pipeline
 
     sc = spark.sparkContext
-    groups = []
+    commits = []
 
     def recording(real):
         def commit(*args, **kwargs):
-            group = f"commit-run-{len(groups)}"
-            groups.append(group)
+            group = f"commit-run-{len(commits)}"
             sc.setJobGroup(group, "commit_run")
             try:
-                return real(*args, **kwargs)
+                rows, snap = real(*args, **kwargs)
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
+            commits.append((group, rows, snap))
+            return rows, snap
 
         return commit
 
     for mod in (extract_pipeline, merge_pipeline):
         monkeypatch.setattr(mod, "commit_run", recording(mod.commit_run))
+    return commits
 
+
+def _jobs(spark, group):
+    return spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+def test_resume_lineage_reads_only_the_buckets_it_commits(spark, tmp_path, monkeypatch):
+    """A --resume's commit takes its lineage from the writer's per-bucket
+    rows: it reads nothing of the table (no Spark job), and its lineage
+    rows and snapshot cover exactly the buckets it wrote, not the ones the
+    first attempt committed."""
     src = str(tmp_path / "part.parquet")
     base = gen_pages(60, seed=96, dup_frac=0.0)
     _write_pages(base, src)
@@ -302,20 +313,35 @@ def test_commit_run_runs_no_spark_job(spark, tmp_path, monkeypatch):
     _write_pages(_in_buckets(spark, base, BUCKETS, {0, 1, 2, 3}), part)
     cfg = ExtractConfig(part, out, run_id="R-part", buckets=BUCKETS)
     assert run_extract(spark, cfg)["buckets_written"] == [0, 1, 2, 3]
+
+    commits = _record_commit_runs(spark, monkeypatch)
     cfg.input_path, cfg.resume = src, True
     rep = run_extract(spark, cfg)
     assert rep["buckets_skipped"] == [0, 1, 2, 3]
     assert rep["buckets_written"] == [4, 5, 6, 7]
     assert rep["snapshot"]["buckets"] == [4, 5, 6, 7]
+    ((group, rows, snap),) = commits
+    assert _jobs(spark, group) == []
+    assert sorted(r["url_bucket"] for r in rows) == [4, 5, 6, 7]
+    assert snap["buckets"] == [4, 5, 6, 7]
 
+
+def test_commit_read_back_runs_no_schema_inference_job(spark, tmp_path, monkeypatch):
+    """commit_run builds its lineage from the writer's per-bucket rows and
+    does not read the committed table back, so neither a backfill's nor a
+    merge's commit runs a Spark job -- in particular not the footer
+    inference job of a schema-less read ("parquet at ...")."""
+    commits = _record_commit_runs(spark, monkeypatch)
+    base = gen_pages(30, seed=98, dup_frac=0.0)
+    out = _extract_all(spark, tmp_path, base, "readback")
     inc = str(tmp_path / "inc.parquet")
     _write_pages([dict(base[0], html=base[1]["html"], text=base[1]["text"])], inc)
-    rep = run_merge(spark, MergeConfig(inc, out, run_id="M-part", buckets=BUCKETS))
+    rep = run_merge(spark, MergeConfig(inc, out, run_id="M-rb", buckets=BUCKETS))
     assert len(rep["buckets_rewritten"]) == 1
 
-    tracker = sc.statusTracker()
-    assert len(groups) == 3
-    assert [tracker.getJobIdsForGroup(g) for g in groups] == [[], [], []]
+    assert len(commits) == 2
+    assert commits[0][2]["doc_count"] == len(base)
+    assert [_jobs(spark, group) for group, _, _ in commits] == [[], []]
 
 
 def test_killed_writer_leftover_is_invisible_and_vacuumed(spark, tmp_path):
