@@ -27,9 +27,7 @@ DEFAULT_SALT = 64  # ExtractConfig.salt's default; read only by perfbench/layers
 
 
 def with_url_bucket(df: DataFrame, b: int = DEFAULT_BUCKETS, url_col: str = "url") -> DataFrame:
-    return df.withColumn(
-        "url_bucket", F.pmod(F.xxhash64(F.col(url_col)), F.lit(b)).cast("int")
-    )
+    return df.withColumn("url_bucket", F.expr(f"CAST(pmod(xxhash64(`{url_col}`), {b}) AS INT)"))
 
 
 # Called by no pipeline; kept because perfbench/layers.py calls it.

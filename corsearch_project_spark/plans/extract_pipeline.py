@@ -37,6 +37,7 @@ from math import gcd
 from typing import Callable, Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from corsearch_project_spark.operators.kernel import (
@@ -162,25 +163,22 @@ def dedupe_latest(pages: DataFrame) -> DataFrame:
     deterministically by larger payload, then by the remaining columns'
     natural order (a strictly finer tiebreak than the window control arm).
 
-    Implemented as ``max(struct(ordering keys…, payload…))`` in a
+    Implemented as ``max(named_struct(ordering keys…, payload…))`` in a
     groupBy(url): unlike the row_number window (dedupe_latest_window), a
     declarative max gets map-side PARTIAL aggregation — each input split
     reduces its local replicas before the shuffle and nothing is sorted —
     which at 10^12 rows means the exchange carries ~unique urls instead of
     every replica plus a full-partition sort. The struct packs each column
     once — (warc_ts, length(html), text, the other columns) — so the
-    ordering keys warc_ts and text are not carried twice."""
-    payload = [c for c in pages.columns if c != "url"]
-    packed = F.struct(
-        "warc_ts",
-        F.length("html").alias("_k2"),
-        "text",
-        *[c for c in payload if c not in ("warc_ts", "text")],
-    )
-    picked = pages.groupBy("url").agg(F.max(packed).alias("_m"))
-    return picked.select("url", *[F.col(f"_m.{c}").alias(c) for c in payload]).select(
-        *pages.columns
-    )
+    ordering keys warc_ts and text are not carried twice. Both steps are
+    built from SQL strings, which reach the JVM as text: a Column chain
+    costs several py4j calls per column and alias."""
+    columns = pages.columns
+    rest = [c for c in columns if c not in ("url", "warc_ts", "text")]
+    fields = [("warc_ts", "warc_ts"), ("_k2", "length(html)"), ("text", "text")]
+    struct = ", ".join(f"'{n}', {e}" for n, e in fields + [(c, f"`{c}`") for c in rest])
+    picked = pages.groupBy("url").agg(F.expr(f"max(named_struct({struct})) AS _m"))
+    return picked.selectExpr(*(c if c == "url" else f"_m.`{c}` AS `{c}`" for c in columns))
 
 
 def dedupe_latest_window(pages: DataFrame) -> DataFrame:
@@ -226,8 +224,16 @@ def scan_input(spark: SparkSession, path: str, input_format: str, buckets: int) 
 class Extraction(NamedTuple):
     pages: DataFrame  # the deduped pages (url, html, text, url_bucket): the kernel's input
     kernel: Callable  # the kernel's mapInArrow function; its rows carry url_bucket
-    extracted: DataFrame  # pages through the write's distribution and the kernel
+    schema: StructType  # the kernel's output schema
+    fmt: ParquetBucketedFormat  # the table format whose distribution the kernel runs over
     kernel_tasks: int  # tasks of the kernel stage
+
+    @property
+    def extracted(self) -> DataFrame:
+        """``pages`` through the write's distribution and the kernel, as a
+        DataFrame, which the merge classifies. Built on each access: a
+        backfill runs the kernel in its write stage and never asks."""
+        return self.fmt.distribute(self.pages).mapInArrow(self.kernel, self.schema)
 
 
 def extract_pages(
@@ -252,14 +258,13 @@ def extract_pages(
     # aggregate, which defeats Catalyst's column pruning through the agg —
     # an explicit projection here is what keeps unused columns (lang) out of
     # the Parquet scan (asserted by test_plans' ReadSchema audit).
-    pages = dedupe_latest(pages.select("url", "warc_ts", "html", "text", "url_bucket"))
-    pages = pages.select("url", "html", "text", "url_bucket")
+    pages = dedupe_latest(pages.selectExpr("url", "warc_ts", "html", "text", "url_bucket"))
+    pages = pages.drop("warc_ts")
     rules_bc = spark.sparkContext.broadcast(rules_to_plain(rules or {}))
     arm = (dual_rows, DUAL_KERNEL_SCHEMA) if with_markdown else (text_rows, EXTRACTED_KERNEL_SCHEMA)
     kernel, schema = bucketed_kernel(*arm, rules_bc)
     fmt = cfg.table_format()
-    extracted = fmt.distribute(pages).mapInArrow(kernel, schema)
-    return Extraction(pages, kernel, extracted, fmt.task_count(spark))
+    return Extraction(pages, kernel, schema, fmt, fmt.task_count(spark))
 
 
 def commit_run(

@@ -14,15 +14,17 @@ Every conf here is a deliberate 100-TB design decision (SURVEY.md §4):
   cluster set ~2-3× total executor cores (AQE coalesces the excess).
 - python.worker.reuse keeps the forked Python workers (and their imported
   extraction core) warm across tasks — worker startup would otherwise
-  dominate small tasks. Reuse does not remove the fixed cost of a Python
-  task, though: on PySpark 4.1, 4 vCPUs, an identity mapInArrow over 4000
-  rows took 0.32-0.49 s in 4 tasks, 1.0-1.5 s in 16 and 4.6 s in 64, on
-  4 reused workers, with a ~1 ms function body. Each task spends 0.2-0.3 s
-  blocked in pyspark.worker's ``setup_spark_files``, reading the rest of
-  the task header from the JVM. Disabling worker reuse, Unix domain
-  sockets, the faulthandler or a larger Arrow batch did not remove the
-  wait, so the kernel stage runs one task per slot instead
-  (sources/io.py ``ParquetBucketedFormat.distribute``).
+  dominate small tasks. A reused worker still starts every task with
+  ``importlib.invalidate_caches()`` (pyspark's ``setup_spark_files``), and
+  on Python 3.11 (3.13 re-reads lazily) that makes each cached
+  ``zipimporter`` re-read its whole zip directory: about 16 importers over pyspark.zip (1328
+  files) and the py4j zip, 0.2-0.4 s of every task. The engine's
+  ``mapInArrow`` functions drop those importers when their partition is
+  done (operators/kernel.py ``release_zip_importers``), so only the first
+  task of a new worker pays the read. On PySpark 4.1, Python 3.11, 4
+  vCPUs, an identity mapInArrow over 8000 rows of 2 KB took 0.45-0.55 s
+  in 4 tasks, 1.2-1.4 s in 16 and 4.5-4.8 s in 64 without the release,
+  and 0.16-0.24 s, 0.28-0.33 s and 0.69-0.80 s with it.
 - partitionOverwriteMode=dynamic and the v2 file committer serve the
   Spark writers: curation, search, streaming and compaction. The
   extracted table's own writer (sources/io.py ``write_extracted``) writes

@@ -27,6 +27,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from corsearch_project_spark.operators.kernel import release_zip_importers
 from corsearch_project_spark.sources.fs import LOCAL_FS
 from corsearch_project_spark.sources.schemas import (
     EXTRACTED_SCHEMA,
@@ -130,7 +131,10 @@ def _nullable(schema: pa.Schema) -> pa.Schema:
 class _BucketFiles:
     """One bucket's rows in one task: streamed into zstd Parquet files
     under ``dir``, a new file every ``max_records`` rows; the lineage
-    totals are folded as the rows pass."""
+    totals are folded as the rows pass. Only ``url`` gets min/max
+    statistics: the manifest's range lookups (sources/manifest.py) read
+    no other column's, and those of the long text columns would be
+    stored in every row group and page header."""
 
     def __init__(self, filesystem, staging: str, bucket: int, run: str, max_records: int):
         self.filesystem, self.run, self.max_records = filesystem, run, max_records
@@ -164,6 +168,7 @@ class _BucketFiles:
         self.writer = pq.ParquetWriter(
             f"{self.dir}/{name}", schema, filesystem=self.filesystem,
             compression="zstd", compression_level=3, store_schema=False,
+            write_statistics=["url"],
         )
         self.files.append(name)
         self.in_file = 0
@@ -224,6 +229,7 @@ def _write_stage(filesystem, root: str, run: str, max_records: int, kernel):
                 current.writer.close()
             raise
         yield pa.RecordBatch.from_pylist(written, schema=out_schema)
+        release_zip_importers()
 
     return write_buckets
 
@@ -266,12 +272,16 @@ class ParquetBucketedFormat:
         rows in one task (``repartitionById`` on url_bucket: bucket b goes
         to task b mod N, an explicit count that AQE does not coalesce),
         sorted by (url_bucket, url) so each file is url-clustered for the
-        S15 manifest's range lookups. One task per slot by default: every
-        Python task pays a fixed cost (plans/session.py); on 4 vCPUs an
-        8000-doc kernel stage took 1.5-1.7 s in 4 tasks and 2.6-2.7 s in
-        16."""
+        S15 manifest's range lookups. One task per slot by default: each
+        Python task still has a fixed cost, though no longer the zip
+        directory re-read (plans/session.py). On 4 vCPUs, a warm backfill
+        of 2500 crawl-mix pages took a median 0.96 s in 4 tasks, 1.00 s
+        in 8 and 1.18 s in 16; of 750 PDF pages, 0.73, 0.81 and 0.95 s."""
         n = self.task_count(df.sparkSession)
-        return df.repartitionById(n, "url_bucket").sortWithinPartitions("url_bucket", "url")
+        df = df.repartitionById(n, "url_bucket")
+        # resolved columns: a sort key given by name costs a dozen py4j
+        # calls (F.col), a resolved one a single call
+        return df.sortWithinPartitions(df["url_bucket"], df["url"])
 
     def write_extracted(self, df: DataFrame, path: str, kernel=None) -> List[dict]:
         """S3: the bucketed sink, the one writer of bucketed tables. One

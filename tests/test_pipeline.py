@@ -190,6 +190,42 @@ def test_backfill_runs_three_spark_jobs(spark, tmp_path):
     assert len(_backfill_jobs(spark, cfg)) == 3
 
 
+def test_backfill_builds_one_python_plan(spark, tmp_path, monkeypatch):
+    """A backfill builds one ``mapInArrow`` plan, its fused kernel-and-write
+    stage, and no kernel DataFrame that it would not run; the merge still
+    classifies the increment through ``Extraction.extracted``."""
+    from corsearch_project_spark.plans import extract_pipeline as X
+    from corsearch_project_spark.plans.merge_pipeline import MergeConfig, run_merge
+    from corsearch_project_spark.sources.io import WRITTEN_SCHEMA
+
+    frame = type(spark.range(0))
+    real_map, real_extracted, schemas, asked = frame.mapInArrow, X.Extraction.extracted, [], []
+
+    def recording_map(self, func, schema, *args, **kwargs):
+        schemas.append(schema)
+        return real_map(self, func, schema, *args, **kwargs)
+
+    def recording_extracted(self):
+        asked.append(self)
+        return real_extracted.fget(self)
+
+    monkeypatch.setattr(frame, "mapInArrow", recording_map)
+    monkeypatch.setattr(X.Extraction, "extracted", property(recording_extracted))
+
+    inp = _write_pages(spark, tmp_path, gen_pages(60, seed=98), "pages_plan")
+    out = os.path.join(str(tmp_path), "plan")
+    run_extract(spark, ExtractConfig(inp, out, run_id="R-plan", buckets=8), default_rules())
+    assert schemas == [WRITTEN_SCHEMA] and asked == []
+
+    inc = gen_pages(20, seed=96, dup_frac=0.0)
+    for r in inc:
+        r["url"] = r["url"].replace("https://", "https://inc-")
+    inc_path = _write_pages(spark, tmp_path, inc, "inc_plan")
+    rep = run_merge(spark, MergeConfig(inc_path, out, run_id="M-plan", buckets=8), default_rules())
+    assert rep["docs_added"] == len(inc)
+    assert len(asked) == 1 and schemas[1] != WRITTEN_SCHEMA and schemas[2] == WRITTEN_SCHEMA
+
+
 def test_backfill_writes_one_task_per_slot_and_one_file_per_bucket(
     spark, tmp_path, monkeypatch
 ):
